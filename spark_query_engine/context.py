@@ -19,6 +19,7 @@ from collections.abc import Iterable
 
 from pyspark.sql import Row, SparkSession
 
+from spark_query_engine import catalog
 from spark_query_engine.dataframe import Dataframe
 from spark_query_engine.session import get_session
 
@@ -52,8 +53,11 @@ class ExecutionContext:
     def parquet(self, path: str) -> Dataframe:
         """Parquet source (absent in the reference, SURVEY.md §2.1 ABSENT
         row; the standard columnar source here — projection + predicate
-        pushdown and partition pruning are native)."""
-        return Dataframe(self.spark.read.parquet(path))
+        pushdown and partition pruning are native). The schema comes
+        from the schema catalog (``catalog.read_parquet``), so only the
+        first read of a file version runs Spark's inference job; a
+        rewritten file is inferred afresh."""
+        return Dataframe(catalog.read_parquet(self.spark, path))
 
     def json(self, path: str, schema=None) -> Dataframe:
         reader = self.spark.read

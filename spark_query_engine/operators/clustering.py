@@ -135,11 +135,8 @@ def assign_to_centroids(
             "cents array<array<double>>",
         )
     )
-    sims = F.transform(
-        F.col("cands"),
-        lambda c: F.round(
-            cosine(F.col("vec"), F.element_at(F.col("cents"), c + 1)), 6
-        ),
+    sims = F.expr(
+        f"transform(cands, c -> round({cosine('vec', 'element_at(cents, c + 1)')}, 6))"
     )
     best = F.element_at(
         F.col("cands"), F.array_position(sims, F.array_max(sims)).cast("int")
@@ -168,9 +165,7 @@ def _assign_expr(v: DataFrame, centroids: list[list[float]]) -> DataFrame:
             "cents array<array<double>>",
         )
     )
-    sims = F.transform(
-        F.col("cents"), lambda c: F.round(cosine(F.col("vec"), c), 6)
-    )
+    sims = F.expr(f"transform(cents, c -> round({cosine('vec', 'c')}, 6))")
     best = F.array_position(sims, F.array_max(sims)).cast("int") - 1
     return v.crossJoin(cdf).select(
         "id",
@@ -511,7 +506,7 @@ def semantic_dedup(
     pruned = (
         a.join(b, "centroid")
         .where(F.col("id_a") < F.col("id_b"))
-        .where(F.round(cosine(F.col("vec_a"), F.col("vec_b")), 6) >= threshold)
+        .where(F.expr(f"round({cosine('vec_a', 'vec_b')}, 6)") >= threshold)
         .select("id_b")
         .distinct()
     )

@@ -20,9 +20,7 @@ Scale design (100 TB):
 
 from __future__ import annotations
 
-from functools import reduce
-
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from spark_query_engine.operators import cut_lineage, release_on_drop, widen
@@ -464,6 +462,8 @@ def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 32) -> DataFr
     the ±1 vote sum. One explode + one aggregation with `bits`
     integer-sum columns (all codegen'd)."""
     assert 1 <= bits <= SIMHASH_SUPERSET_BITS
+    # One F.expr parse per vote sum and one for the fold: a Column chain
+    # pays a py4j round trip per node, ~15 per vote.
     toks = (
         widen(df).select(
             F.col(id_col).alias("id"),
@@ -472,27 +472,20 @@ def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 32) -> DataFr
         .where(F.col("tok") != "")
         .withColumn(
             "h",
-            F.shiftright(
-                F.conv(F.substring(F.md5("tok"), 1, 15), 16, 10).cast("long"),
-                SIMHASH_SUPERSET_BITS - bits,
+            F.expr(
+                "shiftright(CAST(conv(substring(md5(tok), 1, 15), 16, 10) AS BIGINT), "
+                f"{SIMHASH_SUPERSET_BITS - bits})"
             ),
         )
     )
     votes = toks.groupBy("id").agg(
         *[
-            F.sum(
-                F.when(F.shiftright(F.col("h"), b).bitwiseAND(1) == 1, 1).otherwise(-1)
-            ).alias(f"s{b}")
+            F.expr(f"sum(IF((shiftright(h, {b}) & 1) = 1, 1, -1))").alias(f"s{b}")
             for b in range(bits)
         ]
     )
-    sim = reduce(
-        lambda acc, b: acc
-        + F.when(F.col(f"s{b}") > 0, F.lit(1 << b).cast("long")).otherwise(0),
-        range(bits),
-        F.lit(0).cast("long"),
-    )
-    return votes.select("id", sim.alias("simhash"))
+    sim = " + ".join(f"IF(s{b} > 0, {1 << b}L, 0L)" for b in range(bits))
+    return votes.select("id", F.expr(sim).alias("simhash"))
 
 
 def simhash_near_duplicates(
@@ -534,34 +527,24 @@ def simhash_near_duplicates(
     # both sides of the block self-join read the simhash relation;
     # persist so the token explode + 32-column vote agg runs once
     sim = simhash(df, id_col, text_col, bits).persist()
+    bands = ", ".join(f"shiftright(simhash, {i * width}) & {mask}" for i in range(blocks))
     banded = sim.select(
-        "id",
-        "simhash",
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftright(F.col("simhash"), i * width).bitwiseAND(mask)
-                    for i in range(blocks)
-                ]
-            )
-        ).alias("block_idx", "block_key"),
+        "id", "simhash", F.expr(f"posexplode(array({bands})) AS (block_idx, block_key)")
     )
     a, b = banded.alias("a"), banded.alias("b")
     out = (
         a.join(
             b,
-            (F.col("a.block_idx") == F.col("b.block_idx"))
-            & (F.col("a.block_key") == F.col("b.block_key"))
-            & (F.col("a.id") < F.col("b.id")),
+            F.expr(
+                "a.block_idx = b.block_idx AND a.block_key = b.block_key AND a.id < b.id"
+            ),
         )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.bit_count(
-                F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
-            ).cast("int").alias("hamming"),
+        .selectExpr(
+            "a.id AS id_a",
+            "b.id AS id_b",
+            "CAST(bit_count(a.simhash ^ b.simhash) AS INT) AS hamming",
         )
-        .where(F.col("hamming") <= max_distance)
+        .where(f"hamming <= {max_distance}")
         .distinct()
     )
     return release_on_drop(out, sim)
@@ -874,16 +857,24 @@ def connected_components_label(
 # --- embedding cosine near-dup ----------------------------------------------
 
 
-def cosine(a: Column, b: Column) -> Column:
-    """Cosine similarity between two array<double> columns as a single
-    JVM fold — dot and norms in one sequential aggregate each, so the
-    summation order is deterministic and engine-reproducible."""
-    dot = F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
+def cosine(a: str, b: str) -> str:
+    """Cosine similarity between two array<double> SQL expressions, as
+    SQL TEXT: dot and norms are one sequential ``aggregate`` fold each,
+    so the summation order is deterministic and engine-reproducible.
+
+    The contract is text in, text out. ``a`` and ``b`` are anything
+    Spark SQL parses as an array: a column name (``vec``, ``a.vec``), a
+    ``nested_sql`` literal, or the variable of an enclosing lambda
+    (``transform(cents, c -> ...)``). Splice the result into one
+    ``F.expr`` with whatever wraps it (``round(...,6)``, an argmax), so
+    the kernel costs one parse instead of ~15 py4j Column calls. The
+    arguments are only ever passed to the folds, never used inside
+    their lambda bodies, so no name of the caller's can be shadowed."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0D, (acc, v) -> acc + v)"
+        f" / (sqrt(aggregate({a}, 0D, (acc, v) -> acc + v * v))"
+        f" * sqrt(aggregate({b}, 0D, (acc, v) -> acc + v * v)))"
     )
-    na = F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
-    nb = F.sqrt(F.aggregate(b, F.lit(0.0), lambda acc, v: acc + v * v))
-    return dot / (na * nb)
 
 
 def embedding_near_duplicates(
@@ -903,7 +894,7 @@ def embedding_near_duplicates(
         .select(
             F.col("a.id").alias("id_a"),
             F.col("b.id").alias("id_b"),
-            F.round(cosine(F.col("a.vec"), F.col("b.vec")), 6).alias("cos_sim"),
+            F.expr(f"round({cosine('a.vec', 'b.vec')}, 6)").alias("cos_sim"),
         )
         .where(F.col("cos_sim") >= threshold)
     )

@@ -15,6 +15,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
+from spark_query_engine.catalog import read_parquet
+
 
 def compact_parquet(
     spark: SparkSession,
@@ -39,7 +41,7 @@ def compact_parquet(
             if f.endswith(".parquet"):
                 total += os.path.getsize(os.path.join(root, f))
     n = max(1, math.ceil(total / target_file_bytes))
-    spark.read.parquet(src_dir).repartition(n).write.mode(
+    read_parquet(spark, src_dir).repartition(n).write.mode(
         "overwrite"
     ).parquet(dst_dir)
     return n

@@ -196,7 +196,7 @@ def banded_near_duplicates(
         .select(
             "id_a",
             "id_b",
-            F.round(cosine(F.col("vec_a"), F.col("vec_b")), 6).alias("cos_sim"),
+            F.expr(f"round({cosine('vec_a', 'vec_b')}, 6)").alias("cos_sim"),
         )
         .where(F.col("cos_sim") >= threshold)
         .select("id_a", "id_b", "cos_sim")
@@ -645,7 +645,7 @@ def cp_near_duplicates(
         .select(
             "id_a",
             "id_b",
-            F.round(cosine(F.col("vec_a"), F.col("vec_b")), 6).alias("cos_sim"),
+            F.expr(f"round({cosine('vec_a', 'vec_b')}, 6)").alias("cos_sim"),
         )
         .where(F.col("cos_sim") >= threshold)
     )
@@ -796,9 +796,7 @@ def cosine_pairs_exact(
         .select(
             "id_a",
             "id_b",
-            F.round(cosine(F.col("vec_a"), F.col("vec_b")), 6).alias(
-                "cos_sim"
-            ),
+            F.expr(f"round({cosine('vec_a', 'vec_b')}, 6)").alias("cos_sim"),
         )
         .where(F.col("cos_sim") >= threshold)
     )
@@ -815,10 +813,11 @@ def cosine_topk(
     """Exact brute-force top-k by cosine. The query vector is a
     literal array (broadcast to every task); the plan is scan →
     project → TakeOrderedAndProject — no shuffle of the table."""
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    out = widen(df).select(
-        F.col(id_col).alias("id"),
-        F.round(cosine(_as_double(vec_col), q), 6).alias("cos_sim"),
+    qlit = nested_sql(query_vec)
+    out = (
+        widen(df)
+        .select(F.col(id_col).alias("id"), _as_double(vec_col).alias("vec"))
+        .select("id", F.expr(f"round({cosine('vec', qlit)}, 6)").alias("cos_sim"))
     )
     return out.orderBy(F.col("cos_sim").desc(), F.col("id")).limit(k)
 
@@ -836,10 +835,11 @@ def cosine_range(
     is data-dependent, so at 100 TB this streams straight to a sink
     instead of an ordered collect. The threshold compares the ROUNDED
     similarity so the boundary is reproducible across engines."""
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    out = widen(df).select(
-        F.col(id_col).alias("id"),
-        F.round(cosine(_as_double(vec_col), q), 6).alias("cos_sim"),
+    qlit = nested_sql(query_vec)
+    out = (
+        widen(df)
+        .select(F.col(id_col).alias("id"), _as_double(vec_col).alias("vec"))
+        .select("id", F.expr(f"round({cosine('vec', qlit)}, 6)").alias("cos_sim"))
     )
     return out.where(F.col("cos_sim") >= threshold)
 
@@ -850,34 +850,52 @@ def ivf_assign(
     """IVF coarse quantization: assign every vector to its nearest
     centroid by cosine (ties → lowest centroid id). Centroids here are
     the vectors with id < n_centroids — a deterministic stand-in for a
-    k-means codebook; the assignment plan (broadcast centroids × one
-    scan, rank-1 per row) is identical whatever the codebook source.
+    k-means codebook; the assignment plan (broadcast codebook × one
+    scan, argmax per row) is identical whatever the codebook source.
+
+    The codebook is collected into ONE broadcast row and each vector
+    picks its centroid with ``array_max`` over
+    ``named_struct(round(cos, 6) AS s, -centroid AS nc)``: structs
+    order field by field, so the max is the highest rounded similarity
+    and, among equals, the highest ``-centroid`` — the lowest id. That
+    is the rule a rank-1 window over (cent_sim DESC, centroid) applies,
+    NaN and NULL similarities included (NaN sorts above every number,
+    NULL below), without the window's shuffle on ``id``. ``id`` must be
+    a key: the window kept one row per id, this keeps every row.
 
     At scale the output is written partitioned/clustered by
     ``centroid`` so a probe reads only its inverted list.
     Returns (id, vec, centroid, cent_sim)."""
-    from pyspark.sql import Window
+    vecs = df.select(F.col(id_col).alias("id"), _as_double(vec_col).alias("vec"))
+    return _nearest_centroid(widen(vecs), _ivf_codebook(vecs, n_centroids))
 
-    v = widen(df).select(
-        F.col(id_col).alias("id"), _as_double(vec_col).alias("vec")
-    )
-    cents = v.where(F.col("id") < n_centroids).select(
-        F.col("id").alias("centroid"), F.col("vec").alias("cvec")
-    )
-    scored = v.join(F.broadcast(cents)).select(
-        "id",
-        "vec",
-        "centroid",
-        F.round(cosine(F.col("vec"), F.col("cvec")), 6).alias("cent_sim"),
-    )
-    w = Window.partitionBy("id").orderBy(
-        F.col("cent_sim").desc(), F.col("centroid")
-    )
+
+def _ivf_codebook(vecs: DataFrame, n_centroids: int) -> DataFrame:
+    """The id < n_centroids vectors as ONE row ``cb`` of (centroid,
+    cvec) structs. The filter is selective, so the branch is not
+    widened. An empty codebook is no row, so nothing gets assigned."""
     return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .drop("rn")
+        vecs.where(F.col("id") < n_centroids)
+        .selectExpr("named_struct('centroid', id, 'cvec', vec) AS c")
+        .agg(F.collect_list("c").alias("cb"))
+        .where(F.size("cb") > 0)
     )
+
+
+def _nearest_centroid(vecs: DataFrame, codebook: DataFrame) -> DataFrame:
+    """(id, vec, centroid, cent_sim): the argmax described in
+    ``ivf_assign``, against the broadcast codebook row."""
+    best = (
+        "array_max(transform(cb, c -> named_struct("
+        f"'s', round({cosine('vec', 'c.cvec')}, 6), 'nc', -c.centroid)))"
+    )
+    # inline() makes (s, nc) generator output: a filter on centroid
+    # (ivf_topk's join infers isnotnull) cannot be pushed into the cross
+    # join, where it would evaluate the argmax a second time
+    scored = vecs.crossJoin(F.broadcast(codebook)).select(
+        "id", "vec", F.inline(F.array(F.expr(best)))
+    )
+    return scored.selectExpr("id", "vec", "-nc AS centroid", "s AS cent_sim")
 
 
 def ivf_topk(
@@ -892,9 +910,12 @@ def ivf_topk(
     list (its nearest centroid's cluster). One broadcast-assignment
     pass + a probe that touches ~1/n_centroids of the data — the
     classic recall/cost trade; multi-probe = relax the centroid filter
-    to the top-p centroids."""
-    assigned = ivf_assign(df, id_col, vec_col, n_centroids)
-    qrow = assigned.where(F.col("id") == query_id).select(
+    to the top-p centroids. The query's own row is assigned straight
+    from the scan: a point lookup needs no widening either."""
+    vecs = df.select(F.col(id_col).alias("id"), _as_double(vec_col).alias("vec"))
+    codebook = _ivf_codebook(vecs, n_centroids)
+    assigned = _nearest_centroid(widen(vecs), codebook)
+    qrow = _nearest_centroid(vecs.where(F.col("id") == query_id), codebook).select(
         F.col("centroid").alias("qcent"), F.col("vec").alias("qvec")
     )
     members = assigned.join(F.broadcast(qrow), F.col("centroid") == F.col("qcent"))
@@ -903,7 +924,7 @@ def ivf_topk(
         .select(
             "id",
             "centroid",
-            F.round(cosine(F.col("vec"), F.col("qvec")), 6).alias("cos_sim"),
+            F.expr(f"round({cosine('vec', 'qvec')}, 6)").alias("cos_sim"),
         )
         .orderBy(F.col("cos_sim").desc(), F.col("id"))
         .limit(k)
@@ -1110,10 +1131,10 @@ def ann_topk_lsh(
     )
     if exclude_id is not None:
         bucketed = bucketed.where(F.col("id") != exclude_id)
-    qlit = F.array(*[F.lit(x) for x in q])
+    qlit = nested_sql(q)
     return (
         bucketed.select(
-            "id", F.round(cosine(F.col("vec"), qlit), 6).alias("cos_sim")
+            "id", F.expr(f"round({cosine('vec', qlit)}, 6)").alias("cos_sim")
         )
         .orderBy(F.col("cos_sim").desc(), F.col("id"))
         .limit(k)
@@ -1155,10 +1176,10 @@ def ann_topk_lsh_multiprobe(
     )
     if exclude_id is not None:
         bucketed = bucketed.where(F.col("id") != exclude_id)
-    qlit = F.array(*[F.lit(x) for x in q])
+    qlit = nested_sql(q)
     return (
         bucketed.select(
-            "id", F.round(cosine(F.col("vec"), qlit), 6).alias("cos_sim")
+            "id", F.expr(f"round({cosine('vec', qlit)}, 6)").alias("cos_sim")
         )
         .orderBy(F.col("cos_sim").desc(), F.col("id"))
         .limit(k)

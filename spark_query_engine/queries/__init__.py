@@ -19,6 +19,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from spark_query_engine import catalog
+
 
 @dataclass
 class Query:
@@ -63,6 +65,12 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     """Read a testdata table; filters/projections applied by callers push
     down into this parquet scan via Catalyst.
 
+    The read goes through the schema catalog (``catalog.read_parquet``):
+    the first read of a file version infers its schema with one Spark
+    job, every later read passes that schema back and launches none.
+    Only metadata is cached, so a rewritten file is re-inferred and
+    every query still scans the data in full.
+
     ``events.ts`` has shipped as parquet TIMESTAMP(NANOS) in some
     testdata generations and TIMESTAMP(MICROS, isAdjustedToUTC=false)
     in others, so the loader adapts to what the file actually stores:
@@ -70,44 +78,41 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     ``timestamp_ntz`` truncated to microseconds; MICROS already infers
     as ``timestamp_ntz`` (truncation is a no-op). Either way callers
     and the oracle's ``date_trunc('microseconds', ts)`` see identical
-    session-TZ-independent values.
+    session-TZ-independent values. The catalog keys schemas by that
+    conf too, so the ``ts`` type it serves is the one the current
+    setting infers.
     """
-    if table == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        from pyspark.sql import functions as F
-        from pyspark.sql import types as T
+    path = f"{sf_dir}/{table}.parquet"
+    if table != "events":
+        return catalog.read_parquet(spark, path)
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
 
-        raw = spark.read.parquet(f"{sf_dir}/{table}.parquet")
-        ts_type = raw.schema["ts"].dataType
-        if isinstance(ts_type, T.LongType):  # TIMESTAMP(NANOS) via legacy long
-            return raw.withColumn(
-                "ts",
-                F.expr(
-                    "timestampadd(MICROSECOND, ts DIV 1000, TIMESTAMP_NTZ'1970-01-01 00:00:00')"
-                ),
-            )
-        if isinstance(ts_type, T.TimestampType):
-            # session is pinned UTC (get_session), so the wall values
-            # match the NTZ reading of the same micros
-            return raw.withColumn("ts", raw["ts"].cast("timestamp_ntz"))
-        return raw  # already timestamp_ntz
-    return spark.read.parquet(f"{sf_dir}/{table}.parquet")
+    raw = catalog.read_parquet(spark, path)
+    ts_type = catalog.parquet_schema(spark, path)["ts"].dataType
+    if isinstance(ts_type, T.LongType):  # TIMESTAMP(NANOS) via legacy long
+        return raw.withColumn(
+            "ts",
+            F.expr(
+                "timestampadd(MICROSECOND, ts DIV 1000, TIMESTAMP_NTZ'1970-01-01 00:00:00')"
+            ),
+        )
+    if isinstance(ts_type, T.TimestampType):
+        # session is pinned UTC (get_session), so the wall values
+        # match the NTZ reading of the same micros
+        return raw.withColumn("ts", raw["ts"].cast("timestamp_ntz"))
+    return raw  # already timestamp_ntz
 
 
 def footer_rows(spark: SparkSession, sf_dir: str, table: str) -> int:
     """Row count of a testdata table from PARQUET FOOTER METADATA —
     milliseconds, no Spark job — for queries that size a knob from n
-    (k ∝ n blocking, shuffle widths, GEMM tile grids). Falls back to
-    a (metadata-optimized) count for directory layouts. This is the
-    ``graph_triangle_count`` footer-sizing pattern, shared."""
-    try:
-        import pyarrow.parquet as _papq
-
-        return int(
-            _papq.ParquetFile(f"{sf_dir}/{table}.parquet").metadata.num_rows
-        )
-    except Exception:
-        return load(spark, sf_dir, table).count()
+    (k ∝ n blocking, shuffle widths, GEMM tile grids). A lookup in the
+    schema catalog (``catalog.parquet_rows``): the footers of a file
+    version are read once, and a directory sums its files' footers.
+    Falls back to a Spark count only when a footer cannot be read."""
+    return catalog.parquet_rows(spark, f"{sf_dir}/{table}.parquet")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

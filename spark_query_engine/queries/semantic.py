@@ -295,7 +295,7 @@ def corpus_ivf_learned(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "id",
             "centroid",
-            F.round(cosine(F.col("vec"), F.col("qvec")), 6).alias("cos_sim"),
+            F.expr(f"round({cosine('vec', 'qvec')}, 6)").alias("cos_sim"),
         )
         .orderBy(F.col("cos_sim").desc(), F.col("id"))
         .limit(5),
@@ -376,7 +376,7 @@ def corpus_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("qid").alias("id"),
             "nb",
-            F.round(cosine(F.col("qvec"), F.col("nvec")), 6).alias("sim"),
+            F.expr(f"round({cosine('qvec', 'nvec')}, 6)").alias("sim"),
         )
     )
     w_nn = W.partitionBy("id").orderBy(F.col("sim").desc(), "nb")

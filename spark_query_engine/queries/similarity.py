@@ -5,7 +5,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from spark_query_engine.operators import carry_caches, widen
+from spark_query_engine.operators import carry_caches, nested_sql, widen
 from spark_query_engine.operators import similarity as S
 from spark_query_engine.queries import load, query
 
@@ -773,7 +773,7 @@ def vec_text_alignment_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     cs = (
         pairs.join(ea, "id_a")
         .join(eb, "id_b")
-        .select(F.round(cosine(F.col("va"), F.col("vb")), 6).alias("cos"))
+        .select(F.expr(f"round({cosine('va', 'vb')}, 6)").alias("cos"))
     )
     return carry_caches(
         cs.agg(
@@ -851,7 +851,7 @@ def ann_centroid_margin_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     sims = v.crossJoin(F.broadcast(c)).select(
         F.col("vec_id").alias("id"),
         "centroid",
-        F.round(cosine(F.col("vec"), F.col("cvec")), 6).alias("sim"),
+        F.expr(f"round({cosine('vec', 'cvec')}, 6)").alias("sim"),
     )
     w = Window.partitionBy("id").orderBy(F.col("sim").desc(), "centroid")
     ranked = sims.withColumn("rn", F.row_number().over(w)).where(
@@ -975,12 +975,12 @@ def ann_cp_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.transform("embedding", lambda x: x.cast("double")).alias("vec"),
     )
     qvec = _query_vec(spark, sf_dir, 0)
-    qlit = F.array(*[F.lit(float(x)) for x in qvec])
+    qlit = nested_sql(qvec)
     from spark_query_engine.operators.dedup import cosine
 
     return (
         cand.join(v, "id")
-        .select("id", F.round(cosine(F.col("vec"), qlit), 6).alias("cos_sim"))
+        .select("id", F.expr(f"round({cosine('vec', qlit)}, 6)").alias("cos_sim"))
         .orderBy(F.col("cos_sim").desc(), "id")
         .limit(5)
     )

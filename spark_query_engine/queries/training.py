@@ -28,7 +28,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from spark_query_engine.operators import carry_caches, cut_lineage, release_on_drop, widen
+from spark_query_engine.operators import (
+    carry_caches,
+    cut_lineage,
+    nested_sql,
+    release_on_drop,
+    widen,
+)
 from spark_query_engine.operators import clustering as C
 from spark_query_engine.operators import similarity as S
 from spark_query_engine.operators import dedup as D
@@ -186,7 +192,7 @@ def ann_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         v.where(F.col("id") < _NQ)
         .select(F.col("id").alias("qid"), F.col("vec").alias("qvec"))
     )
-    sim = F.round(cosine(F.col("vec"), F.col("qvec")), 6)
+    sim = F.expr(f"round({cosine('vec', 'qvec')}, 6)")
     win = Window.partitionBy("qid").orderBy(
         F.col("cos_sim").desc(), F.col("id")
     )
@@ -637,7 +643,7 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes = (
         cdf.select(
             "centroid",
-            F.round(cosine(F.col("cvec"), F.lit(qvec)), 6).alias("sim"),
+            F.expr(f"round({cosine('cvec', nested_sql(qvec))}, 6)").alias("sim"),
         )
         .orderBy(F.col("sim").desc(), F.col("centroid"))
         .limit(2)
@@ -1015,7 +1021,7 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("bucket").alias("qbucket"),
     )
     corpus = bucketed.where(F.col("id") >= _NQ)
-    sim = F.round(cosine(F.col("vec"), F.col("qvec")), 6)
+    sim = F.expr(f"round({cosine('vec', 'qvec')}, 6)")
     win = Window.partitionBy("qid").orderBy(
         F.col("cos_sim").desc(), F.col("id")
     )
@@ -1564,16 +1570,15 @@ _TRI_BROADCAST_MAX_EDGES = 4_000_000
 
 
 def _tri_close_strategy(spark: SparkSession, est_edges: int) -> bool:
-    """True when the estimated edge count fits the broadcast gate."""
+    """True when the estimated edge count fits the broadcast gate. A
+    cap that is not an integer is a configuration error and raises
+    instead of silently falling back to the default."""
+    key = "spark.spark_query_engine.triangle.broadcast_max_edges"
+    raw = spark.conf.get(key, str(_TRI_BROADCAST_MAX_EDGES))
     try:
-        cap = int(
-            spark.conf.get(
-                "spark.spark_query_engine.triangle.broadcast_max_edges",
-                str(_TRI_BROADCAST_MAX_EDGES),
-            )
-        )
+        cap = int(raw)
     except (TypeError, ValueError):
-        cap = _TRI_BROADCAST_MAX_EDGES
+        raise ValueError(f"{key} must be an integer edge count, got {raw!r}") from None
     return est_edges <= cap
 
 
@@ -2675,13 +2680,9 @@ def vec_matryoshka_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     dims = spark.createDataFrame([(8,), (16,), (32,), (64,)], "dims int")
     scored = p.crossJoin(F.broadcast(dims)).select(
         "dims",
-        F.round(cosine(F.col("va"), F.col("vb")), 6).alias("cf"),
-        F.round(
-            cosine(
-                F.slice(F.col("va"), 1, F.col("dims")),
-                F.slice(F.col("vb"), 1, F.col("dims")),
-            ),
-            6,
+        F.expr(f"round({cosine('va', 'vb')}, 6)").alias("cf"),
+        F.expr(
+            f"round({cosine('slice(va, 1, dims)', 'slice(vb, 1, dims)')}, 6)"
         ).alias("ct"),
     )
     err = F.abs(F.col("ct") - F.col("cf"))
@@ -3802,7 +3803,7 @@ def ann_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("bucket").alias("qbucket"),
     )
     corpus = bucketed.where(F.col("id") >= _NQ)
-    sim = F.round(cosine(F.col("vec"), F.col("qvec")), 6)
+    sim = F.expr(f"round({cosine('vec', 'qvec')}, 6)")
     win = Window.partitionBy("qid").orderBy(
         F.col("cos_sim").desc(), F.col("id")
     )
@@ -3992,7 +3993,7 @@ def pipeline_dedup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
         .where(
-            F.round(cosine(F.col("a.vec"), F.col("b.vec")), 6) >= _CASC_COS
+            F.expr(f"round({cosine('a.vec', 'b.vec')}, 6)") >= _CASC_COS
         )
         .select(F.col("b.doc_id").alias("doc_id"))
         .distinct()
@@ -9965,7 +9966,7 @@ def ann_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec").alias("qvec"),
         F.col("label").alias("qlabel"),
     )
-    sim = F.round(cosine(F.col("vec"), F.col("qvec")), 6)
+    sim = F.expr(f"round({cosine('vec', 'qvec')}, 6)")
     win = Window.partitionBy("qid").orderBy(
         F.col("cos_sim").desc(), F.col("id")
     )
@@ -10113,7 +10114,9 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("sxx"),
     )
-    return (
+    # the persisted edge and degree relations back the lazy result;
+    # release them when the caller drops it
+    out = (
         m.crossJoin(F.broadcast(sxy))
         .select(
             "n_nodes",
@@ -10141,6 +10144,7 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("assortativity"),
         )
     )
+    return release_on_drop(out, ed, deg)
 
 
 @query(

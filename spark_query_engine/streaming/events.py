@@ -45,13 +45,18 @@ def stream_from_parquet_dir(spark: SparkSession, path: str) -> DataFrame:
     watermarks require it; the session is pinned UTC in get_session,
     so wall values match the batch path. The file-side ts type has
     shipped as both TIMESTAMP(NANOS) and TIMESTAMP(MICROS) across
-    testdata generations — probe one file with the batch reader
-    (file-stream sources need a user schema, so it must match what
-    the parquet actually stores) and convert accordingly."""
+    testdata generations — probe one file's schema through the schema
+    catalog (file-stream sources need a user schema, so it must match
+    what the parquet actually stores) and convert accordingly. With
+    mergeSchema off, Spark's own inference reads only one footer too,
+    so the probe reads the first data file, not the whole directory,
+    and a later call on the same source launches no job."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     # the file-stream source requires a directory; stream a single
     # parquet file via its parent + a glob filter
     import os
+
+    from spark_query_engine import catalog
 
     glob = None
     if path.endswith(".parquet") and os.path.isfile(path):
@@ -59,8 +64,8 @@ def stream_from_parquet_dir(spark: SparkSession, path: str) -> DataFrame:
         probe_path = path
         path = os.path.dirname(path)
     else:
-        probe_path = path
-    probed = spark.read.parquet(probe_path).schema["ts"].dataType
+        probe_path = (catalog.data_files(path) or [path])[0]
+    probed = catalog.parquet_schema(spark, probe_path)["ts"].dataType
     nanos = isinstance(probed, T.LongType)
     schema = T.StructType(
         [

@@ -93,3 +93,102 @@ def test_join_union_distinct(ctx):
 def test_execute_iterator(ctx):
     rows = list(ctx.execute(_employees(ctx).project(col("id"))))
     assert len(rows) == 4
+
+
+# --- schema catalog -----------------------------------------------------------
+
+
+def _jobs_fired(spark, fn) -> int:
+    """Run ``fn`` under a fresh job group; the Spark jobs it launched."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"catalog-test-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "catalog test")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _write(path, **cols):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(pa.table(cols), str(path))
+
+
+def test_catalog_second_read_launches_no_job(spark, ctx, tmp_path):
+    """The first read of a file infers its schema with one Spark job;
+    every later read, through ``queries.load`` or ``ctx.parquet``,
+    reuses it and launches none."""
+    from spark_query_engine.queries import footer_rows, load
+
+    _write(tmp_path / "t.parquet", a=[1, 2, 3], b=["x", "y", "z"])
+    assert _jobs_fired(spark, lambda: load(spark, str(tmp_path), "t")) == 1
+    assert _jobs_fired(spark, lambda: load(spark, str(tmp_path), "t")) == 0
+    assert _jobs_fired(spark, lambda: ctx.parquet(str(tmp_path / "t.parquet"))) == 0
+    assert _jobs_fired(spark, lambda: footer_rows(spark, str(tmp_path), "t")) == 0
+    assert footer_rows(spark, str(tmp_path), "t") == 3
+    # the served schema is the one inference gives, and the data is read in full
+    df = load(spark, str(tmp_path), "t")
+    assert df.schema == spark.read.parquet(str(tmp_path / "t.parquet")).schema
+    assert sorted(tuple(r) for r in df.collect()) == [(1, "x"), (2, "y"), (3, "z")]
+
+
+def test_catalog_rewritten_file_serves_new_schema(spark, ctx, tmp_path):
+    """A file rewritten in place is a new version: its entry is
+    replaced, so the new columns and row count are served."""
+    from spark_query_engine.queries import footer_rows, load
+
+    path = tmp_path / "t.parquet"
+    _write(path, a=[1, 2])
+    assert load(spark, str(tmp_path), "t").columns == ["a"]
+    assert footer_rows(spark, str(tmp_path), "t") == 2
+    _write(path, a=[1, 2, 3], c=[0.5, 1.5, 2.5])
+    assert load(spark, str(tmp_path), "t").columns == ["a", "c"]
+    assert ctx.parquet(str(path)).columns == ["a", "c"]
+    assert footer_rows(spark, str(tmp_path), "t") == 3
+    assert sorted(r["c"] for r in load(spark, str(tmp_path), "t").collect()) == [0.5, 1.5, 2.5]
+
+
+def test_catalog_keys_schema_by_nanos_conf(spark, tmp_path):
+    """``spark.sql.legacy.parquet.nanosAsLong`` changes what inference
+    returns for a TIMESTAMP(NANOS) column, so it is part of the key: a
+    schema inferred with it on is never served with it off, where
+    Spark itself refuses the type."""
+    import pyarrow as pa
+    import pytest
+    from pyspark.errors import AnalysisException
+    from pyspark.sql import types as T
+
+    from spark_query_engine import catalog
+    from spark_query_engine.queries import load
+
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    before = spark.conf.get(key, None)
+    path = str(tmp_path / "events.parquet")
+    _write(
+        tmp_path / "events.parquet",
+        event_id=pa.array([0, 1], pa.int64()),
+        ts=pa.array([1_700_000_000_123_456_789, 1_700_000_001_000_000_001], pa.timestamp("ns")),
+    )
+    try:
+        spark.conf.set(key, "true")
+        assert isinstance(catalog.parquet_schema(spark, path)["ts"].dataType, T.LongType)
+        spark.conf.set(key, "false")
+        with pytest.raises(AnalysisException, match="TIMESTAMP\\(NANOS"):
+            catalog.parquet_schema(spark, path)
+        # load turns the conf back on and rebuilds ts as µs timestamp_ntz
+        ev = load(spark, str(tmp_path), "events")
+        assert isinstance(ev.schema["ts"].dataType, T.TimestampNTZType)
+        assert [str(r["ts"]) for r in ev.orderBy("event_id").collect()] == [
+            "2023-11-14 22:13:20.123456",
+            "2023-11-14 22:13:21",
+        ]
+    finally:
+        if before is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, before)

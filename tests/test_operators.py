@@ -281,6 +281,127 @@ def test_ivf_assign_and_topk(spark):
     assert [r["id"] for r in top] == [0]
 
 
+def _ivf_assign_window(df, n_centroids):
+    """The rank-1 window formulation ``S.ivf_assign`` replaced: score
+    every (vector, centroid) pair, keep the best per id by
+    (cent_sim DESC, centroid)."""
+    from pyspark.sql import Window
+
+    from spark_query_engine.operators.dedup import cosine
+
+    v = df.select(
+        F.col("vec_id").alias("id"),
+        F.transform("embedding", lambda x: x.cast("double")).alias("vec"),
+    )
+    cents = v.where(F.col("id") < n_centroids).select(
+        F.col("id").alias("centroid"), F.col("vec").alias("cvec")
+    )
+    scored = v.crossJoin(cents).select(
+        "id", "vec", "centroid", F.expr(f"round({cosine('vec', 'cvec')}, 6)").alias("cent_sim")
+    )
+    w = Window.partitionBy("id").orderBy(F.col("cent_sim").desc(), F.col("centroid"))
+    return scored.withColumn("rn", F.row_number().over(w)).where("rn = 1").drop("rn")
+
+
+def _ivf_rows(df):
+    import math
+
+    def norm(x):
+        return "nan" if isinstance(x, float) and math.isnan(x) else x
+
+    return sorted(
+        ((r["id"], r["centroid"], norm(r["cent_sim"])) for r in df.collect()),
+        key=repr,
+    )
+
+
+def test_ivf_assign_ties_pick_lowest_centroid(spark):
+    """Equal ROUNDED cosines tie, and a tie goes to the lower centroid
+    id, exactly as the rank-1 window did: [1,1] sits between centroids
+    0 and 1, and [2,1e-7] differs from centroids 0 and 2 only past the
+    sixth decimal."""
+    vecs = [
+        (0, [1.0, 0.0]),
+        (1, [0.0, 1.0]),
+        (2, [1.0, 1e-7]),
+        (3, [1.0, 1.0]),
+        (4, [2.0, 1e-7]),
+        (5, [-1.0, -1.0]),
+    ]
+    df = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
+    got = _ivf_rows(S.ivf_assign(df, "vec_id", "embedding", n_centroids=3))
+    assert got == _ivf_rows(_ivf_assign_window(df, 3))
+    by_id = {i: c for i, c, _ in got}
+    assert by_id[3] == 0 and by_id[4] == 0 and by_id[2] == 0
+
+
+def test_ivf_assign_null_nan_and_zero_norm_match_window(spark):
+    """Degenerate inputs keep the window's answers. A NULL embedding
+    scores NULL, which sorts last: a NULL-vector centroid never wins,
+    and a NULL vector gets the lowest id with a NULL similarity. A NaN
+    element scores NaN, which sorts above every number: a NaN vector
+    gets the lowest id, and a NaN centroid draws every vector. A
+    zero-norm vector divides by zero: under ANSI both formulations
+    raise; with ANSI off it scores NULL like a NULL embedding."""
+    from pyspark.errors import ArithmeticException
+
+    nan = float("nan")
+    df = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, None), (2, [0.0, 1.0]), (3, [nan, 1.0]),
+         (4, None), (5, [0.3, 0.9]), (6, [nan, 0.0])],
+        "vec_id long, embedding array<double>",
+    )
+    for k in (1, 2, 3, 4):
+        got = _ivf_rows(S.ivf_assign(df, "vec_id", "embedding", n_centroids=k))
+        assert got == _ivf_rows(_ivf_assign_window(df, k)), k
+    by_id = {i: (c, s) for i, c, s in
+             _ivf_rows(S.ivf_assign(df, "vec_id", "embedding", n_centroids=3))}
+    assert by_id[4] == (0, None)  # NULL vector: lowest id, NULL score
+    assert by_id[5] == (2, 0.948683)  # NULL-vector centroid 1 never wins
+    assert by_id[6] == (0, "nan")  # NaN vector: lowest id
+    by_id = {i: c for i, c, _ in
+             _ivf_rows(S.ivf_assign(df, "vec_id", "embedding", n_centroids=4))}
+    assert by_id[0] == 3 and by_id[5] == 3  # the NaN centroid 3 draws all
+
+    zero = df.where("vec_id NOT IN (3, 6)").union(
+        spark.createDataFrame([(7, [0.0, 0.0])], df.schema)
+    )
+    key = "spark.sql.ansi.enabled"
+    before = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "true")
+        for build in (
+            lambda: S.ivf_assign(zero, "vec_id", "embedding", n_centroids=3),
+            lambda: _ivf_assign_window(zero, 3),
+        ):
+            with pytest.raises(ArithmeticException, match="DIVIDE_BY_ZERO"):
+                build().collect()
+        spark.conf.set(key, "false")
+        for k in (3, 8):
+            got = _ivf_rows(S.ivf_assign(zero, "vec_id", "embedding", n_centroids=k))
+            assert got == _ivf_rows(_ivf_assign_window(zero, k)), k
+        by_id = {i: (c, s) for i, c, s in
+                 _ivf_rows(S.ivf_assign(zero, "vec_id", "embedding", n_centroids=8))}
+        assert by_id[7] == (0, None)  # zero-norm vector: NULL scores, lowest id
+        assert by_id[5] == (5, 1.0)  # zero-norm centroid 7 never wins
+    finally:
+        spark.conf.set(key, before)
+
+
+def test_ivf_assign_plans_no_window(spark):
+    """The assignment is an argmax over one broadcast codebook row: no
+    Window, no shuffle on id; an empty codebook assigns nothing."""
+    from spark_query_engine.plans import format_plan
+
+    df = spark.createDataFrame(
+        [(i, [float(i), 1.0]) for i in range(6)], "vec_id long, embedding array<double>"
+    )
+    assigned = S.ivf_assign(df, "vec_id", "embedding", n_centroids=3)
+    plan = format_plan(assigned, "physical")
+    assert "Window" not in plan and "BroadcastExchange" in plan
+    assert S.ivf_assign(df, "vec_id", "embedding", n_centroids=0).count() == 0
+
+
 def test_salted_join_equals_plain_join(spark):
     big = spark.createDataFrame(
         [(i, i % 3) for i in range(100)] + [(900, 7)], ["row_id", "k"]

@@ -1024,3 +1024,33 @@ def test_kcore_delta_peel_cascades(spark, tmp_path, monkeypatch):
     }
     assert training.graph_kcore_peel.last_rounds == 3
     assert out == {u: (3, True) for u in clique}
+
+
+# ---------------------------------------------------------------- config
+def test_tri_close_strategy_rejects_malformed_cap(spark):
+    """A triangle broadcast cap that is not an integer fails loudly,
+    naming the key, instead of silently gating on the default."""
+    import pytest
+
+    from spark_query_engine.queries.training import (
+        _TRI_BROADCAST_MAX_EDGES,
+        _tri_close_strategy,
+    )
+
+    key = "spark.spark_query_engine.triangle.broadcast_max_edges"
+    before = spark.conf.get(key, None)
+    try:
+        spark.conf.unset(key)
+        assert _tri_close_strategy(spark, _TRI_BROADCAST_MAX_EDGES)
+        assert not _tri_close_strategy(spark, _TRI_BROADCAST_MAX_EDGES + 1)
+        spark.conf.set(key, "10")
+        assert _tri_close_strategy(spark, 10) and not _tri_close_strategy(spark, 11)
+        for bad in ("ten", "1e6", ""):
+            spark.conf.set(key, bad)
+            with pytest.raises(ValueError, match=key.replace(".", "\\.")):
+                _tri_close_strategy(spark, 1)
+    finally:
+        if before is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, before)

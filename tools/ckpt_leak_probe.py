@@ -12,7 +12,12 @@ samples ``getRDDStorageInfo`` after each, then forces python+JVM GC
 and samples again — demonstrating the residue is bounded and
 collectable, not a monotonic leak.
 
-Usage: python tools/ckpt_leak_probe.py [query_name] [n_runs]
+With ``--keep-cache`` the runs skip ``clearCache``, so the residue
+is what the query leaves once its result is dropped: a query whose
+persists go through ``release_on_drop`` leaves none, one that never
+releases them grows by its cached relations every run.
+
+Usage: python tools/ckpt_leak_probe.py [query_name] [n_runs] [--keep-cache]
 """
 
 from __future__ import annotations
@@ -33,8 +38,10 @@ def rdd_blocks(spark) -> tuple[int, float]:
 
 
 def main() -> None:
-    qname = sys.argv[1] if len(sys.argv) > 1 else "corpus_graph_pagerank"
-    n_runs = int(sys.argv[2]) if len(sys.argv) > 2 else 5
+    keep_cache = "--keep-cache" in sys.argv
+    args = [a for a in sys.argv[1:] if a != "--keep-cache"]
+    qname = args[0] if args else "corpus_graph_pagerank"
+    n_runs = int(args[1]) if len(args) > 1 else 5
     sf_dir = "/root/testdata/sf0.01"
 
     from spark_query_engine import queries as registry
@@ -49,11 +56,13 @@ def main() -> None:
         qs[qname](spark, sf_dir).write.format("noop").mode(
             "overwrite"
         ).save()
-        spark.catalog.clearCache()
+        if not keep_cache:
+            spark.catalog.clearCache()
         n, mb = rdd_blocks(spark)
         print(
             f"run {i + 1}: {time.time() - t0:.2f}s — residue after "
-            f"clearCache: {n} blocks / {mb:.1f} MB"
+            f"{'dropping the result' if keep_cache else 'clearCache'}: "
+            f"{n} blocks / {mb:.1f} MB"
         )
 
     # Collect python handles, then ask the JVM to GC so the
