@@ -33,11 +33,6 @@ def col(name: str) -> Column:
     return F.col(name)
 
 
-def column_index(df_columns: list[str], i: int) -> Column:
-    """Reference a column by ordinal (reference: src/logical_plan/mod.rs:353-373)."""
-    return F.col(df_columns[i])
-
-
 def lit(value) -> Column:
     """Literal of any supported type."""
     return F.lit(value)

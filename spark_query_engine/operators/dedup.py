@@ -283,6 +283,31 @@ def minhash_banded_rows(
     )
 
 
+def _jaccard_at_least(
+    inter: DataFrame, sizes: DataFrame, threshold: float
+) -> DataFrame:
+    """(id_a, id_b, jaccard) for the (id_a, id_b, n_inter) pairs whose
+    Jaccard n_inter / (|A| + |B| − n_inter), rounded to 6dp, is at
+    least ``threshold``; ``sizes`` is (id, n_sh). Unlike
+    ``_with_shingle_counts`` it joins ``sizes`` on its own ``id``
+    without renaming: both forms plan the same joins under different
+    attribute names, and each keeps its callers' plans unchanged."""
+    return (
+        inter.join(sizes.alias("za"), F.col("za.id") == F.col("id_a"))
+        .join(sizes.alias("zb"), F.col("zb.id") == F.col("id_b"))
+        .select(
+            "id_a",
+            "id_b",
+            F.round(
+                F.col("n_inter")
+                / (F.col("za.n_sh") + F.col("zb.n_sh") - F.col("n_inter")),
+                6,
+            ).alias("jaccard"),
+        )
+        .where(F.col("jaccard") >= threshold)
+    )
+
+
 def verify_jaccard(
     shingles: DataFrame, pairs: DataFrame, threshold: float
 ) -> DataFrame:
@@ -304,20 +329,7 @@ def verify_jaccard(
         .groupBy("p.id_a", "p.id_b")
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
-    return (
-        inter.join(sizes.alias("za"), F.col("za.id") == F.col("id_a"))
-        .join(sizes.alias("zb"), F.col("zb.id") == F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            F.round(
-                F.col("n_inter")
-                / (F.col("za.n_sh") + F.col("zb.n_sh") - F.col("n_inter")),
-                6,
-            ).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= threshold)
-    )
+    return _jaccard_at_least(inter, sizes, threshold)
 
 
 def minhash_collision_prob(j: float, num_hashes: int, bands: int) -> float:
@@ -553,6 +565,44 @@ def simhash_near_duplicates(
 # --- n-gram Jaccard (exact, via shingle equi-join) ---------------------------
 
 
+def _shared_shingles(sh: DataFrame) -> DataFrame:
+    """(id_a, id_b, n_inter): the shared-shingle count of every id
+    pair, id_a < id_b, with at least one shingle in common."""
+    a, b = sh.alias("a"), sh.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.shingle") == F.col("b.shingle"))
+            & (F.col("a.id") < F.col("b.id")),
+        )
+        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        .agg(F.count(F.lit(1)).alias("n_inter"))
+    )
+
+
+def _with_shingle_counts(inter: DataFrame, sizes: DataFrame) -> DataFrame:
+    """Attach both sides' shingle counts to (id_a, id_b, n_inter) pair
+    rows: (id_a, id_b, n_inter, na, nb). ``sizes`` is (id, n_sh)."""
+    za = sizes.select(F.col("id").alias("id_a"), F.col("n_sh").alias("na"))
+    zb = sizes.select(F.col("id").alias("id_b"), F.col("n_sh").alias("nb"))
+    return (
+        inter.join(za, "id_a")
+        .join(zb, "id_b")
+        .select("id_a", "id_b", "n_inter", "na", "nb")
+    )
+
+
+def shingle_overlap(sh: DataFrame) -> DataFrame:
+    """Exact shingle overlap of every id pair that shares a shingle,
+    over an (id, shingle) relation with no duplicate rows: (id_a,
+    id_b, n_inter, na, nb) with id_a < id_b, n_inter = |A ∩ B| and
+    na, nb = |A|, |B|. Jaccard and containment are ratios of these
+    integers. The shingle equi-join is the blocker — pairs sharing
+    nothing never materialize — so its fan-out is Σ_shingle C(df, 2)."""
+    sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
+    return _with_shingle_counts(_shared_shingles(sh), sizes)
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str,
@@ -604,30 +654,8 @@ def ngram_jaccard_pairs(
         )
         sh = sh.join(hot, "shingle", "left_anti")
     sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
     return release_on_drop(
-        inter.join(sizes.alias("za"), F.col("za.id") == F.col("id_a"))
-        .join(sizes.alias("zb"), F.col("zb.id") == F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            F.round(
-                F.col("n_inter")
-                / (F.col("za.n_sh") + F.col("zb.n_sh") - F.col("n_inter")),
-                6,
-            ).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= threshold),
-        sh_cached,
+        _jaccard_at_least(_shared_shingles(sh), sizes, threshold), sh_cached
     )
 
 
@@ -985,14 +1013,11 @@ def ngram_jaccard_prefix_pairs(
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
-    za = sizes.select(F.col("id").alias("id_a"), F.col("n_sh").alias("na"))
-    zb = sizes.select(F.col("id").alias("id_b"), F.col("n_sh").alias("nb"))
     jac = F.round(
         F.col("n_inter") / (F.col("na") + F.col("nb") - F.col("n_inter")), 6
     )
     return release_on_drop(
-        inter.join(za, "id_a")
-        .join(zb, "id_b")
+        _with_shingle_counts(inter, sizes)
         .select("id_a", "id_b", jac.alias("jaccard"))
         .where(F.col("jaccard") >= threshold),
         sh,

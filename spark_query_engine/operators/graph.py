@@ -18,6 +18,19 @@ from pyspark.sql import functions as F
 from spark_query_engine.operators import cut_lineage
 
 
+def copurchase_pairs(li: DataFrame) -> DataFrame:
+    """Co-purchase edges of an (``l_orderkey``, ``l_partkey``)
+    relation: one (u, v) row, u < v, per pair of parts bought in the
+    same order. No dedup — a pair bought together in k orders appears
+    k times, so callers choose where the distinct goes."""
+    a, b = li.alias("a"), li.alias("b")
+    return a.join(
+        b,
+        (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
+        & (F.col("a.l_partkey") < F.col("b.l_partkey")),
+    ).select(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
+
+
 def _truncate_deep_lineage(
     df: DataFrame, i: int, iterations: int, every: int = 8
 ) -> DataFrame:

@@ -334,13 +334,6 @@ def extract_features_arrow(df: DataFrame, dim: int = 8) -> DataFrame:
     return df.mapInArrow(featurize, out_schema)
 
 
-def frame_sample(df: DataFrame, every_n: int = 10) -> DataFrame:
-    """'Frame sampling' over the synthetic payloads: keep every n-th
-    item per partition-stable ordering key — the Spark-side shape of
-    video frame subsampling (a filter, no shuffle)."""
-    return df.where(F.col("id") % every_n == 0)
-
-
 # ---------------------------------------------------------------- WAV codec
 def encode_wav(sample_rate: int, samples) -> bytes:
     """REAL WAV (RIFF/PCM) encoder, pure numpy+struct: 16-bit mono

@@ -25,7 +25,6 @@ from pyspark.sql import functions as F
 
 from spark_query_engine.operators import (
     d2_sql,
-    nested_lit,
     nested_sql,
     release_on_drop,
     widen,
@@ -68,140 +67,6 @@ def lsh_bucket(
         _as_double(vec_col).alias("vec"),
         _bucket_expr(_as_double(vec_col), planes).alias("bucket"),
     )
-
-
-def banded_signatures(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    planes: list[list[float]],
-    bands: int,
-) -> DataFrame:
-    """Split ``planes`` into ``bands`` contiguous groups and compute one
-    sign-pattern key per band: (id, band, key). The banded OR-construction
-    (any band matching => candidate) is what turns single-bucket LSH into
-    a near-duplicate JOIN key."""
-    per = len(planes) // bands
-    v = widen(df).select(F.col(id_col).alias("id"), _as_double(vec_col).alias("vec"))
-    # One 2-D literal + a single transform over it: all |planes| dot
-    # products compile to ONE codegen loop, instead of |planes|
-    # independent fold expressions (which made Janino compile seconds
-    # of code for 32+ planes). The literal arrives as a SINGLE node:
-    # an F.array(F.array(...)) tree of |planes|*dim nodes made every
-    # optimizer rule walk thousands of nodes (~7 s of driver-side
-    # planning for 32x64), and F.lit crossed py4j once per element
-    # (~1.4 s for 32x64); nested_lit is one F.expr call that
-    # ConstantFolding collapses to the same single Literal node.
-    # Per-plane arithmetic is the identical sequential zip_with/fold
-    # of _bucket_expr.
-    planes_lit = nested_lit([[float(w) for w in p] for p in planes])
-    dots = F.transform(
-        planes_lit,
-        lambda p: F.aggregate(
-            F.zip_with(F.col("vec"), p, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-    )
-    signs = F.transform(
-        dots, lambda d: F.when(d > 0, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long"))
-    )
-    weights = F.array(*[F.lit(1 << j).cast("long") for j in range(per)])
-    keys = F.array(
-        *[
-            F.aggregate(
-                F.zip_with(
-                    F.slice(signs, b * per + 1, per),
-                    weights,
-                    lambda s, w: s * w,
-                ),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            )
-            for b in range(bands)
-        ]
-    )
-    sig = v.select("id", keys.alias("keys"))
-    return sig.select("id", F.posexplode(F.col("keys")).alias("band", "key"))
-
-
-def banded_near_duplicates(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    threshold: float,
-    planes: list[list[float]],
-    bands: int,
-    probe_flips: int = 1,
-) -> DataFrame:
-    """Embedding near-dup pairs via banded LSH blocking + exact verify.
-
-    Plan shape (the point of this operator — contrast the all-pairs
-    ``dedup.embedding_near_duplicates`` theta-join, which plans as a
-    nested-loop cartesian product):
-
-      1. signatures: one scan, ``len(planes)`` codegen'd dot-product
-         folds per row -> (id, band, key) — no Python, no shuffle.
-      2. candidates: EQUI-join on (band, key) — a shuffle hash join
-         partitioned by bucket, the join shape that scales out. The
-         probe side also emits every single-bit flip of its key
-         (multi-probe, Hamming <= ``probe_flips``); emitting flips on
-         one side only still covers both orientations of each pair
-         because the pair is tried in both (a,b) and (b,a) roles.
-      3. verify: distinct candidate pairs -> fetch vectors -> exact
-         cosine >= threshold, so blocking can only LOSE pairs, never
-         invent them.
-
-    Recall/pruning honesty (measured on the fixed-seed planes against
-    the exact all-pairs result): at threshold 0.45 over this corpus's
-    random Gaussian embeddings — where qualifying pairs are merely the
-    tail of the background similarity distribution — recall is 1.0 at
-    sf0.01 AND sf0.1 with (4 planes x 8 bands, 1 flip), but the
-    candidate set is ~94% of all pairs: sign-LSH simply cannot separate
-    cos 0.45 from cos 0.3 (per-plane agreement 0.648 vs 0.597). The
-    blocking earns its keep at real near-dup thresholds: at cos >= 0.8
-    per-band collision for qualifying pairs is >= 0.66 while background
-    pairs collide at ~2^-planes_per_band per band, so the same code
-    prunes geometrically — see ``dedup_embedding_scaled`` where recall
-    is PROVABLE (identical-direction vectors have identical sign
-    patterns) and pruning is ~1/2^16.
-    """
-    per = len(planes) // bands
-    v = widen(df).select(
-        F.col(id_col).alias("id"), _as_double(vec_col).alias("vec")
-    )
-    sig = banded_signatures(df, id_col, vec_col, planes, bands).persist()
-    probe = sig
-    if probe_flips >= 1:
-        flips = [F.col("key").bitwiseXOR(F.lit(1 << j)) for j in range(per)]
-        probe = sig.select(
-            "id", "band", F.explode(F.array(F.col("key"), *flips)).alias("key")
-        )
-    a, b = sig.alias("a"), probe.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key")),
-        )
-        .where(F.col("a.id") < F.col("b.id"))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
-    va = v.select(F.col("id").alias("id_a"), F.col("vec").alias("vec_a"))
-    vb = v.select(F.col("id").alias("id_b"), F.col("vec").alias("vec_b"))
-    out = (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.expr(f"round({cosine('vec_a', 'vec_b')}, 6)").alias("cos_sim"),
-        )
-        .where(F.col("cos_sim") >= threshold)
-        .select("id_a", "id_b", "cos_sim")
-    )
-    return release_on_drop(out, sig)
 
 
 def cp_rotations(bands: int, dim: int) -> list[list[list[float]]]:
@@ -411,8 +276,8 @@ def cp_keys(
     )
 
 
-#: Measured CP-LSH trade curve (tools/cp_curve.py, n=2000, d=64,
-#: round 5; full table in SCALING.md). Per calibration threshold,
+#: Measured CP-LSH trade curve (n=2000, d=64, round 5; full table and
+#: method in SCALING.md). Per calibration threshold,
 #: per (bands, probe_rank): (worst-regime recall, candidate
 #: fraction). Candidate fraction is the background collision rate —
 #: measured invariant (±0.001) across thresholds and regimes.
@@ -495,6 +360,25 @@ def cp_config(
         _frac, bands, rank = min(ok)
     arity = cp_arity(n, bands, dim) if (n is not None and rank == 1) else 1
     return (bands, rank, arity)
+
+
+def _verify_cosine(cand: DataFrame, v: DataFrame, threshold: float) -> DataFrame:
+    """Exact check of candidate pairs (id_a, id_b) against the vectors
+    ``v`` (id, vec): (id_a, id_b, cos_sim) for the pairs whose
+    6dp-rounded cosine is at least ``threshold``. Blocking upstream can
+    only lose pairs, never invent them."""
+    va = v.select(F.col("id").alias("id_a"), F.col("vec").alias("vec_a"))
+    vb = v.select(F.col("id").alias("id_b"), F.col("vec").alias("vec_b"))
+    return (
+        cand.join(va, "id_a")
+        .join(vb, "id_b")
+        .select(
+            "id_a",
+            "id_b",
+            F.expr(f"round({cosine('vec_a', 'vec_b')}, 6)").alias("cos_sim"),
+        )
+        .where(F.col("cos_sim") >= threshold)
+    )
 
 
 def cp_near_duplicates(
@@ -637,18 +521,7 @@ def cp_near_duplicates(
             ).alias("candidate_fraction")
         )
     )
-    va = v.select(F.col("id").alias("id_a"), F.col("vec").alias("vec_a"))
-    vb = v.select(F.col("id").alias("id_b"), F.col("vec").alias("vec_b"))
-    verified = (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.expr(f"round({cosine('vec_a', 'vec_b')}, 6)").alias("cos_sim"),
-        )
-        .where(F.col("cos_sim") >= threshold)
-    )
+    verified = _verify_cosine(cand, v, threshold)
     return release_on_drop(
         verified.crossJoin(F.broadcast(frac)).select(
             "id_a", "id_b", "cos_sim", "candidate_fraction"
@@ -788,18 +661,7 @@ def cosine_pairs_exact(
                 yield pd.DataFrame({"id_a": lo, "id_b": hi})
 
     cand = grid.mapInPandas(_tiles, "id_a long, id_b long")
-    va = v.select(F.col("id").alias("id_a"), F.col("vec").alias("vec_a"))
-    vb = v.select(F.col("id").alias("id_b"), F.col("vec").alias("vec_b"))
-    out = (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.expr(f"round({cosine('vec_a', 'vec_b')}, 6)").alias("cos_sim"),
-        )
-        .where(F.col("cos_sim") >= threshold)
-    )
+    out = _verify_cosine(cand, v, threshold)
     return release_on_drop(out, blocks)
 
 

@@ -202,89 +202,42 @@ def _driver_verified() -> set[str]:
     return set(_driver_green_rounds())
 
 
-#: Names the round-3 verdict called out by name as must-verify this
-#: round (the round-3b/3c families that otherwise sit past the ~50
-#: window). They are pinned to the very front of the unverified prefix
-#: (in this order) so the driver window cannot round-robin them out;
-#: once a name earns a green CORRECTNESS row it leaves the unverified
-#: set and this pin becomes a no-op.
-_WINDOW_FIRST: tuple[str, ...] = (
-    # (r8's 8 never-driver-signed names all landed green in
-    # CORRECTNESS_r08 — pruned r9 per the standing drop rule. With
-    # every registry entry driver-signed, new entries here should be
-    # rare; the r9 stale-row rotation below keeps old signatures
-    # fresh automatically.)
-)
-
 #: Queries whose implementation was REWRITTEN after their last green
 #: driver row, so the committed evidence predates the code now
-#: running (the round-4 CP-LSH / star-CC rewrites; the round-5
-#: integer-moment conversions). Unlike _WINDOW_FIRST these pin to the
-#: front EVEN THOUGH _driver_verified() contains them — the round-4
-#: verdict (task 4) wants fresh driver rows under the current code.
-#: Drop a name once a CORRECTNESS round NEWER than its rewrite lands.
+#: running. They pin to the front of the driver window EVEN THOUGH
+#: _driver_verified() contains them, so the driver re-signs them under
+#: the current code. Drop a name once a CORRECTNESS round NEWER than
+#: its rewrite lands.
 _REPIN_REWRITTEN = (
-    # (r4/r5 rewrites re-verified green in CORRECTNESS_r05, pruned r6;
-    # the r6 signed-zero/covariance trio re-verified green in
-    # CORRECTNESS_r06, pruned r7 — the docstring's own drop rule.)
-    # (r7 rewrites — semdedup k ∝ n, embedding-cosine tiled GEMM —
-    # re-verified green in CORRECTNESS_r07 rows 1-2, pruned r8: the
-    # docstring's own drop rule.)
-    # (r8 rewrites — GEMM assignment substrate, two-pass ntile rank,
-    # shingle-family CSE fix, footer-sized knn/contrastive/winnow —
-    # all re-verified green in CORRECTNESS_r08, pruned r9: the
-    # docstring's own drop rule.)
-    # (r9 rewrites — footer-sized simhash bands, the global_rank
-    # offsets window + its five callers, the BPE _bpe_pair_winner
-    # factoring, aHash multi-index groups — all re-verified green in
-    # CORRECTNESS_r09, pruned r10: the docstring's own drop rule.
-    # The r10 aHash d>=4 guard and banding validation change no
-    # registered query's plan or values — defaults untouched — so
-    # nothing re-pins this round; dedup_minhash_highrecall is NEW and
-    # enters the window through the unverified prefix instead.)
-    #
-    # r11: the degree-oriented wedge core of graph_triangle_count was
-    # FACTORED into _oriented_triangles so the new DOULION-sampled
-    # tier shares it — the plan is unchanged by construction, but the
-    # signed evidence (r3, re-signed r9) predates the refactor, so it
-    # re-signs under the current code per the standing rule.
+    # These builders now call one shared helper where each built its
+    # own copy of a relation: graph.copurchase_pairs,
+    # dedup.shingle_overlap, and training.py's event-series,
+    # planted-typo and LSH-probe builders. Their normalized physical
+    # plans are unchanged (tools/dump_plans.py).
+    "ann_ndcg_eval",
+    "ann_recall_eval",
+    "corpus_dedup_eval",
+    "dedup_containment",
+    "events_anomaly_mad",
+    "events_cusum_drift",
+    "events_snaive_backtest",
+    "events_survival_km",
+    "events_trend_slope",
+    "graph_assortativity",
+    "graph_degree_powerlaw",
+    "graph_kcore_peel",
+    "graph_link_prediction",
+    "graph_linkpred_eval",
     "graph_triangle_count",
-    # r11: the ×32 replicate fan-out now spreads to session width
-    # before the explode (the sf3 rows caught it serialized onto the
-    # scan's 5 byte-sized splits — flat 29 s sf1→sf3, cores idle;
-    # 3.5 s after). Values are placement-independent (integer-exact
-    # per-(row, replicate) weights), but the plan changed, so it
-    # re-signs under the current code.
-    "stats_poisson_bootstrap",
-    # r11: the plan-level fan-out audit (tools/fanout_audit.py — the
-    # 11c defect class made mechanical) found 20 Generate-over-
-    # unshuffled-scan sites; these ten queries gained the standing
-    # `widen` guard in front of their per-row-expensive explodes
-    # (values placement-independent — all re-verified against their
-    # oracles at sf0.01 the same session), but the plans changed, so
-    # they re-sign under the current code. (winnow_fingerprint's
-    # widen was REVERTED on measurement — its Arrow substrate is
-    # already zero-shuffle — so it does not re-pin.)
-    "corpus_span_dedup",
-    "corpus_dup_span_removal",
-    "pipeline_pretraining_full",
-    "pipeline_rag_index",
-    "corpus_bpe_tokenize",
-    "corpus_bpe_fertility",
-    "corpus_chunk_sliding",
-    "corpus_ngram_topk",
-    "ann_hybrid_search",
-    # r11: the full-registry sf1 value sweep's two defect fixes
-    # (SCALING.md 11h) — lgConfigK=16 HLL sketches and the 6dp
-    # floor-half-up percentile-bound pinning — change these queries'
-    # plans AND oracles; the cascade's oracle gained a counts-CTE
-    # materialization (values identical, text changed). All
-    # re-verified at sf0.01 + sf1 the same session; they re-sign
-    # under the current code per the standing rule.
-    "corpus_sketch_merge",
-    "data_sketch_time_rollup",
-    "stats_winsorized_mean",
-    "pipeline_dedup_cascade",
+    "graph_triangle_sampled",
+    "linkage_fellegi_sunter",
+    "linkage_sorted_neighborhood",
+    "pipeline_entity_resolution",
+    "stats_kendall_tau",
+    "stats_logrank_cohorts",
+    "stats_msprt_sequential",
+    "stats_qini_uplift",
+    "stats_spearman_daily",
 )
 
 
@@ -294,11 +247,6 @@ def _reorder_registry() -> None:
     order = list(REGISTRY.items())
 
     pinned = [n for n in _REPIN_REWRITTEN if n in REGISTRY]
-    pinned += [
-        n
-        for n in _WINDOW_FIRST
-        if n in REGISTRY and n not in verified and n not in pinned
-    ]
 
     # Group the remaining unverified names by family, families in
     # priority order, queries within a family in registration order.

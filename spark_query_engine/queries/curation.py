@@ -19,7 +19,11 @@ from spark_query_engine.operators import carry_caches, release_on_drop, widen
 from spark_query_engine.operators import dedup as D
 from spark_query_engine.operators import textanalysis as T
 from spark_query_engine.queries import EVENTS_ORACLE, footer_rows, load, query
-from spark_query_engine.queries.dedup import _WORD_SHINGLES
+from spark_query_engine.queries.dedup import (
+    _INTER_SIZES,
+    _SHINGLE_INTER,
+    _WORD_SHINGLES,
+)
 
 
 @query(
@@ -644,17 +648,10 @@ def _minhash_oracle_ctes(num_hashes: int = 16, bands: int = 4) -> str:
     oracle=f"""
         WITH {_WORD_SHINGLES},
         {_minhash_oracle_ctes()},
-        inter AS (
-            SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_inter
-            FROM sh a JOIN sh b
-              ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-            GROUP BY 1, 2
-        ),
+        {_SHINGLE_INTER},
         exact AS (
             SELECT id_a, id_b
-            FROM inter
-            JOIN sizes za ON za.doc_id = id_a
-            JOIN sizes zb ON zb.doc_id = id_b
+            {_INTER_SIZES}
             WHERE n_inter * 1.0 / (za.n_sh + zb.n_sh - n_inter) >= 0.6
         ),
         m AS (
@@ -687,22 +684,8 @@ def corpus_dedup_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = D.lsh_candidate_pairs(sig, 16, 4)
     # exact truth via the same shingle-join brute force as the
     # dedup_minhash oracle
-    sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    za = sizes.select(F.col("id").alias("id_a"), F.col("n_sh").alias("na"))
-    zb = sizes.select(F.col("id").alias("id_b"), F.col("n_sh").alias("nb"))
     exact = (
-        inter.join(za, "id_a")
-        .join(zb, "id_b")
+        D.shingle_overlap(sh)
         .where(
             F.col("n_inter") / (F.col("na") + F.col("nb") - F.col("n_inter"))
             >= 0.6
@@ -902,17 +885,10 @@ def corpus_token_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
         WITH RECURSIVE
         {_WORD_SHINGLES},
-        inter AS (
-            SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_inter
-            FROM sh a JOIN sh b
-              ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-            GROUP BY 1, 2
-        ),
+        {_SHINGLE_INTER},
         pairs AS (
             SELECT id_a, id_b
-            FROM inter
-            JOIN sizes za ON za.doc_id = id_a
-            JOIN sizes zb ON zb.doc_id = id_b
+            {_INTER_SIZES}
             WHERE n_inter * 1.0 / (za.n_sh + zb.n_sh - n_inter) >= 0.6
         ),
         edges AS (SELECT id_a AS u, id_b AS v FROM pairs

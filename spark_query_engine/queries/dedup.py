@@ -28,6 +28,20 @@ _WORD_SHINGLES = """
     sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id)
 """
 
+#: All-pairs shared-shingle counts over ``sh``: the DuckDB twin of the
+#: intersection inside ``operators.dedup.shingle_overlap``.
+_SHINGLE_INTER = """inter AS (
+            SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_inter
+            FROM sh a JOIN sh b
+              ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+            GROUP BY 1, 2
+        )"""
+
+#: ``inter`` with both sides' shingle counts, as ``za.n_sh``/``zb.n_sh``.
+_INTER_SIZES = """FROM inter
+        JOIN sizes za ON za.doc_id = id_a
+        JOIN sizes zb ON zb.doc_id = id_b"""
+
 
 @query(
     "dedup_exact",
@@ -48,17 +62,10 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup_minhash",
     oracle=f"""
         WITH {_WORD_SHINGLES},
-        inter AS (
-            SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_inter
-            FROM sh a JOIN sh b
-              ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-            GROUP BY 1, 2
-        )
+        {_SHINGLE_INTER}
         SELECT id_a, id_b,
                ROUND(n_inter * 1.0 / (za.n_sh + zb.n_sh - n_inter), 6) AS jaccard
-        FROM inter
-        JOIN sizes za ON za.doc_id = id_a
-        JOIN sizes zb ON zb.doc_id = id_b
+        {_INTER_SIZES}
         WHERE n_inter * 1.0 / (za.n_sh + zb.n_sh - n_inter) >= 0.6
     """,
 )
@@ -82,17 +89,10 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup_minhash_highrecall",
     oracle=f"""
         WITH {_WORD_SHINGLES},
-        inter AS (
-            SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_inter
-            FROM sh a JOIN sh b
-              ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-            GROUP BY 1, 2
-        )
+        {_SHINGLE_INTER}
         SELECT id_a, id_b,
                ROUND(n_inter * 1.0 / (za.n_sh + zb.n_sh - n_inter), 6) AS jaccard
-        FROM inter
-        JOIN sizes za ON za.doc_id = id_a
-        JOIN sizes zb ON zb.doc_id = id_b
+        {_INTER_SIZES}
         WHERE n_inter * 1.0 / (za.n_sh + zb.n_sh - n_inter) >= 0.6
     """,
 )
@@ -192,7 +192,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dedup_ngram_jaccard",
-    oracle="""
+    oracle=f"""
         WITH words AS (
             SELECT doc_id, string_split(text, ' ') AS w FROM documents
         ),
@@ -203,17 +203,10 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
             WHERE len(w) >= 4
         ),
         sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
-        inter AS (
-            SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_inter
-            FROM sh a JOIN sh b
-              ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-            GROUP BY 1, 2
-        )
+        {_SHINGLE_INTER}
         SELECT id_a, id_b,
                ROUND(n_inter * 1.0 / (za.n_sh + zb.n_sh - n_inter), 6) AS jaccard
-        FROM inter
-        JOIN sizes za ON za.doc_id = id_a
-        JOIN sizes zb ON zb.doc_id = id_b
+        {_INTER_SIZES}
         WHERE n_inter * 1.0 / (za.n_sh + zb.n_sh - n_inter) >= 0.7
     """,
 )
@@ -238,17 +231,10 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
         WITH RECURSIVE
         {_WORD_SHINGLES},
-        inter AS (
-            SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_inter
-            FROM sh a JOIN sh b
-              ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-            GROUP BY 1, 2
-        ),
+        {_SHINGLE_INTER},
         pairs AS (
             SELECT id_a, id_b
-            FROM inter
-            JOIN sizes za ON za.doc_id = id_a
-            JOIN sizes zb ON zb.doc_id = id_b
+            {_INTER_SIZES}
             WHERE n_inter * 1.0 / (za.n_sh + zb.n_sh - n_inter) >= 0.6
         ),
         edges AS (SELECT id_a AS u, id_b AS v FROM pairs
@@ -567,17 +553,10 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
         WITH RECURSIVE
         {_WORD_SHINGLES},
-        inter AS (
-            SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_inter
-            FROM sh a JOIN sh b
-              ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-            GROUP BY 1, 2
-        ),
+        {_SHINGLE_INTER},
         dag AS (
             SELECT id_a AS u, id_b AS v
-            FROM inter
-            JOIN sizes za ON za.doc_id = id_a
-            JOIN sizes zb ON zb.doc_id = id_b
+            {_INTER_SIZES}
             WHERE n_inter * 1.0 / (za.n_sh + zb.n_sh - n_inter) >= 0.6
         ),
         walk(src, cur, depth) AS (
@@ -652,18 +631,11 @@ def dedup_chain_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup_ngram_prefix",
     oracle=f"""
         WITH {_WORD_SHINGLES},
-        inter AS (
-            SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_inter
-            FROM sh a JOIN sh b
-              ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-            GROUP BY 1, 2
-        )
+        {_SHINGLE_INTER}
         SELECT id_a, id_b,
                ROUND(n_inter * 1.0 / (za.n_sh + zb.n_sh - n_inter), 6)
                    AS jaccard
-        FROM inter
-        JOIN sizes za ON za.doc_id = id_a
-        JOIN sizes zb ON zb.doc_id = id_b
+        {_INTER_SIZES}
         WHERE ROUND(n_inter * 1.0 / (za.n_sh + zb.n_sh - n_inter), 6) >= 0.6
     """,
 )
@@ -686,12 +658,7 @@ def dedup_ngram_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup_containment",
     oracle=f"""
         WITH {_WORD_SHINGLES},
-        inter AS (
-            SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_inter
-            FROM sh a JOIN sh b
-              ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-            GROUP BY 1, 2
-        ),
+        {_SHINGLE_INTER},
         directed AS (
             SELECT id_a AS contained, id_b AS container,
                    ROUND(n_inter * 1.0 / za.n_sh, 6) AS containment
@@ -720,20 +687,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     source" in corpus curation."""
     docs = load(spark, sf_dir, "documents")
     sh = D.word_shingles(docs, "doc_id", "text", 3).persist()
-    sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    za = sizes.select(F.col("id").alias("id_a"), F.col("n_sh").alias("na"))
-    zb = sizes.select(F.col("id").alias("id_b"), F.col("n_sh").alias("nb"))
-    both = inter.join(za, "id_a").join(zb, "id_b")
+    both = D.shingle_overlap(sh)
     fwd = both.select(
         F.col("id_a").alias("contained"),
         F.col("id_b").alias("container"),
@@ -864,19 +818,12 @@ def dedup_bloom_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
         WITH RECURSIVE
         {_WORD_SHINGLES},
-        inter AS (
-            SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_inter
-            FROM sh a JOIN sh b
-              ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-            GROUP BY 1, 2
-        ),
+        {_SHINGLE_INTER},
         pairs AS (
             SELECT id_a, id_b,
                    ROUND(n_inter * 1.0 /
                          (za.n_sh + zb.n_sh - n_inter), 6) AS jac
-            FROM inter
-            JOIN sizes za ON za.doc_id = id_a
-            JOIN sizes zb ON zb.doc_id = id_b
+            {_INTER_SIZES}
             WHERE n_inter * 1.0 / (za.n_sh + zb.n_sh - n_inter) >= 0.6
         ),
         edges AS (SELECT id_a AS u, id_b AS v FROM pairs
@@ -953,17 +900,10 @@ def dedup_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup_bag_jaccard",
     oracle=f"""
         WITH {_WORD_SHINGLES},
-        inter AS (
-            SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_inter
-            FROM sh a JOIN sh b
-              ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-            GROUP BY 1, 2
-        ),
+        {_SHINGLE_INTER},
         cand AS (
             SELECT id_a, id_b
-            FROM inter
-            JOIN sizes za ON za.doc_id = id_a
-            JOIN sizes zb ON zb.doc_id = id_b
+            {_INTER_SIZES}
             WHERE n_inter * 1.0 / (za.n_sh + zb.n_sh - n_inter) >= 0.6
         ),
         toks AS (
@@ -1057,18 +997,11 @@ def dedup_bag_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup_threshold_sweep",
     oracle=f"""
         WITH {_WORD_SHINGLES},
-        inter AS (
-            SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_inter
-            FROM sh a JOIN sh b
-              ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-            GROUP BY 1, 2
-        ),
+        {_SHINGLE_INTER},
         jac AS (
             SELECT ROUND(n_inter * 1.0 /
                          (za.n_sh + zb.n_sh - n_inter), 6) AS j
-            FROM inter
-            JOIN sizes za ON za.doc_id = id_a
-            JOIN sizes zb ON zb.doc_id = id_b
+            {_INTER_SIZES}
             WHERE n_inter * 1.0 / (za.n_sh + zb.n_sh - n_inter) >= 0.6
         ),
         ths AS (SELECT UNNEST([0.6, 0.7, 0.8, 0.9, 0.95]) AS th)
@@ -1125,17 +1058,10 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup_source_attribution",
     oracle=f"""
         WITH {_WORD_SHINGLES},
-        inter AS (
-            SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_inter
-            FROM sh a JOIN sh b
-              ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-            GROUP BY 1, 2
-        ),
+        {_SHINGLE_INTER},
         pairs AS (
             SELECT id_a, id_b
-            FROM inter
-            JOIN sizes za ON za.doc_id = id_a
-            JOIN sizes zb ON zb.doc_id = id_b
+            {_INTER_SIZES}
             WHERE n_inter * 1.0 / (za.n_sh + zb.n_sh - n_inter) >= 0.6
         )
         SELECT LEAST(da.source, db.source) AS source_x,

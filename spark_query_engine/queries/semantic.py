@@ -68,6 +68,42 @@ def _ivf_nlist(n: int) -> int:
 _PQ_M, _PQ_K, _PQ_SUBDIM = 4, 16, 16
 
 
+def _pq_adc_ctes(corpus: str, qvec: str, qsrc: str) -> str:
+    """DuckDB product-quantization CTEs js, cb, subs, dists, enc, q and
+    lut: the codebooks are the first ``_PQ_K`` rows of ``v``, ``enc``
+    holds the nearest code per subspace of every row of ``corpus`` (id,
+    vec), and ``lut`` the query's squared distance to every code. The
+    query vector is column ``qvec`` of ``FROM {qsrc}``, which must
+    cross ``js``."""
+    return f"""js AS (SELECT unnest(range(0, {_PQ_M})) AS j),
+        cb AS (SELECT j, id AS code,
+                      vec[j*{_PQ_SUBDIM}+1:(j+1)*{_PQ_SUBDIM}] AS c
+               FROM v, js WHERE id < {_PQ_K}),
+        subs AS (SELECT id, j,
+                        vec[j*{_PQ_SUBDIM}+1:(j+1)*{_PQ_SUBDIM}] AS s
+                 FROM {corpus}, js),
+        dists AS (
+            SELECT subs.id, subs.j, cb.code,
+                   ROUND(list_sum(list_transform(range(1, {_PQ_SUBDIM}+1),
+                         i -> (s[i]-c[i])*(s[i]-c[i]))), 6) AS d2
+            FROM subs JOIN cb ON subs.j = cb.j
+        ),
+        enc AS (
+            SELECT id, j, code FROM (
+                SELECT *, ROW_NUMBER() OVER (PARTITION BY id, j
+                                             ORDER BY d2, code) AS rn
+                FROM dists) WHERE rn = 1
+        ),
+        q AS (SELECT j, {qvec}[j*{_PQ_SUBDIM}+1:(j+1)*{_PQ_SUBDIM}] AS qs
+              FROM {qsrc}),
+        lut AS (
+            SELECT cb.j, cb.code,
+                   ROUND(list_sum(list_transform(range(1, {_PQ_SUBDIM}+1),
+                         i -> (qs[i]-c[i])*(qs[i]-c[i]))), 6) AS qd2
+            FROM cb JOIN q ON cb.j = q.j
+        )"""
+
+
 def _kmeans_ctes(
     k: int | str = _K, iters: int = _ITERS, prefix: str = ""
 ) -> str:
@@ -195,33 +231,7 @@ def corpus_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
         WITH v AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS vec
                    FROM embeddings),
-        js AS (SELECT unnest(range(0, {_PQ_M})) AS j),
-        cb AS (SELECT j, id AS code,
-                      vec[j*{_PQ_SUBDIM}+1:(j+1)*{_PQ_SUBDIM}] AS c
-               FROM v, js WHERE id < {_PQ_K}),
-        subs AS (SELECT id, j,
-                        vec[j*{_PQ_SUBDIM}+1:(j+1)*{_PQ_SUBDIM}] AS s
-                 FROM v, js),
-        dists AS (
-            SELECT subs.id, subs.j, cb.code,
-                   ROUND(list_sum(list_transform(range(1, {_PQ_SUBDIM}+1),
-                         i -> (s[i]-c[i])*(s[i]-c[i]))), 6) AS d2
-            FROM subs JOIN cb ON subs.j = cb.j
-        ),
-        enc AS (
-            SELECT id, j, code FROM (
-                SELECT *, ROW_NUMBER() OVER (PARTITION BY id, j
-                                             ORDER BY d2, code) AS rn
-                FROM dists) WHERE rn = 1
-        ),
-        q AS (SELECT j, vec[j*{_PQ_SUBDIM}+1:(j+1)*{_PQ_SUBDIM}] AS qs
-              FROM v, js WHERE id = 0),
-        lut AS (
-            SELECT cb.j, cb.code,
-                   ROUND(list_sum(list_transform(range(1, {_PQ_SUBDIM}+1),
-                         i -> (qs[i]-c[i])*(qs[i]-c[i]))), 6) AS qd2
-            FROM cb JOIN q ON cb.j = q.j
-        )
+        {_pq_adc_ctes("v", "vec", "v, js WHERE id = 0")}
         SELECT enc.id, ROUND(SUM(lut.qd2), 6) AS adc_dist
         FROM enc JOIN lut ON enc.j = lut.j AND enc.code = lut.code
         WHERE enc.id <> 0
@@ -412,33 +422,7 @@ def corpus_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
         WITH v AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS vec
                    FROM embeddings),
-        js AS (SELECT unnest(range(0, {_PQ_M})) AS j),
-        cb AS (SELECT j, id AS code,
-                      vec[j*{_PQ_SUBDIM}+1:(j+1)*{_PQ_SUBDIM}] AS c
-               FROM v, js WHERE id < {_PQ_K}),
-        subs AS (SELECT id, j,
-                        vec[j*{_PQ_SUBDIM}+1:(j+1)*{_PQ_SUBDIM}] AS s
-                 FROM v, js),
-        dists AS (
-            SELECT subs.id, subs.j, cb.code,
-                   ROUND(list_sum(list_transform(range(1, {_PQ_SUBDIM}+1),
-                         i -> (s[i]-c[i])*(s[i]-c[i]))), 6) AS d2
-            FROM subs JOIN cb ON subs.j = cb.j
-        ),
-        enc AS (
-            SELECT id, j, code FROM (
-                SELECT *, ROW_NUMBER() OVER (PARTITION BY id, j
-                                             ORDER BY d2, code) AS rn
-                FROM dists) WHERE rn = 1
-        ),
-        q AS (SELECT j, vec[j*{_PQ_SUBDIM}+1:(j+1)*{_PQ_SUBDIM}] AS qs
-              FROM v, js WHERE id = 0),
-        lut AS (
-            SELECT cb.j, cb.code,
-                   ROUND(list_sum(list_transform(range(1, {_PQ_SUBDIM}+1),
-                         i -> (qs[i]-c[i])*(qs[i]-c[i]))), 6) AS qd2
-            FROM cb JOIN q ON cb.j = q.j
-        ),
+        {_pq_adc_ctes("v", "vec", "v, js WHERE id = 0")},
         pq10 AS (
             SELECT enc.id, ROUND(SUM(lut.qd2), 6) AS adc_dist
             FROM enc JOIN lut ON enc.j = lut.j AND enc.code = lut.code

@@ -38,8 +38,10 @@ from spark_query_engine.operators import (
 from spark_query_engine.operators import clustering as C
 from spark_query_engine.operators import similarity as S
 from spark_query_engine.operators import dedup as D
+from spark_query_engine.operators.graph import copurchase_pairs
 from spark_query_engine.operators.dedup import cosine
 from spark_query_engine.queries import EVENTS_ORACLE, footer_rows, load, query
+from spark_query_engine.queries.dedup import _INTER_SIZES, _SHINGLE_INTER
 from spark_query_engine.queries.semantic import _kmeans_ctes
 
 #: Sliding-window chunking geometry: 32-token windows, stride 24
@@ -527,10 +529,8 @@ def _ivf_pq_oracle() -> str:
     from spark_query_engine.queries.semantic import (
         _ITERS,
         _IVF_NLIST_EXPR,
-        _PQ_K,
-        _PQ_M,
-        _PQ_SUBDIM,
         _kmeans_ctes,
+        _pq_adc_ctes,
     )
 
     return f"""
@@ -547,33 +547,7 @@ def _ivf_pq_oracle() -> str:
             SELECT f.id, f.vec FROM a_final f JOIN qc USING (centroid)
             WHERE f.id <> 0
         ),
-        js AS (SELECT unnest(range(0, {_PQ_M})) AS j),
-        cb AS (SELECT j, id AS code,
-                      vec[j*{_PQ_SUBDIM}+1:(j+1)*{_PQ_SUBDIM}] AS c
-               FROM v, js WHERE id < {_PQ_K}),
-        subs AS (SELECT id, j,
-                        vec[j*{_PQ_SUBDIM}+1:(j+1)*{_PQ_SUBDIM}] AS s
-                 FROM cand, js),
-        dists AS (
-            SELECT subs.id, subs.j, cb.code,
-                   ROUND(list_sum(list_transform(range(1, {_PQ_SUBDIM}+1),
-                         i -> (s[i]-c[i])*(s[i]-c[i]))), 6) AS d2
-            FROM subs JOIN cb ON subs.j = cb.j
-        ),
-        enc AS (
-            SELECT id, j, code FROM (
-                SELECT *, ROW_NUMBER() OVER (PARTITION BY id, j
-                                             ORDER BY d2, code) AS rn
-                FROM dists) WHERE rn = 1
-        ),
-        q AS (SELECT j, qvec[j*{_PQ_SUBDIM}+1:(j+1)*{_PQ_SUBDIM}] AS qs
-              FROM qv, js),
-        lut AS (
-            SELECT cb.j, cb.code,
-                   ROUND(list_sum(list_transform(range(1, {_PQ_SUBDIM}+1),
-                         i -> (qs[i]-c[i])*(qs[i]-c[i]))), 6) AS qd2
-            FROM cb JOIN q ON cb.j = q.j
-        )
+        {_pq_adc_ctes("cand", "qvec", "qv, js")}
         SELECT enc.id, ROUND(SUM(lut.qd2), 6) AS adc_dist
         FROM enc JOIN lut ON enc.j = lut.j AND enc.code = lut.code
         GROUP BY enc.id
@@ -943,14 +917,16 @@ def corpus_dup_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _recall_oracle() -> str:
+def _lsh_eval_oracle_ctes() -> str:
+    """DuckDB twin of ``_lsh_probe_eval``: a WITH clause defining
+    ``q``, ``corpus`` and the exact top-K ``truth``. It ends in a comma;
+    the caller appends its own CTEs and final SELECT."""
     from spark_query_engine.queries.similarity import (
         _NPLANES_EXPR,
         _planes_values_sql,
     )
 
-    return f"""
-        WITH planes(p, d, w) AS (VALUES {_planes_values_sql()}),
+    return f"""WITH planes(p, d, w) AS (VALUES {_planes_values_sql()}),
         v AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS vec
               FROM embeddings),
         dots AS (SELECT e.id, pl.p, SUM(pl.w * e.vec[pl.d + 1]) AS dot
@@ -971,6 +947,54 @@ def _recall_oracle() -> str:
                        ORDER BY ROUND(list_cosine_similarity(
                                     c.vec, q.qvec), 6) DESC, c.id) AS rn
             FROM corpus c CROSS JOIN q) WHERE rn <= {_BATCH_K}),
+"""
+
+
+def _lsh_probe_eval(spark: SparkSession, sf_dir: str):
+    """The single-bucket LSH probe the ANN audits grade, and the
+    truth it is graded against: (qbatch, cand, approx, truth).
+    ``qbatch`` holds the first ``_NQ`` vectors as queries (qid, qvec,
+    qbucket); ``cand`` pairs each with every corpus vector in its
+    bucket; ``approx`` is the probe's top-``_BATCH_K`` per query (qid,
+    id, rn); ``truth`` the exact brute-force top-``_BATCH_K`` (qid,
+    id)."""
+    from spark_query_engine.queries.similarity import _PLANES, _n_planes
+
+    emb = load(spark, sf_dir, "embeddings")
+    planes = _PLANES[: _n_planes(footer_rows(spark, sf_dir, "embeddings"))]
+    bucketed = S.lsh_bucket(emb, "vec_id", "embedding", planes)
+    qbatch = bucketed.where(F.col("id") < _NQ).select(
+        F.col("id").alias("qid"),
+        F.col("vec").alias("qvec"),
+        F.col("bucket").alias("qbucket"),
+    )
+    corpus = bucketed.where(F.col("id") >= _NQ)
+    sim = F.expr(f"round({cosine('vec', 'qvec')}, 6)")
+    win = Window.partitionBy("qid").orderBy(
+        F.col("cos_sim").desc(), F.col("id")
+    )
+    truth = (
+        corpus.crossJoin(F.broadcast(qbatch.select("qid", "qvec")))
+        .select("qid", "id", sim.alias("cos_sim"))
+        .withColumn("rn", F.row_number().over(win))
+        .where(F.col("rn") <= _BATCH_K)
+        .select("qid", "id")
+    )
+    cand = corpus.join(
+        F.broadcast(qbatch), F.col("bucket") == F.col("qbucket")
+    )
+    approx = (
+        cand.select("qid", "id", sim.alias("cos_sim"))
+        .withColumn("rn", F.row_number().over(win))
+        .where(F.col("rn") <= _BATCH_K)
+        .select("qid", "id", "rn")
+    )
+    return qbatch, cand, approx, truth
+
+
+def _recall_oracle() -> str:
+    return f"""
+        {_lsh_eval_oracle_ctes()}
         cand AS (SELECT q.qid, c.id, c.vec, q.qvec
                  FROM corpus c JOIN q ON c.bucket = q.qbucket),
         ncand AS (SELECT qid, COUNT(*) AS n_candidates FROM cand GROUP BY 1),
@@ -1010,38 +1034,9 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     justifies ``ann_lsh_multiprobe_topk``'s Hamming-ball probes or
     fewer planes; the audit exists to surface that before an index
     ships, and the driver hash-verifies the measurement itself."""
-    from spark_query_engine.queries.similarity import _PLANES, _n_planes
-
-    emb = load(spark, sf_dir, "embeddings")
-    planes = _PLANES[: _n_planes(footer_rows(spark, sf_dir, "embeddings"))]
-    bucketed = S.lsh_bucket(emb, "vec_id", "embedding", planes)
-    qbatch = bucketed.where(F.col("id") < _NQ).select(
-        F.col("id").alias("qid"),
-        F.col("vec").alias("qvec"),
-        F.col("bucket").alias("qbucket"),
-    )
-    corpus = bucketed.where(F.col("id") >= _NQ)
-    sim = F.expr(f"round({cosine('vec', 'qvec')}, 6)")
-    win = Window.partitionBy("qid").orderBy(
-        F.col("cos_sim").desc(), F.col("id")
-    )
-    truth = (
-        corpus.crossJoin(F.broadcast(qbatch.select("qid", "qvec")))
-        .select("qid", "id", sim.alias("cos_sim"))
-        .withColumn("rn", F.row_number().over(win))
-        .where(F.col("rn") <= _BATCH_K)
-        .select("qid", "id")
-    )
-    cand = corpus.join(
-        F.broadcast(qbatch), F.col("bucket") == F.col("qbucket")
-    )
+    qbatch, cand, approx, truth = _lsh_probe_eval(spark, sf_dir)
     ncand = cand.groupBy("qid").agg(F.count(F.lit(1)).alias("n_candidates"))
-    approx = (
-        cand.select("qid", "id", sim.alias("cos_sim"))
-        .withColumn("rn", F.row_number().over(win))
-        .where(F.col("rn") <= _BATCH_K)
-        .select("qid", "id")
-    )
+    approx = approx.select("qid", "id")
     hits = approx.join(truth, ["qid", "id"]).groupBy("qid").agg(
         F.count(F.lit(1)).alias("n_hits")
     )
@@ -1558,6 +1553,17 @@ def _session_shuffle_parts(spark: SparkSession) -> int:
         return 200
 
 
+#: DuckDB twin of ``graph.copurchase_pairs``: the lineitem self-join
+#: behind every co-purchase graph oracle.
+_COPURCHASE_JOIN_SQL = """FROM lineitem a JOIN lineitem b
+              ON a.l_orderkey = b.l_orderkey
+             AND a.l_partkey < b.l_partkey"""
+
+#: The distinct undirected co-purchase edge set (u < v).
+_COPURCHASE_EDGES_SQL = f"""SELECT DISTINCT LEAST(a.l_partkey, b.l_partkey) AS u,
+                            GREATEST(a.l_partkey, b.l_partkey) AS v
+            {_COPURCHASE_JOIN_SQL}"""
+
 #: Broadcast gate for the triangle closing join, in ESTIMATED edges.
 #: The closing relation is two longs per edge; 4M edges is ~64 MB raw
 #: (~a few hundred MB as a built broadcast hash relation) — safely
@@ -1654,13 +1660,9 @@ def _oriented_triangles(
 
 @query(
     "graph_triangle_count",
-    oracle="""
+    oracle=f"""
         WITH ed AS (
-            SELECT DISTINCT LEAST(a.l_partkey, b.l_partkey) AS u,
-                            GREATEST(a.l_partkey, b.l_partkey) AS v
-            FROM lineitem a JOIN lineitem b
-              ON a.l_orderkey = b.l_orderkey
-             AND a.l_partkey < b.l_partkey
+            {_COPURCHASE_EDGES_SQL}
         ),
         deg AS (
             SELECT n, COUNT(*) AS d FROM (
@@ -1707,18 +1709,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     the full (v, w) edge pair. The oracle counts triangles by the
     i<j<k brute-force join — same integers, different algorithm."""
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    a, b = li.alias("a"), li.alias("b")
-    ed = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(
-            F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v")
-        )
-        .distinct()
-    )
+    ed = copurchase_pairs(li).distinct()
     # r12 OPT (guide §3.3/§5): LAZY lineage cut on the edge relation —
     # `ed` feeds deg, both orientation sides, AND the closing join;
     # the cut materializes it once on the first action and every
@@ -1816,7 +1807,7 @@ def _tri_sample_threshold(n_lineitem: int) -> int:
 
 @query(
     "graph_triangle_sampled",
-    oracle="""
+    oracle=f"""
         WITH nli AS (SELECT COUNT(*) AS n FROM lineitem),
         cfg AS (
             SELECT COALESCE(
@@ -1826,9 +1817,7 @@ def _tri_sample_threshold(n_lineitem: int) -> int:
         ),
         sed AS (
             SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-            FROM lineitem a JOIN lineitem b
-              ON a.l_orderkey = b.l_orderkey
-             AND a.l_partkey < b.l_partkey
+            {_COPURCHASE_JOIN_SQL}
             WHERE ('0x' || substr(md5('tri:' || a.l_partkey::VARCHAR
                    || ':' || b.l_partkey::VARCHAR), 1, 2))::BIGINT
                   < (SELECT thr FROM cfg)
@@ -1882,14 +1871,7 @@ def graph_triangle_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     task 1."""
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     thr = _tri_sample_threshold(footer_rows(spark, sf_dir, "lineitem"))
-    a, b = li.alias("a"), li.alias("b")
-    pairs = a.join(
-        b,
-        (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-        & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-    ).select(
-        F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v")
-    )
+    pairs = copurchase_pairs(li)
     gate = (
         F.conv(
             F.substring(
@@ -3157,14 +3139,8 @@ def dedup_fuzzy_typenames(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Sorted-neighborhood window sizes audited (max drives the band join).
-_SN_WINDOWS = (2, 8, 32)
-
-
-@query(
-    "linkage_sorted_neighborhood",
-    oracle=f"""
-        WITH names AS (SELECT DISTINCT p_name AS name FROM part),
+#: DuckDB twin of ``_typo_name_sources``.
+_TYPO_NAME_SOURCES_SQL = """names AS (SELECT DISTINCT p_name AS name FROM part),
         pos AS (
             SELECT name,
                    2 + (('0x' || substr(md5(name), 1, 8))::BIGINT
@@ -3178,7 +3154,46 @@ _SN_WINDOWS = (2, 8, 32)
                    || substr(name, CAST(p + 1 AS INT), 1000000) AS name,
                    name AS orig, 'b' AS src
             FROM pos
-        ),
+        )"""
+
+
+def _typo_name_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The planted-typo linkage corpus (name, orig, src): source 'a' is
+    the distinct part-name vocabulary, source 'b' the same names each
+    with one md5-chosen character deleted; ``orig`` is the ground-truth
+    match key."""
+    names = (
+        load(spark, sf_dir, "part")
+        .select(F.col("p_name").alias("name"))
+        .distinct()
+    )
+    pos = names.withColumn(
+        "p",
+        F.conv(F.substring(F.md5("name"), 1, 8), 16, 10).cast("long")
+        % (F.length("name") - F.lit(2))
+        + F.lit(2),
+    )
+    corrupted = pos.select(
+        F.concat(
+            F.expr("substring(name, 1, CAST(p - 1 AS INT))"),
+            F.expr("substring(name, CAST(p + 1 AS INT), 1000000)"),
+        ).alias("name"),
+        F.col("name").alias("orig"),
+        F.lit("b").alias("src"),
+    )
+    return names.select(
+        "name", F.col("name").alias("orig"), F.lit("a").alias("src")
+    ).unionByName(corrupted)
+
+
+#: Sorted-neighborhood window sizes audited (max drives the band join).
+_SN_WINDOWS = (2, 8, 32)
+
+
+@query(
+    "linkage_sorted_neighborhood",
+    oracle=f"""
+        WITH {_TYPO_NAME_SOURCES_SQL},
         r AS (
             SELECT *, row_number() OVER (ORDER BY name, src, orig) AS rk
             FROM u
@@ -3236,28 +3251,7 @@ def linkage_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows."""
     from spark_query_engine.operators import linkage as L
 
-    names = (
-        load(spark, sf_dir, "part")
-        .select(F.col("p_name").alias("name"))
-        .distinct()
-    )
-    pos = names.withColumn(
-        "p",
-        F.conv(F.substring(F.md5("name"), 1, 8), 16, 10).cast("long")
-        % (F.length("name") - F.lit(2))
-        + F.lit(2),
-    )
-    corrupted = pos.select(
-        F.concat(
-            F.expr("substring(name, 1, CAST(p - 1 AS INT))"),
-            F.expr("substring(name, CAST(p + 1 AS INT), 1000000)"),
-        ).alias("name"),
-        F.col("name").alias("orig"),
-        F.lit("b").alias("src"),
-    )
-    u = names.select(
-        "name", F.col("name").alias("orig"), F.lit("a").alias("src")
-    ).unionByName(corrupted)
+    u = _typo_name_sources(spark, sf_dir)
     # lazy persist (r9, the entity_resolution lesson): the n_names
     # count below populates the cache in the same job, and the band
     # self-join's two branches + final agg reuse it — everything past
@@ -3378,19 +3372,36 @@ def data_kanonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "events_cusum_drift",
-    oracle="""
-        WITH ev AS (SELECT event_id,
-                           CAST(date_trunc('microseconds', ts) AS TIMESTAMP)
-                               AS ts,
-                           user_id, event_type, value, props FROM events),
-        d AS (
+#: DuckDB twin of ``_daily_type_cents`` over an ``ev`` CTE of events.
+_DAILY_TYPE_CENTS_SQL = """d AS (
             SELECT event_type, CAST(date_trunc('day', ts) AS DATE) AS day,
                    CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT)
                        AS vq
             FROM ev GROUP BY 1, 2
-        ),
+        )"""
+
+
+def _daily_type_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(event_type, day, vq): each event type's daily value total in
+    exact integer cents — the series every drift monitor reads."""
+    e = load(spark, sf_dir, "events")
+    return e.groupBy(
+        "event_type", F.to_date(F.date_trunc("day", "ts")).alias("day")
+    ).agg(
+        F.sum(F.round(F.col("value") * 100, 0).cast("bigint"))
+        .cast("bigint")
+        .alias("vq")
+    )
+
+
+@query(
+    "events_cusum_drift",
+    oracle=f"""
+        WITH ev AS (SELECT event_id,
+                           CAST(date_trunc('microseconds', ts) AS TIMESTAMP)
+                               AS ts,
+                           user_id, event_type, value, props FROM events),
+        {_DAILY_TYPE_CENTS_SQL},
         t AS (
             SELECT event_type,
                    CAST(COUNT(*) AS BIGINT) AS n,
@@ -3446,14 +3457,7 @@ def events_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     from identical integers. Scale: two shuffles (the day rollup,
     the per-type window partition); series per partition = days,
     bounded."""
-    e = load(spark, sf_dir, "events")
-    d = e.groupBy(
-        "event_type", F.to_date(F.date_trunc("day", "ts")).alias("day")
-    ).agg(
-        F.sum(F.round(F.col("value") * 100, 0).cast("bigint"))
-        .cast("bigint")
-        .alias("vq")
-    )
+    d = _daily_type_cents(spark, sf_dir)
     t = d.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("vq").cast("bigint").alias("s"),
@@ -3487,16 +3491,11 @@ def events_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "events_trend_slope",
-    oracle="""
+    oracle=f"""
         WITH ev AS (SELECT CAST(date_trunc('microseconds', ts) AS TIMESTAMP)
                                AS ts,
                            event_type, value FROM events),
-        d AS (
-            SELECT event_type, CAST(date_trunc('day', ts) AS DATE) AS day,
-                   CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT)
-                       AS vq
-            FROM ev GROUP BY 1, 2
-        ),
+        {_DAILY_TYPE_CENTS_SQL},
         x AS (
             SELECT event_type, vq,
                    CAST(ROW_NUMBER() OVER (PARTITION BY event_type
@@ -3544,14 +3543,7 @@ def events_trend_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the day rollup shuffle + a per-type moment aggregate; the
     window assigning day indexes partitions by type. Slope is in
     original value units per day."""
-    e = load(spark, sf_dir, "events")
-    d = e.groupBy(
-        "event_type", F.to_date(F.date_trunc("day", "ts")).alias("day")
-    ).agg(
-        F.sum(F.round(F.col("value") * 100, 0).cast("bigint"))
-        .cast("bigint")
-        .alias("vq")
-    )
+    d = _daily_type_cents(spark, sf_dir)
     x = d.select(
         "event_type",
         "vq",
@@ -3724,33 +3716,8 @@ def corpus_pack_utilization(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ndcg_oracle() -> str:
-    from spark_query_engine.queries.similarity import (
-        _NPLANES_EXPR,
-        _planes_values_sql,
-    )
-
     return f"""
-        WITH planes(p, d, w) AS (VALUES {_planes_values_sql()}),
-        v AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS vec
-              FROM embeddings),
-        dots AS (SELECT e.id, pl.p, SUM(pl.w * e.vec[pl.d + 1]) AS dot
-                 FROM v e, planes pl
-                 WHERE pl.p < {_NPLANES_EXPR}
-                 GROUP BY 1, 2),
-        buckets AS (SELECT id,
-                           SUM(CASE WHEN dot > 0 THEN (1::BIGINT << p)
-                               ELSE 0 END) AS bucket
-                    FROM dots GROUP BY id),
-        q AS (SELECT v.id AS qid, v.vec AS qvec, b.bucket AS qbucket
-              FROM v JOIN buckets b USING (id) WHERE v.id < {_NQ}),
-        corpus AS (SELECT v.id, v.vec, b.bucket
-                   FROM v JOIN buckets b USING (id) WHERE v.id >= {_NQ}),
-        truth AS (SELECT qid, id FROM (
-            SELECT q.qid, c.id,
-                   ROW_NUMBER() OVER (PARTITION BY q.qid
-                       ORDER BY ROUND(list_cosine_similarity(
-                                    c.vec, q.qvec), 6) DESC, c.id) AS rn
-            FROM corpus c CROSS JOIN q) WHERE rn <= {_BATCH_K}),
+        {_lsh_eval_oracle_ctes()}
         approx AS (SELECT qid, id, rn FROM (
             SELECT qid, id,
                    ROW_NUMBER() OVER (PARTITION BY qid
@@ -3792,35 +3759,7 @@ def ann_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums justification) — and the rank integers themselves are exact.
     Plan shape identical to ann_recall_eval: broadcast query batch,
     bucket equi-join probe, per-query rank windows."""
-    from spark_query_engine.queries.similarity import _PLANES, _n_planes
-
-    emb = load(spark, sf_dir, "embeddings")
-    planes = _PLANES[: _n_planes(footer_rows(spark, sf_dir, "embeddings"))]
-    bucketed = S.lsh_bucket(emb, "vec_id", "embedding", planes)
-    qbatch = bucketed.where(F.col("id") < _NQ).select(
-        F.col("id").alias("qid"),
-        F.col("vec").alias("qvec"),
-        F.col("bucket").alias("qbucket"),
-    )
-    corpus = bucketed.where(F.col("id") >= _NQ)
-    sim = F.expr(f"round({cosine('vec', 'qvec')}, 6)")
-    win = Window.partitionBy("qid").orderBy(
-        F.col("cos_sim").desc(), F.col("id")
-    )
-    truth = (
-        corpus.crossJoin(F.broadcast(qbatch.select("qid", "qvec")))
-        .select("qid", "id", sim.alias("cos_sim"))
-        .withColumn("rn", F.row_number().over(win))
-        .where(F.col("rn") <= _BATCH_K)
-        .select("qid", "id")
-    )
-    approx = (
-        corpus.join(F.broadcast(qbatch), F.col("bucket") == F.col("qbucket"))
-        .select("qid", "id", sim.alias("cos_sim"))
-        .withColumn("rn", F.row_number().over(win))
-        .where(F.col("rn") <= _BATCH_K)
-        .select("qid", "id", "rn")
-    )
+    qbatch, _cand, approx, truth = _lsh_probe_eval(spark, sf_dir)
     rel = approx.join(truth, ["qid", "id"])
     gains = rel.groupBy("qid").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_hits"),
@@ -3879,16 +3818,9 @@ def _casc_k(n: int) -> int:
             WHERE len(w) >= 3
         ),
         sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
-        inter AS (
-            SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_inter
-            FROM sh a JOIN sh b
-              ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-            GROUP BY 1, 2
-        ),
+        {_SHINGLE_INTER},
         d2 AS (
-            SELECT DISTINCT id_b AS doc_id FROM inter
-            JOIN sizes za ON za.doc_id = id_a
-            JOIN sizes zb ON zb.doc_id = id_b
+            SELECT DISTINCT id_b AS doc_id {_INTER_SIZES}
             WHERE ROUND(n_inter * 1.0 / (za.n_sh + zb.n_sh - n_inter), 6)
                   >= {_CASC_J}
         ),
@@ -4141,16 +4073,11 @@ def corpus_preference_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "events_snaive_backtest",
-    oracle="""
+    oracle=f"""
         WITH ev AS (SELECT CAST(date_trunc('microseconds', ts) AS TIMESTAMP)
                                AS ts,
                            event_type, value FROM events),
-        d AS (
-            SELECT event_type, CAST(date_trunc('day', ts) AS DATE) AS day,
-                   CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT)
-                       AS vq
-            FROM ev GROUP BY 1, 2
-        ),
+        {_DAILY_TYPE_CENTS_SQL},
         j AS (
             SELECT a.event_type, a.day, a.vq,
                    b.vq AS pred,
@@ -4180,14 +4107,7 @@ def events_snaive_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     one aggregate; completes the monitoring trio (CUSUM = step
     drift, trend slope = gradual drift, snaive error = how
     predictable the series even is)."""
-    e = load(spark, sf_dir, "events")
-    d = e.groupBy(
-        "event_type", F.to_date(F.date_trunc("day", "ts")).alias("day")
-    ).agg(
-        F.sum(F.round(F.col("value") * 100, 0).cast("bigint"))
-        .cast("bigint")
-        .alias("vq")
-    )
+    d = _daily_type_cents(spark, sf_dir)
     a, b = d.alias("a"), d.alias("b")
     j = a.join(
         b,
@@ -4215,11 +4135,9 @@ _KCORE_K, _KCORE_R = 3, 6
 
 def _kcore_oracle() -> str:
     parts = [
-        """ed AS MATERIALIZED (
+        f"""ed AS MATERIALIZED (
             SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-            FROM lineitem a JOIN lineitem b
-              ON a.l_orderkey = b.l_orderkey
-             AND a.l_partkey < b.l_partkey)"""
+            {_COPURCHASE_JOIN_SQL})"""
     ]
     prev = "ed"
     for r in range(1, _KCORE_R + 1):
@@ -4285,18 +4203,7 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     ways (measured 84.7 s vs 5.0 s); delta-peeling sidesteps it by
     never rewriting edges at all."""
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    a, b = li.alias("a"), li.alias("b")
-    ed = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(
-            F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v")
-        )
-        .distinct()
-    )
+    ed = copurchase_pairs(li).distinct()
     par = spark.sparkContext.defaultParallelism
     sym = (
         ed.union(ed.select(F.col("v").alias("u"), F.col("u").alias("v")))
@@ -4598,16 +4505,11 @@ def data_export_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "events_anomaly_mad",
-    oracle="""
+    oracle=f"""
         WITH ev AS (SELECT CAST(date_trunc('microseconds', ts) AS TIMESTAMP)
                                AS ts,
                            event_type, value FROM events),
-        d AS (
-            SELECT event_type, CAST(date_trunc('day', ts) AS DATE) AS day,
-                   CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT)
-                       AS vq
-            FROM ev GROUP BY 1, 2
-        ),
+        {_DAILY_TYPE_CENTS_SQL},
         med AS (SELECT event_type, median(vq) AS m FROM d GROUP BY 1),
         dev AS (
             SELECT d.event_type, d.day, d.vq, med.m,
@@ -4638,14 +4540,7 @@ def events_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     deviations are exact, and the 3·1.4826 gate multiplies identical
     values once. Scale: day rollup + two per-type median aggregates
     + one join — output bounded by types × days."""
-    e = load(spark, sf_dir, "events")
-    d = e.groupBy(
-        "event_type", F.to_date(F.date_trunc("day", "ts")).alias("day")
-    ).agg(
-        F.sum(F.round(F.col("value") * 100, 0).cast("bigint"))
-        .cast("bigint")
-        .alias("vq")
-    )
+    d = _daily_type_cents(spark, sf_dir)
     med = d.groupBy("event_type").agg(F.median("vq").alias("m"))
     dev = d.join(med, "event_type").select(
         "event_type",
@@ -4669,12 +4564,10 @@ def events_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "graph_degree_powerlaw",
-    oracle="""
+    oracle=f"""
         WITH ed AS (
             SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-            FROM lineitem a JOIN lineitem b
-              ON a.l_orderkey = b.l_orderkey
-             AND a.l_partkey < b.l_partkey
+            {_COPURCHASE_JOIN_SQL}
         ),
         sym AS (SELECT u FROM ed UNION ALL SELECT v FROM ed),
         deg AS (SELECT u, COUNT(*) AS d FROM sym GROUP BY u),
@@ -4711,18 +4604,7 @@ def graph_degree_powerlaw(spark: SparkSession, sf_dir: str) -> DataFrame:
     themselves are exact integers. Scale: one edge build, one degree
     aggregate, one bucket rollup — the histogram is audit-sized."""
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    a, b = li.alias("a"), li.alias("b")
-    ed = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(
-            F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v")
-        )
-        .distinct()
-    )
+    ed = copurchase_pairs(li).distinct()
     sym = ed.select("u").unionAll(ed.select(F.col("v").alias("u")))
     deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
     hist = deg.groupBy("d").agg(F.count(F.lit(1)).cast("bigint").alias("n_nodes"))
@@ -5236,11 +5118,7 @@ def _aa_weight_values() -> str:
     "graph_link_prediction",
     oracle=f"""
         WITH ed0 AS (
-            SELECT DISTINCT LEAST(a.l_partkey, b.l_partkey) AS u,
-                            GREATEST(a.l_partkey, b.l_partkey) AS v
-            FROM lineitem a JOIN lineitem b
-              ON a.l_orderkey = b.l_orderkey
-             AND a.l_partkey < b.l_partkey
+            {_COPURCHASE_EDGES_SQL}
         ),
         ed AS MATERIALIZED (
             SELECT u, v FROM ed0
@@ -5306,16 +5184,8 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     weight relation is {cap} rows, broadcast); top-k plans as
     TakeOrderedAndProject, never a global sort."""
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    a, b = li.alias("a"), li.alias("b")
     ed = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(
-            F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v")
-        )
+        copurchase_pairs(li)
         # sparsify BEFORE the distinct: the filter is a deterministic
         # function of (u, v), so order is immaterial — but filtering
         # first sends 1/mod of the pair volume into the dedup shuffle
@@ -5938,21 +5808,7 @@ _FS_W = 8
 @query(
     "linkage_fellegi_sunter",
     oracle=f"""
-        WITH names AS (SELECT DISTINCT p_name AS name FROM part),
-        pos AS (
-            SELECT name,
-                   2 + (('0x' || substr(md5(name), 1, 8))::BIGINT
-                        % (length(name) - 2)) AS p
-            FROM names
-        ),
-        u AS (
-            SELECT name, name AS orig, 'a' AS src FROM names
-            UNION ALL
-            SELECT substr(name, 1, CAST(p - 1 AS INT))
-                   || substr(name, CAST(p + 1 AS INT), 1000000) AS name,
-                   name AS orig, 'b' AS src
-            FROM pos
-        ),
+        WITH {_TYPO_NAME_SOURCES_SQL},
         r AS (
             SELECT *, row_number() OVER (ORDER BY name, src, orig) AS rk
             FROM u
@@ -6070,28 +5926,7 @@ def linkage_fellegi_sunter(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast state; scoring is one scan of the pair relation."""
     from spark_query_engine.operators import linkage as L
 
-    names = (
-        load(spark, sf_dir, "part")
-        .select(F.col("p_name").alias("name"))
-        .distinct()
-    )
-    pos = names.withColumn(
-        "p",
-        F.conv(F.substring(F.md5("name"), 1, 8), 16, 10).cast("long")
-        % (F.length("name") - F.lit(2))
-        + F.lit(2),
-    )
-    corrupted = pos.select(
-        F.concat(
-            F.expr("substring(name, 1, CAST(p - 1 AS INT))"),
-            F.expr("substring(name, CAST(p + 1 AS INT), 1000000)"),
-        ).alias("name"),
-        F.col("name").alias("orig"),
-        F.lit("b").alias("src"),
-    )
-    u = names.select(
-        "name", F.col("name").alias("orig"), F.lit("a").alias("src")
-    ).unionByName(corrupted)
+    u = _typo_name_sources(spark, sf_dir)
     ranked = L.global_rank(
         u, ["name", "src", "orig"], rank_col="rk",
         rows_hint=2 * footer_rows(spark, sf_dir, "part"),
@@ -6723,11 +6558,7 @@ _AA_EVAL_MOD = 5
     "graph_linkpred_eval",
     oracle=f"""
         WITH ed0 AS (
-            SELECT DISTINCT LEAST(a.l_partkey, b.l_partkey) AS u,
-                            GREATEST(a.l_partkey, b.l_partkey) AS v
-            FROM lineitem a JOIN lineitem b
-              ON a.l_orderkey = b.l_orderkey
-             AND a.l_partkey < b.l_partkey
+            {_COPURCHASE_EDGES_SQL}
         ),
         ed AS MATERIALIZED (
             SELECT u, v,
@@ -6811,7 +6642,6 @@ def graph_linkpred_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     the parent — the holdout adds one anti-join and one equi-join
     against the O(|test|) relation."""
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    a, b = li.alias("a"), li.alias("b")
     keep = (
         F.conv(
             F.substring(
@@ -6854,14 +6684,7 @@ def graph_linkpred_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         == 0
     )
     ed = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(
-            F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v")
-        )
+        copurchase_pairs(li)
         .where(keep)
         .distinct()
         .withColumn("is_test", is_test)
@@ -7640,15 +7463,32 @@ def events_item_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "stats_spearman_daily",
-    oracle=f"""
-        WITH daily AS (
+#: DuckDB twin of ``_daily_events_users``.
+_DAILY_EVENTS_USERS_SQL = f"""daily AS (
             SELECT CAST(date_trunc('day', ts) AS DATE) AS d,
                    COUNT(*) AS x,
                    COUNT(DISTINCT user_id) AS y
             FROM ({EVENTS_ORACLE}) e GROUP BY 1
-        ),
+        )"""
+
+
+def _daily_events_users(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(d, x, y): events and distinct users per day — the paired
+    daily series the rank-correlation queries compare."""
+    return (
+        load(spark, sf_dir, "events")
+        .groupBy(F.date_trunc("day", "ts").cast("date").alias("d"))
+        .agg(
+            F.count(F.lit(1)).alias("x"),
+            F.countDistinct("user_id").alias("y"),
+        )
+    )
+
+
+@query(
+    "stats_spearman_daily",
+    oracle=f"""
+        WITH {_DAILY_EVENTS_USERS_SQL},
         r AS (
             SELECT d, x, y,
                    2 * (SELECT COUNT(*) FROM daily b WHERE b.x < daily.x)
@@ -7692,14 +7532,7 @@ def stats_spearman_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     joining the O(days) relation against its own value-count
     marginals (no global window), and moments are one aggregate of
     the bounded series — the ACF/Theil-Sen daily-series pattern."""
-    daily = (
-        load(spark, sf_dir, "events")
-        .groupBy(F.date_trunc("day", "ts").cast("date").alias("d"))
-        .agg(
-            F.count(F.lit(1)).alias("x"),
-            F.countDistinct("user_id").alias("y"),
-        )
-    )
+    daily = _daily_events_users(spark, sf_dir)
     def rank2(col):
         vc = daily.groupBy(F.col(col).alias("v")).agg(
             F.count(F.lit(1)).alias("c")
@@ -7881,12 +7714,7 @@ def events_holt_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "stats_kendall_tau",
     oracle=f"""
-        WITH daily AS (
-            SELECT CAST(date_trunc('day', ts) AS DATE) AS d,
-                   COUNT(*) AS x,
-                   COUNT(DISTINCT user_id) AS y
-            FROM ({EVENTS_ORACLE}) e GROUP BY 1
-        ),
+        WITH {_DAILY_EVENTS_USERS_SQL},
         p AS (
             SELECT CASE WHEN (a.x - b.x) * (a.y - b.y) > 0
                         THEN 1 ELSE 0 END AS conc,
@@ -7929,14 +7757,7 @@ def stats_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the pair join is over the O(days) daily AGGREGATE
     relation (the Theil-Sen bounded C(days,2) fan-out), never over
     events; the data-plane cost is one daily groupBy."""
-    daily = (
-        load(spark, sf_dir, "events")
-        .groupBy(F.date_trunc("day", "ts").cast("date").alias("d"))
-        .agg(
-            F.count(F.lit(1)).alias("x"),
-            F.countDistinct("user_id").alias("y"),
-        )
-    )
+    daily = _daily_events_users(spark, sf_dir)
     a = daily.select(
         F.col("d").alias("da"), F.col("x").alias("xa"), F.col("y").alias("ya")
     )
@@ -8209,21 +8030,7 @@ def data_group_split_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "pipeline_entity_resolution",
     oracle=f"""
-        WITH RECURSIVE names AS (SELECT DISTINCT p_name AS name FROM part),
-        pos AS (
-            SELECT name,
-                   2 + (('0x' || substr(md5(name), 1, 8))::BIGINT
-                        % (length(name) - 2)) AS p
-            FROM names
-        ),
-        u AS (
-            SELECT name, name AS orig, 'a' AS src FROM names
-            UNION ALL
-            SELECT substr(name, 1, CAST(p - 1 AS INT))
-                   || substr(name, CAST(p + 1 AS INT), 1000000) AS name,
-                   name AS orig, 'b' AS src
-            FROM pos
-        ),
+        WITH RECURSIVE {_TYPO_NAME_SOURCES_SQL},
         r AS (
             SELECT *, row_number() OVER (ORDER BY name, src, orig) AS rk
             FROM u
@@ -8291,28 +8098,7 @@ def pipeline_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     the whole pipeline is hash-verified end to end."""
     from spark_query_engine.operators import linkage as L
 
-    names = (
-        load(spark, sf_dir, "part")
-        .select(F.col("p_name").alias("name"))
-        .distinct()
-    )
-    pos = names.withColumn(
-        "p",
-        F.conv(F.substring(F.md5("name"), 1, 8), 16, 10).cast("long")
-        % (F.length("name") - F.lit(2))
-        + F.lit(2),
-    )
-    corrupted = pos.select(
-        F.concat(
-            F.expr("substring(name, 1, CAST(p - 1 AS INT))"),
-            F.expr("substring(name, CAST(p + 1 AS INT), 1000000)"),
-        ).alias("name"),
-        F.col("name").alias("orig"),
-        F.lit("b").alias("src"),
-    )
-    u = names.select(
-        "name", F.col("name").alias("orig"), F.lit("a").alias("src")
-    ).unionByName(corrupted)
+    u = _typo_name_sources(spark, sf_dir)
     ranked = L.global_rank(
         u,
         ["name", "src", "orig"],
@@ -8589,14 +8375,38 @@ def corpus_perceptron_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-@query(
-    "events_survival_km",
-    oracle=f"""
-        WITH RECURSIVE ev AS (
+#: DuckDB twin of ``_user_day_events``.
+_USER_DAY_EVENTS_SQL = f"""ev AS (
             SELECT user_id, event_type,
                    CAST(date_trunc('day', ts) AS DATE) AS d
             FROM ({EVENTS_ORACLE}) e
-        ),
+        )"""
+
+
+def _user_day_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(user_id, event_type, d): every event at day grain."""
+    return load(spark, sf_dir, "events").select(
+        "user_id",
+        "event_type",
+        F.date_trunc("day", "ts").cast("date").alias("d"),
+    )
+
+
+def _first_and_purchase_day(ev: DataFrame) -> DataFrame:
+    """(user_id, first_day, purch_day) over ``_user_day_events``: a
+    user's first active day and first purchase day (NULL if none)."""
+    return ev.groupBy("user_id").agg(
+        F.min("d").alias("first_day"),
+        F.min(
+            F.when(F.col("event_type") == "purchase", F.col("d"))
+        ).alias("purch_day"),
+    )
+
+
+@query(
+    "events_survival_km",
+    oracle=f"""
+        WITH RECURSIVE {_USER_DAY_EVENTS_SQL},
         gm AS (SELECT MAX(d) AS dmax FROM ev),
         pu AS (
             SELECT user_id,
@@ -8668,18 +8478,9 @@ def events_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
     — driver state is that bounded table, the corpus_bpe_train
     discipline. The global cumsum window also runs on it (bounded
     metadata, never events)."""
-    ev = load(spark, sf_dir, "events").select(
-        "user_id",
-        "event_type",
-        F.date_trunc("day", "ts").cast("date").alias("d"),
-    )
+    ev = _user_day_events(spark, sf_dir)
     gm = ev.agg(F.max("d").alias("dmax"))
-    pu = ev.groupBy("user_id").agg(
-        F.min("d").alias("first_day"),
-        F.min(
-            F.when(F.col("event_type") == "purchase", F.col("d"))
-        ).alias("purch_day"),
-    )
+    pu = _first_and_purchase_day(ev)
     subj = pu.crossJoin(F.broadcast(gm)).select(
         F.when(
             F.col("purch_day").isNotNull(),
@@ -8738,11 +8539,7 @@ def events_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "stats_logrank_cohorts",
     oracle=f"""
-        WITH RECURSIVE ev AS (
-            SELECT user_id, event_type,
-                   CAST(date_trunc('day', ts) AS DATE) AS d
-            FROM ({EVENTS_ORACLE}) e
-        ),
+        WITH RECURSIVE {_USER_DAY_EVENTS_SQL},
         gm AS (SELECT MAX(d) AS dmax FROM ev),
         pu AS (
             SELECT user_id,
@@ -8842,18 +8639,9 @@ def stats_logrank_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: identical cost model to events_survival_km — two
     user-keyed aggregates on the data plane, everything else on the
     bounded risk table."""
-    ev = load(spark, sf_dir, "events").select(
-        "user_id",
-        "event_type",
-        F.date_trunc("day", "ts").cast("date").alias("d"),
-    )
+    ev = _user_day_events(spark, sf_dir)
     gm = ev.agg(F.max("d").alias("dmax"))
-    pu = ev.groupBy("user_id").agg(
-        F.min("d").alias("first_day"),
-        F.min(
-            F.when(F.col("event_type") == "purchase", F.col("d"))
-        ).alias("purch_day"),
-    )
+    pu = _first_and_purchase_day(ev)
     pu = pu.withColumn("grp", (F.col("user_id") % 2).cast("bigint"))
     subj = pu.crossJoin(F.broadcast(gm)).select(
         "grp",
@@ -9456,11 +9244,7 @@ def stats_jackknife_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "stats_msprt_sequential",
     oracle=f"""
-        WITH ev AS (
-            SELECT user_id, event_type,
-                   CAST(date_trunc('day', ts) AS DATE) AS d
-            FROM ({EVENTS_ORACLE}) e
-        ),
+        WITH {_USER_DAY_EVENTS_SQL},
         pu AS (
             SELECT user_id, CAST(user_id % 2 AS BIGINT) AS arm,
                    MIN(d) AS first_day,
@@ -9553,17 +9337,8 @@ def stats_msprt_sequential(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one user-keyed aggregate on the data plane; the sequential
     monitor itself is a window over the O(days) grid — exactly the
     shape of a daily metrics rollup at any corpus size."""
-    ev = load(spark, sf_dir, "events").select(
-        "user_id",
-        "event_type",
-        F.date_trunc("day", "ts").cast("date").alias("d"),
-    )
-    pu = ev.groupBy("user_id").agg(
-        F.min("d").alias("first_day"),
-        F.min(
-            F.when(F.col("event_type") == "purchase", F.col("d"))
-        ).alias("purch_day"),
-    )
+    ev = _user_day_events(spark, sf_dir)
+    pu = _first_and_purchase_day(ev)
     pu = pu.withColumn("arm", (F.col("user_id") % 2).cast("bigint"))
     days = ev.select("d").distinct()
     arms = spark.createDataFrame([(0,), (1,)], "arm bigint")
@@ -9770,11 +9545,7 @@ def events_policy_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "stats_qini_uplift",
     oracle=f"""
-        WITH ev AS (
-            SELECT user_id, event_type,
-                   CAST(date_trunc('day', ts) AS DATE) AS d
-            FROM ({EVENTS_ORACLE}) e
-        ),
+        WITH {_USER_DAY_EVENTS_SQL},
         m AS (SELECT MIN(d) AS d0 FROM ev),
         u AS (
             SELECT user_id,
@@ -9843,11 +9614,7 @@ def stats_qini_uplift(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism: all cells and cumulative sums are exact BIGINTs;
     uplift and Qini are single divisions of exact integers per row,
     floor-half-up 6dp."""
-    ev = load(spark, sf_dir, "events").select(
-        "user_id",
-        "event_type",
-        F.date_trunc("day", "ts").cast("date").alias("d"),
-    )
+    ev = _user_day_events(spark, sf_dir)
     m = ev.agg(F.min("d").alias("d0"))
     u = (
         ev.crossJoin(F.broadcast(m))
@@ -10056,20 +9823,7 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey"
     ).distinct()
-    a, b = li.alias("a"), li.alias("b")
-    ed = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(
-            F.col("a.l_partkey").alias("u"),
-            F.col("b.l_partkey").alias("v"),
-        )
-        .distinct()
-        .persist()
-    )
+    ed = copurchase_pairs(li).distinct().persist()
     sym = ed.unionByName(
         ed.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )

@@ -45,7 +45,6 @@ def test_driver_window_prioritizes_unverified_families():
     from spark_query_engine.queries import (
         REGISTRY,
         _REPIN_REWRITTEN,
-        _WINDOW_FIRST,
         _driver_verified,
         _ensure_loaded,
         _family_rank,
@@ -63,12 +62,6 @@ def test_driver_window_prioritizes_unverified_families():
             i for i, f in enumerate(flags) if not f
         ), "a verified query registered before an unverified one"
     unv = [n for n, f in zip(names, flags) if not f]
-    window = set(names[: min(50, len(names))])
-    # every verdict-pinned name that still lacks a green row sits inside
-    # the driver's ~50-entry window
-    pinned_unv = [n for n in _WINDOW_FIRST if n in REGISTRY and n not in verified]
-    out = [n for n in pinned_unv if n not in window]
-    assert not out, f"verdict-pinned queries outside the driver window: {out}"
     # Two-phase policy: every KNOWN family (the pre-round-3 backlog)
     # with an unverified query has a representative in the window;
     # modules outside _MODULE_PRIORITY (this round's additions) queue
@@ -82,9 +75,9 @@ def test_driver_window_prioritizes_unverified_families():
     assert not missing, f"families with no query in the driver window: {missing}"
     # no unknown-family (new-module) query registers before any
     # known-family unverified query (re-pinned rewrites are front-
-    # pinned by design and excluded like the verdict pins)
-    pinned_all = set(pinned_unv) | set(_REPIN_REWRITTEN)
-    ranks = [_family_rank(n) for n in unv if n not in pinned_all]
+    # pinned by design and excluded)
+    pinned = set(_REPIN_REWRITTEN)
+    ranks = [_family_rank(n) for n in unv if n not in pinned]
     if any(r >= known_rank for r in ranks) and any(r < known_rank for r in ranks):
         first_new = ranks.index(next(r for r in ranks if r >= known_rank))
         last_old = max(i for i, r in enumerate(ranks) if r < known_rank)
@@ -95,7 +88,7 @@ def test_driver_window_prioritizes_unverified_families():
     # appear once (round-robin fairness)
     tail = [
         n for n in unv
-        if n not in pinned_all and _family_rank(n) < known_rank
+        if n not in pinned and _family_rank(n) < known_rank
     ]
     tail_fams = {_family_rank(n) for n in tail}
     first_cycle = [_family_rank(n) for n in tail[: len(tail_fams)]]

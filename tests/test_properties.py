@@ -1017,3 +1017,63 @@ def test_winsorized_bounds_pin_boundary_mass(spark):
         f"SELECT COUNT(*) FROM t WHERE value < {dlo!r}"
     ).fetchone()
     assert n_clip_spark == n_clip_duck == 0
+
+
+@given(
+    rows=st.lists(
+        st.tuples(st.integers(0, 3), st.integers(0, 6)),
+        min_size=1,
+        max_size=30,
+    )
+)
+@settings(**SETTINGS)
+def test_copurchase_pairs_match_nested_loop(spark, rows):
+    """graph.copurchase_pairs must emit exactly the (u, v), u < v, pairs
+    a nested loop over each order's basket finds, with multiplicity:
+    a part repeated inside one order and a pair shared by several
+    orders both repeat the edge, because the helper leaves dedup to
+    its callers."""
+    from spark_query_engine.operators.graph import copurchase_pairs
+
+    expected = Counter(
+        (p1, p2)
+        for o1, p1 in rows
+        for o2, p2 in rows
+        if o1 == o2 and p1 < p2
+    )
+    li = spark.createDataFrame(rows, "l_orderkey long, l_partkey long")
+    got = Counter((r["u"], r["v"]) for r in copurchase_pairs(li).collect())
+    assert got == expected
+
+
+@given(
+    rows=st.lists(
+        st.tuples(st.integers(0, 8), st.sampled_from("abcdefg")),
+        min_size=1,
+        max_size=40,
+    )
+)
+@settings(**SETTINGS)
+def test_shingle_overlap_matches_set_arithmetic(spark, rows):
+    """dedup.shingle_overlap (the Jaccard and containment substrate)
+    must give, for every id pair sharing a shingle, n_inter = |A ∩ B|
+    and na, nb = |A|, |B| — and no row for pairs sharing nothing."""
+    from spark_query_engine.operators.dedup import shingle_overlap
+
+    sets: dict[int, set[str]] = {}
+    for i, s in rows:
+        sets.setdefault(i, set()).add(s)
+    expected = {
+        (a, b, len(sets[a] & sets[b]), len(sets[a]), len(sets[b]))
+        for a in sets
+        for b in sets
+        if a < b and sets[a] & sets[b]
+    }
+    sh = spark.createDataFrame(
+        [(i, s) for i in sets for s in sets[i]], "id long, shingle string"
+    )
+    got = {
+        (r["id_a"], r["id_b"], r["n_inter"], r["na"], r["nb"])
+        for r in shingle_overlap(sh).collect()
+    }
+    assert got == expected
