@@ -40,10 +40,10 @@ def widen(df: DataFrame, min_factor: int = 1) -> DataFrame:
 
 def nested_sql(nested) -> str:
     """Render a nested Python float list as a SQL ``array(array(...))``
-    literal STRING — the text form behind ``nested_lit``, exposed so
-    whole-expression ``F.expr`` builders (r11: the PQ training-loop
-    fold rewrite) can splice codebook literals into a single SQL
-    string instead of composing Column objects through py4j. Finite
+    literal STRING, so whole-expression ``F.expr`` builders (r11: the
+    PQ training-loop fold rewrite) can splice codebook literals into a
+    single SQL string instead of composing Column objects through
+    py4j (``F.lit`` crosses the bridge once per element). Finite
     doubles only; ``repr`` round-trips them exactly (both Python and
     Spark parse a decimal string to the nearest IEEE double)."""
     if isinstance(nested, (list, tuple)):
@@ -71,27 +71,6 @@ def d2_sql(a: str, b: str) -> str:
     )
 
 
-def nested_lit(nested):
-    """A nested-array literal column built JVM-side via ONE ``F.expr``
-    call instead of ``F.lit``'s element-by-element py4j construction.
-
-    ``F.lit`` on a nested Python list crosses the py4j bridge once per
-    ELEMENT (~0.7-1.2 ms each, measured: 1.19 s for a 16×16×4 PQ
-    codebook, 9.07 s for a 313×64 k-means codebook — round 7's
-    dominant "fit constant"). Rendering the same payload as a SQL
-    ``array(array(...))`` expression string is one py4j call; the
-    JVM parses it in milliseconds and ConstantFolding collapses the
-    CreateArray tree to the identical single Literal node during
-    optimization (value equality verified element-for-element in
-    tests). Finite doubles only — values here are always 6dp-rounded
-    model state, and ``repr`` round-trips them exactly (both Python
-    and Spark parse a decimal string to the nearest IEEE double).
-    """
-    from pyspark.sql import functions as F
-
-    return F.expr(nested_sql(nested))
-
-
 def cut_lineage(df: DataFrame, eager: bool = True) -> DataFrame:
     """Truncate a DataFrame's lineage with a checkpoint barrier,
     routed by deployment mode (r11 verdict task 2).
@@ -102,24 +81,20 @@ def cut_lineage(df: DataFrame, eager: bool = True) -> DataFrame:
     executor loss makes the data unrecoverable (guide §5). That trade
     is free on ``local[N]`` where executor == driver == one process.
 
-    Cluster: when a reliable checkpoint directory is configured —
-    ``$SPARK_QE_CHECKPOINT_DIR`` or the Spark conf
-    ``spark.spark_query_engine.checkpoint.dir`` (set either to an
-    HDFS/object-store path at submit time) — route through reliable
-    ``DataFrame.checkpoint()`` against ``sc.setCheckpointDir`` so the
-    barrier state survives executor loss. Default off locally so the
-    bench measures the same code path the driver harness times.
+    Cluster: when the Spark conf
+    ``spark.spark_query_engine.checkpoint.dir`` names a reliable
+    checkpoint directory (an HDFS/object-store path set at submit
+    time), route through reliable ``DataFrame.checkpoint()`` against
+    ``sc.setCheckpointDir`` so the barrier state survives executor
+    loss. Default off locally so the bench measures the same code path
+    the driver harness times.
 
     ``eager=False`` keeps the lazy-barrier semantics several operators
     rely on (the cut must not force a job of its own; materialization
     happens on the consumer's first action).
     """
-    import os
-
     spark = df.sparkSession
-    ckpt_dir = os.environ.get("SPARK_QE_CHECKPOINT_DIR") or spark.conf.get(
-        "spark.spark_query_engine.checkpoint.dir", None
-    )
+    ckpt_dir = spark.conf.get("spark.spark_query_engine.checkpoint.dir", None)
     if ckpt_dir:
         sc = spark.sparkContext
         # set once per context; setCheckpointDir is idempotent but

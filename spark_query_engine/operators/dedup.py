@@ -663,45 +663,25 @@ def ngram_jaccard_pairs(
 
 
 def connected_components(
-    pairs: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    max_iter: int = 25,
-    algorithm: str = "star",
-) -> DataFrame:
-    """Cluster near-duplicate pairs into components: every node gets
-    the MIN id reachable from it. Two interchangeable algorithms:
-
-    - ``star`` (default): alternating large-star/small-star (Kiveris
-      et al., "Connected Components in MapReduce and Beyond") —
-      converges in O(log n) rounds even on adversarial chain-shaped
-      graphs, each round two equi-join + min-aggregation passes.
-    - ``label``: min-label propagation — one join+min per round but
-      O(component diameter) rounds; fine for the shallow clusters
-      near-dup graphs produce, kept as the property-test twin.
-
-    Returns (id, component) for every node appearing in ``pairs``."""
-    if algorithm == "label":
-        return connected_components_label(pairs, src, dst, max_iter)
-    return connected_components_star(pairs, src, dst, max_iter)
-
-
-def connected_components_star(
     pairs: DataFrame, src: str = "id_a", dst: str = "id_b", max_iter: int = 25
 ) -> DataFrame:
-    """Large-star/small-star connected components (Kiveris et al.,
-    MapReduce & Beyond): per round, LARGE-STAR hangs every neighbor
-    LARGER than a node off the minimum of its neighborhood, then
-    SMALL-STAR re-hangs the smaller neighbors off that minimum. Both
-    steps are an equi-join of the edge list with a per-node min — the
-    same shuffle shape as min-label propagation — but the edge set
-    contracts toward min-rooted stars in O(log n) rounds REGARDLESS
-    of component diameter, which is what kills the adversarial-chain
-    case the label propagator degrades on.
+    """Cluster near-duplicate pairs into components: every node gets
+    the MIN id reachable from it.
+
+    Large-star/small-star contraction (Kiveris et al., "Connected
+    Components in MapReduce and Beyond"): per round, LARGE-STAR hangs
+    every neighbor LARGER than a node off the minimum of its
+    neighborhood, then SMALL-STAR re-hangs the smaller neighbors off
+    that minimum. Both steps are an equi-join of the edge list with a
+    per-node min — the same shuffle shape as min-label propagation —
+    but the edge set contracts toward min-rooted stars in O(log n)
+    rounds REGARDLESS of component diameter, which is what kills the
+    adversarial-chain case label propagation degrades on (O(diameter)
+    rounds).
 
     Per round: two (join + groupBy-min + distinct) passes, all
-    shuffled on node id; the edge relation persists per round with
-    ``localCheckpoint`` lineage truncation every 5 rounds. The
+    shuffled on node id; the edge relation is cut to a checkpointed
+    leaf (``cut_lineage``) every round. The
     convergence probe is a (count, xor-of-edge-hashes) scalar — the
     edge set is a fixpoint exactly when the signature repeats.
 
@@ -781,13 +761,13 @@ def connected_components_star(
         # r10: expose the fixpoint's round count (scaling evidence —
         # SCALING.md's iterative-graph table records it per scale;
         # the O(log n) claim is measured, not asserted)
-        connected_components_star.last_rounds = _i + 1
+        connected_components.last_rounds = _i + 1
         if sig == prev_sig:
             break
         prev_sig = sig
     else:
         raise RuntimeError(
-            f"connected_components_star: no fixpoint in {max_iter} "
+            f"connected_components: no fixpoint in {max_iter} "
             "rounds — raise max_iter (round count is O(log n), so "
             "this should never fire on real graphs)"
         )
@@ -802,84 +782,6 @@ def connected_components_star(
         )
     )
     return out
-
-
-def connected_components_label(
-    pairs: DataFrame, src: str = "id_a", dst: str = "id_b", max_iter: int = 25
-) -> DataFrame:
-    """Min-label propagation —
-    each round, a node adopts the smallest label among itself and its
-    neighbors; converges in O(component diameter) rounds (near-dup
-    clusters are shallow; for adversarial long-chain graphs use
-    ``connected_components_star``, which is O(log n) rounds of the
-    same join+min shape).
-
-    Per round: one equi-join (labels ⋈ edges) + one min-aggregation,
-    both shuffled on node id. Labels persist per round and the
-    previous round unpersists; ``localCheckpoint`` every 5 rounds
-    truncates the growing lineage (a real cluster job uses reliable
-    checkpointing). The convergence test is a scalar count — the only
-    driver-side value, as in any iterative distributed algorithm.
-
-    Returns (id, component) for every node appearing in ``pairs``.
-    """
-    e = pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v"))).persist()
-    # init label = min(self, neighbors): same shuffle as the distinct()
-    # a plain init needs, but diameter-1 components (the near-dup common
-    # case: pairs and stars) converge in the FIRST confirmation round
-    labels = (
-        sym.groupBy(F.col("u").alias("n"))
-        .agg(F.least(F.first("u"), F.min("v")).alias("label"))
-        .persist()
-    )
-    for i in range(max_iter):
-        nbr = (
-            sym.join(labels, sym["v"] == labels["n"])
-            .groupBy("u")
-            .agg(F.min("label").alias("nbr_label"))
-        )
-        new = (
-            labels.join(nbr, labels["n"] == nbr["u"], "left")
-            .select(
-                "n",
-                F.col("label").alias("old_label"),
-                F.least(
-                    F.col("label"), F.coalesce("nbr_label", "label")
-                ).alias("label"),
-            )
-            .persist()
-        )
-        if i % 5 == 4:
-            # eager localCheckpoint materializes first, then the
-            # pre-checkpoint persist handle can drop — reassigning
-            # without unpersisting would strand those cached blocks
-            cp = cut_lineage(new)
-            new.unpersist()
-            new = cp
-        changed = new.where(F.col("label") < F.col("old_label")).count()
-        labels.unpersist()
-        labels_handle = new
-        labels = new.select("n", "label")
-        if changed == 0:
-            break
-    else:
-        # Returning the partial labels would silently split components
-        # whose diameter exceeds max_iter (measured: a 1000-node chain
-        # at max_iter=25 came back as 975 bogus components). Fail loud
-        # — or use connected_components_star, whose round count is
-        # logarithmic and can't realistically hit the cap.
-        sym.unpersist()
-        raise RuntimeError(
-            f"connected_components_label: no convergence in {max_iter} "
-            "rounds (component diameter exceeds max_iter); use "
-            "connected_components_star for deep/chain-shaped graphs"
-        )
-    out = labels.select(F.col("n").alias("id"), F.col("label").alias("component"))
-    sym.unpersist()
-    # the final round's persisted relation backs the lazy result —
-    # release it when the caller drops the result
-    return release_on_drop(out, labels_handle)
 
 
 # --- embedding cosine near-dup ----------------------------------------------

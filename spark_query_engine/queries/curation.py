@@ -185,9 +185,27 @@ def corpus_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     return T.repetition_metrics(docs, "doc_id", "text")
 
 
+#: Temperature-sampling keep-rates over a ``stats(lang, n_l, n_total)``
+#: CTE: share^0.3, normalized to a 50 % corpus budget, 6dp-rounded. The
+#: text parses the same in DuckDB and Spark SQL, so the oracles and the
+#: Spark queries share it.
+_TEMPERATURE_RATES_SQL = """weights AS (
+            SELECT lang, n_l, n_total,
+                   POWER(CAST(n_l AS DOUBLE) / n_total, 0.3)
+                       / SUM(POWER(CAST(n_l AS DOUBLE) / n_total, 0.3))
+                             OVER () AS w
+            FROM stats
+        ),
+        rates AS (
+            SELECT lang,
+                   ROUND(LEAST(1.0, w * n_total * 0.5 / n_l), 6) AS rate
+            FROM weights
+        )"""
+
+
 @query(
     "corpus_curate_full",
-    oracle="""
+    oracle=f"""
         WITH d AS (
             SELECT doc_id, lang, n_chars,
                    md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')))
@@ -236,18 +254,7 @@ def corpus_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
             SELECT lang, COUNT(*) AS n_l, SUM(COUNT(*)) OVER () AS n_total
             FROM clean GROUP BY lang
         ),
-        weights AS (
-            SELECT lang, n_l, n_total,
-                   POWER(CAST(n_l AS DOUBLE) / n_total, 0.3)
-                       / SUM(POWER(CAST(n_l AS DOUBLE) / n_total, 0.3))
-                             OVER () AS w
-            FROM stats
-        ),
-        rates AS (
-            SELECT lang,
-                   ROUND(LEAST(1.0, w * n_total * 0.5 / n_l), 6) AS rate
-            FROM weights
-        )
+        {_TEMPERATURE_RATES_SQL}
         SELECT c.doc_id, c.lang, c.n_chars
         FROM clean c JOIN rates r ON c.lang = r.lang
         WHERE ('0x' || substr(md5(c.doc_id::VARCHAR), 1, 8))::BIGINT
@@ -273,7 +280,7 @@ def corpus_curate_full(spark: SparkSession, sf_dir: str) -> DataFrame:
         "repmetrics_cf"
     )
     return spark.sql(
-        """
+        f"""
         WITH reps AS (
             SELECT MIN(doc_id) AS doc_id FROM docs_cf GROUP BY norm_fp
         ),
@@ -295,18 +302,7 @@ def corpus_curate_full(spark: SparkSession, sf_dir: str) -> DataFrame:
             SELECT lang, COUNT(*) AS n_l, SUM(COUNT(*)) OVER () AS n_total
             FROM clean GROUP BY lang
         ),
-        weights AS (
-            SELECT lang, n_l, n_total,
-                   POWER(CAST(n_l AS DOUBLE) / n_total, 0.3)
-                       / SUM(POWER(CAST(n_l AS DOUBLE) / n_total, 0.3))
-                             OVER () AS w
-            FROM stats
-        ),
-        rates AS (
-            SELECT lang,
-                   ROUND(LEAST(1.0, w * n_total * 0.5 / n_l), 6) AS rate
-            FROM weights
-        )
+        {_TEMPERATURE_RATES_SQL}
         SELECT c.doc_id, c.lang, c.n_chars
         FROM clean c JOIN rates r ON c.lang = r.lang
         WHERE conv(substr(md5(CAST(c.doc_id AS STRING)), 1, 8), 16, 10)
@@ -762,24 +758,13 @@ def corpus_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "corpus_temperature_sample",
-    oracle="""
+    oracle=f"""
         WITH stats AS (
             SELECT lang, COUNT(*) AS n_l,
                    SUM(COUNT(*)) OVER () AS n_total
             FROM documents GROUP BY lang
         ),
-        weights AS (
-            SELECT lang, n_l, n_total,
-                   POWER(CAST(n_l AS DOUBLE) / n_total, 0.3)
-                       / SUM(POWER(CAST(n_l AS DOUBLE) / n_total, 0.3))
-                             OVER () AS w
-            FROM stats
-        ),
-        rates AS (
-            SELECT lang,
-                   ROUND(LEAST(1.0, w * n_total * 0.5 / n_l), 6) AS rate
-            FROM weights
-        )
+        {_TEMPERATURE_RATES_SQL}
         SELECT d.doc_id, d.lang
         FROM documents d JOIN rates r ON d.lang = r.lang
         WHERE ('0x' || substr(md5(d.doc_id::VARCHAR), 1, 8))::BIGINT
@@ -798,24 +783,13 @@ def corpus_temperature_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     making the boundary comparison integer-exact."""
     load(spark, sf_dir, "documents").createOrReplaceTempView("documents_temp")
     return spark.sql(
-        """
+        f"""
         WITH stats AS (
             SELECT lang, COUNT(*) AS n_l,
                    SUM(COUNT(*)) OVER () AS n_total
             FROM documents_temp GROUP BY lang
         ),
-        weights AS (
-            SELECT lang, n_l, n_total,
-                   POWER(CAST(n_l AS DOUBLE) / n_total, 0.3)
-                       / SUM(POWER(CAST(n_l AS DOUBLE) / n_total, 0.3))
-                             OVER () AS w
-            FROM stats
-        ),
-        rates AS (
-            SELECT lang,
-                   ROUND(LEAST(1.0, w * n_total * 0.5 / n_l), 6) AS rate
-            FROM weights
-        )
+        {_TEMPERATURE_RATES_SQL}
         SELECT d.doc_id, d.lang
         FROM documents_temp d JOIN rates r ON d.lang = r.lang
         WHERE conv(substr(md5(CAST(d.doc_id AS STRING)), 1, 8), 16, 10)

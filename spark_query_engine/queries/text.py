@@ -450,15 +450,20 @@ def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "corpus_topic_keywords",
-    oracle="""
-        WITH toks AS (
+#: DuckDB ``toks(source, tok)`` CTE: each non-empty lower-cased
+#: space-split token of ``documents`` with its source.
+_SOURCE_TOKS_SQL = """toks AS (
             SELECT source, lower(tok) AS tok FROM (
                 SELECT source, UNNEST(string_split(text, ' ')) AS tok
                 FROM documents
             ) WHERE tok <> ''
-        ),
+        )"""
+
+
+@query(
+    "corpus_topic_keywords",
+    oracle=f"""
+        WITH {_SOURCE_TOKS_SQL},
         st AS (SELECT source, tok, COUNT(*) AS c FROM toks GROUP BY 1, 2),
         stot AS (SELECT source, SUM(c) AS n FROM st GROUP BY source),
         gtot AS (SELECT tok, SUM(c) AS g FROM st GROUP BY tok),

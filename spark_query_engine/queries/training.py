@@ -43,6 +43,7 @@ from spark_query_engine.operators.dedup import cosine
 from spark_query_engine.queries import EVENTS_ORACLE, footer_rows, load, query
 from spark_query_engine.queries.dedup import _INTER_SIZES, _SHINGLE_INTER
 from spark_query_engine.queries.semantic import _kmeans_ctes
+from spark_query_engine.queries.text import _SOURCE_TOKS_SQL
 
 #: Sliding-window chunking geometry: 32-token windows, stride 24
 #: (25% overlap) — the standard LM pretraining chunker shape.
@@ -2604,7 +2605,7 @@ def graph_components_deep_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_orderkey").alias("id_a"), F.col("nxt").alias("id_b")
         )
     )
-    return D.connected_components_star(edges)
+    return D.connected_components(edges)
 
 
 @query(
@@ -4384,13 +4385,8 @@ def corpus_span_corruption(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_source_kl_divergence",
-    oracle="""
-        WITH toks AS (
-            SELECT source, lower(tok) AS tok FROM (
-                SELECT source, UNNEST(string_split(text, ' ')) AS tok
-                FROM documents
-            ) WHERE tok <> ''
-        ),
+    oracle=f"""
+        WITH {_SOURCE_TOKS_SQL},
         sc AS (SELECT source, tok, COUNT(*) AS c FROM toks GROUP BY 1, 2),
         st AS (SELECT source, SUM(c) AS n FROM sc GROUP BY source),
         gc AS (SELECT tok, SUM(c) AS g FROM sc GROUP BY tok),
@@ -4979,13 +4975,8 @@ def _mw_oracle() -> str:
     quantizes to ppm BIGINTs, each round multiplies by the integer
     factor (1e6 + klq div 2) and renormalizes to ppm — every
     cross-source sum is an exact integer sum."""
-    base = """
-        WITH toks AS (
-            SELECT source, lower(tok) AS tok FROM (
-                SELECT source, UNNEST(string_split(text, ' ')) AS tok
-                FROM documents
-            ) WHERE tok <> ''
-        ),
+    base = f"""
+        WITH {_SOURCE_TOKS_SQL},
         sc AS (SELECT source, tok, COUNT(*) AS c FROM toks GROUP BY 1, 2),
         st AS (SELECT source, SUM(c) AS n FROM sc GROUP BY source),
         gc AS (SELECT tok, SUM(c) AS g FROM sc GROUP BY tok),
@@ -5565,12 +5556,7 @@ _JSD_V = 64
 @query(
     "text_source_jsd",
     oracle=f"""
-        WITH toks AS (
-            SELECT source, lower(tok) AS tok FROM (
-                SELECT source, UNNEST(string_split(text, ' ')) AS tok
-                FROM documents
-            ) WHERE tok <> ''
-        ),
+        WITH {_SOURCE_TOKS_SQL},
         sc AS (SELECT source, tok, COUNT(*) AS c FROM toks GROUP BY 1, 2),
         gc AS (SELECT tok, SUM(c) AS g FROM sc GROUP BY tok),
         topv AS (SELECT tok FROM gc ORDER BY g DESC, tok LIMIT {_JSD_V}),

@@ -24,7 +24,7 @@ from spark_query_engine.streaming.events import (
     ols_from_moments,
     ohlc_stream,
     run_to_memory_sink,
-    per_type_counts_tws,
+    per_type_counts_stream,
     running_user_totals,
     sessionize_stream,
     sliding_counts,
@@ -41,7 +41,7 @@ __all__ = [
     "sliding_counts",
     "sessionize_stream",
     "ohlc_stream",
-    "per_type_counts_tws",
+    "per_type_counts_stream",
     "running_user_totals",
     "interval_join_streams",
     "dedup_stream",

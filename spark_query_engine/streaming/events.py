@@ -12,6 +12,12 @@ Design notes (cluster scale):
 - Sources here read a parquet directory (each file = a micro-batch
   when used with availableNow); swap for kafka/kinesis in production —
   nothing downstream changes.
+- Per-key monoid folds (counts, sums, min/max, XOR, register MAX) are
+  native streaming aggregations: the fold runs in the JVM with
+  map-side partial aggregation, and the state store holds one row per
+  key. ``applyInPandasWithState`` is kept for state that depends on
+  arrival order or is not a monoid: LSH bucket occupants, a packing
+  offset, Page's CUSUM recursion and a bottom-k set.
 """
 
 from __future__ import annotations
@@ -220,47 +226,22 @@ def sessionize_stream(
 
 
 def running_user_totals(events: DataFrame) -> DataFrame:
-    """Custom stateful operator via ``applyInPandasWithState``: a
-    per-user running (event count, value total) that survives across
-    micro-batches — the escape hatch for stateful logic that windowed
-    aggregation can't express (counters, ML feature state, CDC merge).
+    """Per-user running (event count, value total) that survives across
+    micro-batches, on Spark's native streaming aggregation: the state
+    store keeps one (count, sum) row per user_id, partitioned across
+    executors, and outputMode("update") emits each user a batch
+    changed. A null value adds 0.0; the total rounds to 2dp after the
+    aggregate, so rounding never compounds across batches.
 
-    State is partitioned by user_id across executors; each group's
-    state is a 2-tuple, read+updated once per micro-batch with Arrow
-    batch transfer (no row-at-a-time Python). Emits the updated total
-    per user per batch → use outputMode("update").
-
-    At scale: state store size is O(distinct users), bounded by an
-    eviction timeout if users churn (set GroupStateTimeout.
-    ProcessingTimeTimeout and state.setTimeoutDuration in the handler).
+    At scale: state store size is O(distinct users); put the
+    aggregation on an event-time window with a watermark to evict
+    users that churn.
     """
-    import pandas as pd  # local import: only the executor path needs it
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    def update_totals(key, pdfs, state):
-        n, total = state.get if state.exists else (0, 0.0)
-        for pdf in pdfs:
-            n += len(pdf)
-            total += float(pdf["value"].fillna(0.0).sum())
-        state.update((n, total))
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_events": [n],
-                "total_value": [round(total, 2)],
-            }
-        )
-
-    return (
-        events.select("user_id", "value")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            update_totals,
-            outputStructType="user_id long, n_events long, total_value double",
-            stateStructType="n long, total double",
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return events.groupBy("user_id").agg(
+        F.count(F.lit(1)).alias("n_events"),
+        F.round(F.sum(F.coalesce(F.col("value"), F.lit(0.0))), 2).alias(
+            "total_value"
+        ),
     )
 
 
@@ -442,10 +423,11 @@ def write_foreach_batch_parquet(
     """Production sink shape: ``foreachBatch`` hands each micro-batch
     to arbitrary batch-writer logic (here: append parquet; in
     production: MERGE into a lakehouse table, upsert to a store, ...).
-    Combined with the checkpoint, batch_id gives exactly-once:
-    replayed batches carry the same id so an idempotent writer can
-    skip them. Drains currently-available input and returns the
-    finished query."""
+    At-least-once as written: the append is blind, so a batch
+    replayed after a failure lands twice. Replayed batches carry the
+    same batch_id, so a writer that skips an id it already holds
+    would make it exactly-once. Drains currently-available input and
+    returns the finished query."""
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.withColumn("batch_id", F.lit(batch_id)).write.mode(
@@ -478,71 +460,17 @@ def run_to_memory_sink(stream_df: DataFrame, name: str, mode: str = "append"):
     return q
 
 
-def per_type_counts_tws(events: DataFrame) -> DataFrame:
-    """Per-user, per-event-type running counters on the Spark 4
-    ``transformWithStateInPandas`` API — the successor to
-    ``applyInPandasWithState`` (``running_user_totals`` above) with
-    composite state primitives instead of one monolithic tuple.
-
-    State here is a MapState keyed by event_type: RocksDB stores each
-    (user, type) entry as its own key, so an update touches ONE map
-    entry instead of rewriting the whole user blob — the difference
-    that matters when per-key state is wide (feature vectors, per-type
-    counters for thousands of types). Each micro-batch emits the
-    updated (user_id, event_type, n) rows → outputMode("update").
-
-    Requires the RocksDB state store provider
-    (``spark.sql.streaming.stateStore.providerClass``); at scale the
-    store is partitioned by user_id across executors, checkpointed
-    incrementally, and TTL-able per state (``ttlDurationMs``).
-
-    Environment note: the transformWithState driver worker speaks a
-    protobuf-based state protocol, so the API needs the ``protobuf``
-    package at runtime. This container ships without it (the
-    equivalence test skips, mirroring the Pillow-gated image codec);
-    on any standard Spark 4 cluster the operator runs as-is, and
-    ``running_user_totals`` above covers the same semantics on the
-    protobuf-free ``applyInPandasWithState`` path.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class TypeCounter(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._counts = handle.getMapState(
-                "type_counts", "event_type string", "n bigint"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            touched: dict[str, int] = {}
-            for pdf in rows:
-                for et, c in pdf["event_type"].value_counts().items():
-                    touched[et] = touched.get(et, 0) + int(c)
-            out = []
-            for et, delta in touched.items():
-                prev = self._counts.getValue((et,))
-                n = (prev[0] if prev else 0) + delta
-                self._counts.updateValue((et,), (n,))
-                out.append((key[0], et, n))
-            yield pd.DataFrame(
-                out, columns=["user_id", "event_type", "n"]
-            )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        events.select("user_id", "event_type")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=TypeCounter(),
-            outputStructType="user_id long, event_type string, n bigint",
-            outputMode="Update",
-            timeMode="None",
-        )
+def per_type_counts_stream(events: DataFrame) -> DataFrame:
+    """Per-user, per-event-type running counters: one native streaming
+    count keyed by (user_id, event_type). Each counter is its own
+    state-store row, so a batch rewrites only the (user, type) cells
+    it touched, never a whole per-user blob; with the RocksDB state
+    store provider (``spark.sql.streaming.stateStore.providerClass``)
+    that stays cheap however many types a user accumulates. Each
+    micro-batch emits the updated (user_id, event_type, n) rows →
+    outputMode("update")."""
+    return events.groupBy("user_id", "event_type").agg(
+        F.count(F.lit(1)).alias("n")
     )
 
 
@@ -706,9 +634,6 @@ def manifest_stream(
     (outputMode update); after any prefix of the stream the emitted
     rows equal the batch manifest of the documents seen so far —
     tested against the batch query on the full set."""
-    import pandas as pd  # local import: only the executor path needs it
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     t = docs.select(
         F.col(id_col).alias("doc_id"),
         (F.col(id_col) % shards).cast("long").alias("shard"),
@@ -717,43 +642,12 @@ def manifest_stream(
         .cast("long")
         .alias("fp"),
     )
-
-    def fold(key, pdfs, state):
-        if state.exists:
-            n, toks, mn, mx, x = state.get
-        else:
-            n, toks, mn, mx, x = 0, 0, None, None, 0
-        for pdf in pdfs:
-            for did, nt, fp in zip(pdf["doc_id"], pdf["n_toks"], pdf["fp"]):
-                did, nt, fp = int(did), int(nt), int(fp)
-                n += 1
-                toks += nt
-                mn = did if mn is None else min(mn, did)
-                mx = did if mx is None else max(mx, did)
-                x ^= fp
-        state.update((n, toks, mn, mx, x))
-        yield pd.DataFrame(
-            {
-                "shard": [key[0]],
-                "n_docs": [n],
-                "n_tokens": [toks],
-                "min_id": [mn],
-                "max_id": [mx],
-                "content_fp": [x],
-            }
-        )
-
-    return t.groupBy("shard").applyInPandasWithState(
-        fold,
-        outputStructType=(
-            "shard long, n_docs long, n_tokens long, min_id long, "
-            "max_id long, content_fp long"
-        ),
-        stateStructType=(
-            "n long, toks long, mn long, mx long, x long"
-        ),
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return t.groupBy("shard").agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum("n_toks").alias("n_tokens"),
+        F.min("doc_id").alias("min_id"),
+        F.max("doc_id").alias("max_id"),
+        F.bit_xor("fp").alias("content_fp"),
     )
 
 
@@ -776,9 +670,6 @@ def cms_stream(
     IS the bounded-state story. Emits the running (d, bucket, c)
     cells per micro-batch (outputMode update); heavy-hitter probes
     read MIN over a token's depth cells exactly as in batch."""
-    import pandas as pd  # local import: only the executor path needs it
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     ds = F.array(*[F.lit(i) for i in range(depth)])
     t = (
         docs.select(F.explode(F.split(F.col(text_col), " ")).alias("word"))
@@ -805,23 +696,7 @@ def cms_stream(
             ).alias("bucket"),
         )
     )
-
-    def fold(key, pdfs, state):
-        c = state.get[0] if state.exists else 0
-        for pdf in pdfs:
-            c += len(pdf)
-        state.update((c,))
-        yield pd.DataFrame(
-            {"d": [key[0]], "bucket": [key[1]], "c": [c]}
-        )
-
-    return t.groupBy("d", "bucket").applyInPandasWithState(
-        fold,
-        outputStructType="d int, bucket long, c long",
-        stateStructType="c long",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return t.groupBy("d", "bucket").agg(F.count(F.lit(1)).alias("c"))
 
 
 def hll_stream(
@@ -845,9 +720,6 @@ def hll_stream(
     tokens stream through. Emits running (reg, rho_max) cells per
     micro-batch (update mode); the distinct estimate is the standard
     alpha_m * m^2 / sum(2^-rho) fold over the 64-row output."""
-    import pandas as pd  # local import: only the executor path needs it
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     h = F.conv(
         F.substring(F.md5(F.col("word")), 1, 15), 16, 10
     ).cast("long")
@@ -874,22 +746,7 @@ def hll_stream(
             rho.alias("rho"),
         )
     )
-
-    def fold(key, pdfs, state):
-        m = state.get[0] if state.exists else 0
-        for pdf in pdfs:
-            if len(pdf):
-                m = max(m, int(pdf["rho"].max()))
-        state.update((m,))
-        yield pd.DataFrame({"reg": [key[0]], "rho_max": [m]})
-
-    return t.groupBy("reg").applyInPandasWithState(
-        fold,
-        outputStructType="reg int, rho_max int",
-        stateStructType="m int",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return t.groupBy("reg").agg(F.max("rho").alias("rho_max"))
 
 
 def psi_stream(
@@ -913,9 +770,6 @@ def psi_stream(
     State: B counters TOTAL no matter how many events stream
     through. Emits running (bucket, c) per micro-batch (update
     mode)."""
-    import pandas as pd  # local import: only the executor path needs it
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     vc = F.col(value_col)
     bucket = sum(
         F.when(vc > F.lit(b), 1).otherwise(0) for b in boundaries
@@ -923,21 +777,7 @@ def psi_stream(
     t = events.where(vc.isNotNull()).select(
         bucket.cast("long").alias("bucket")
     )
-
-    def fold(key, pdfs, state):
-        c = state.get[0] if state.exists else 0
-        for pdf in pdfs:
-            c += len(pdf)
-        state.update((c,))
-        yield pd.DataFrame({"bucket": [key[0]], "c": [c]})
-
-    return t.groupBy("bucket").applyInPandasWithState(
-        fold,
-        outputStructType="bucket long, c long",
-        stateStructType="c long",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return t.groupBy("bucket").agg(F.count(F.lit(1)).alias("c"))
 
 
 def kmv_stream(
@@ -1036,9 +876,6 @@ def msprt_stream(
     State: 4 integers TOTAL. At cluster scale the per-arm groups fold
     map-side partial counts, so the two stateful keys see
     pre-aggregated deltas, not the raw event stream."""
-    import pandas as pd  # local import: only the executor path needs it
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     t = events.select(
         (F.col(user_col) % 2).cast("long").alias("arm"),
         F.when(F.col("event_type") == conv_type, 1)
@@ -1046,21 +883,8 @@ def msprt_stream(
         .cast("long")
         .alias("is_conv"),
     )
-
-    def fold(key, pdfs, state):
-        n, c = state.get if state.exists else (0, 0)
-        for pdf in pdfs:
-            n += len(pdf)
-            c += int(pdf["is_conv"].sum())
-        state.update((n, c))
-        yield pd.DataFrame({"arm": [key[0]], "n": [n], "c": [c]})
-
-    return t.groupBy("arm").applyInPandasWithState(
-        fold,
-        outputStructType="arm long, n long, c long",
-        stateStructType="n long, c long",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return t.groupBy("arm").agg(
+        F.count(F.lit(1)).alias("n"), F.sum("is_conv").alias("c")
     )
 
 
@@ -1107,47 +931,26 @@ def moments_stream(
 
     State: 6 integers per key. Emits the running moment row per key
     per micro-batch (update mode)."""
-    import pandas as pd  # local import: only the executor path needs it
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     t = pairs.select(
-        F.col(key_col).alias("k"),
+        F.col(key_col).cast("string").alias("k"),
         F.col(x_col).cast("long").alias("x"),
         F.col(y_col).cast("long").alias("y"),
     )
-
-    def fold(key, pdfs, state):
-        n, sx, sy, sxx, syy, sxy = (
-            state.get if state.exists else (0, 0, 0, 0, 0, 0)
-        )
-        for pdf in pdfs:
-            n += len(pdf)
-            x = pdf["x"].astype("int64")
-            y = pdf["y"].astype("int64")
-            sx += int(x.sum())
-            sy += int(y.sum())
-            sxx += int((x * x).sum())
-            syy += int((y * y).sum())
-            sxy += int((x * y).sum())
-        state.update((n, sx, sy, sxx, syy, sxy))
-        yield pd.DataFrame(
-            {
-                "k": [key[0]], "n": [n], "sx": [sx], "sy": [sy],
-                "sxx": [sxx], "syy": [syy], "sxy": [sxy],
-            }
-        )
-
-    return t.groupBy("k").applyInPandasWithState(
-        fold,
-        outputStructType=(
-            "k string, n long, sx long, sy long, sxx long, "
-            "syy long, sxy long"
-        ),
-        stateStructType=(
-            "n long, sx long, sy long, sxx long, syy long, sxy long"
-        ),
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return t.groupBy("k").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum("x").alias("sx"),
+        F.sum("y").alias("sy"),
+        # product sums accumulate exactly in decimal(38,0); under ANSI
+        # mode (Spark 4's default) the bigint cast raises on overflow
+        F.sum(F.col("x").cast("decimal(38,0)") * F.col("x"))
+        .cast("bigint")
+        .alias("sxx"),
+        F.sum(F.col("y").cast("decimal(38,0)") * F.col("y"))
+        .cast("bigint")
+        .alias("syy"),
+        F.sum(F.col("x").cast("decimal(38,0)") * F.col("y"))
+        .cast("bigint")
+        .alias("sxy"),
     )
 
 

@@ -1235,12 +1235,13 @@ def test_kmeans_fit_sample_cap(spark):
 
 
 def test_nested_lit_equals_f_lit(spark):
-    """nested_lit (one F.expr call) must produce the exact value F.lit
+    """An ``F.expr(nested_sql(...))`` literal (one parse, the form the
+    PQ and k-means folds splice) must produce the exact value F.lit
     produces element-by-element — including exponent-notation reprs
     (1e-06) and negatives — at any nesting depth."""
     from pyspark.sql import functions as F
 
-    from spark_query_engine.operators import nested_lit
+    from spark_query_engine.operators import nested_sql
 
     flat = [1e-06, -1e-06, 0.0, -0.5, 123456.654321, 1e300]
     nested = [[[0.1, -0.25], [1e-06, 2.5e-07]], [[-1e20, 3.0], [7.0, -0.0]]]
@@ -1248,9 +1249,9 @@ def test_nested_lit_equals_f_lit(spark):
         spark.range(1)
         .select(
             F.lit(flat).alias("f1"),
-            nested_lit(flat).alias("n1"),
+            F.expr(nested_sql(flat)).alias("n1"),
             F.lit(nested).alias("f2"),
-            nested_lit(nested).alias("n2"),
+            F.expr(nested_sql(nested)).alias("n2"),
         )
         .collect()[0]
     )
@@ -1339,7 +1340,7 @@ def test_hot_shingle_guard_batch_paths(spark):
     assert got_ngram == want
 
 
-def test_cut_lineage_reliable_path(spark, tmp_path, monkeypatch):
+def test_cut_lineage_reliable_path(spark, tmp_path):
     """r11 verdict task 2: with a checkpoint dir configured the
     barrier routes through reliable ``DataFrame.checkpoint`` (files on
     shared storage, survives executor loss) instead of
@@ -1347,27 +1348,31 @@ def test_cut_lineage_reliable_path(spark, tmp_path, monkeypatch):
     checkpoint dir is required. Values identical on both paths."""
     from spark_query_engine.operators import cut_lineage
 
+    key = "spark.spark_query_engine.checkpoint.dir"
     df = spark.range(100).selectExpr("id", "id * 3 as v")
     want = sorted((r["id"], r["v"]) for r in df.collect())
 
     # local path (default): no checkpoint dir involved
-    monkeypatch.delenv("SPARK_QE_CHECKPOINT_DIR", raising=False)
+    spark.conf.unset(key)
     local = cut_lineage(df)
     assert sorted((r["id"], r["v"]) for r in local.collect()) == want
 
-    # reliable path: env var routes through sc.setCheckpointDir +
+    # reliable path: the conf routes through sc.setCheckpointDir +
     # DataFrame.checkpoint — checkpoint files land under the dir
     ckpt = tmp_path / "ckpt"
-    monkeypatch.setenv("SPARK_QE_CHECKPOINT_DIR", str(ckpt))
-    reliable = cut_lineage(df)
-    assert sorted((r["id"], r["v"]) for r in reliable.collect()) == want
-    files = list(ckpt.rglob("*"))
-    assert files, "reliable checkpoint wrote nothing under the dir"
+    spark.conf.set(key, str(ckpt))
+    try:
+        reliable = cut_lineage(df)
+        assert sorted((r["id"], r["v"]) for r in reliable.collect()) == want
+        files = list(ckpt.rglob("*"))
+        assert files, "reliable checkpoint wrote nothing under the dir"
 
-    # lazy form works on the reliable path too (materializes on the
-    # consumer's first action, not at the cut)
-    lazy = cut_lineage(df.where("id < 10"), eager=False)
-    assert lazy.count() == 10
+        # lazy form works on the reliable path too (materializes on the
+        # consumer's first action, not at the cut)
+        lazy = cut_lineage(df.where("id < 10"), eager=False)
+        assert lazy.count() == 10
+    finally:
+        spark.conf.unset(key)
 
 
 def test_covariance_matrix_bigint_bound_guard(spark):

@@ -37,8 +37,7 @@ SETTINGS = dict(
 )
 @settings(**SETTINGS)
 def test_connected_components_matches_union_find(spark, edges):
-    """BOTH component algorithms — large-star/small-star (the O(log n)
-    default) and min-label propagation — must equal a sequential
+    """Large-star/small-star components must equal a sequential
     union-find with min-id labels, on any graph shape: chains, hubs,
     self-loops, parallel edges."""
     from spark_query_engine.operators.dedup import connected_components
@@ -62,30 +61,25 @@ def test_connected_components_matches_union_find(spark, edges):
     expected = {n: find(n) for n in parent}
 
     pairs = spark.createDataFrame(edges, ["id_a", "id_b"])
-    # label needs max_iter >= diameter (it raises on exhaustion now);
-    # a 31-node path has diameter 30
-    for algorithm, iters in (("star", 25), ("label", 40)):
-        got = {
-            r["id"]: r["component"]
-            for r in connected_components(
-                pairs, max_iter=iters, algorithm=algorithm
-            ).collect()
-        }
-        assert got == expected, algorithm
+    got = {
+        r["id"]: r["component"]
+        for r in connected_components(pairs, max_iter=25).collect()
+    }
+    assert got == expected
 
 
 def test_connected_components_star_long_chain(spark):
-    """The adversarial shape min-label degrades on: a 64-node path
-    (diameter 63). Star contraction must label it in far fewer rounds
-    than the diameter — asserted via max_iter=12 ≪ 63."""
-    from spark_query_engine.operators.dedup import connected_components_star
+    """The adversarial shape min-label propagation degrades on: a
+    64-node path (diameter 63). Star contraction must label it in far
+    fewer rounds than the diameter — asserted via max_iter=12 ≪ 63."""
+    from spark_query_engine.operators.dedup import connected_components
 
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(63)], ["id_a", "id_b"]
     )
     got = {
         r["id"]: r["component"]
-        for r in connected_components_star(pairs, max_iter=12).collect()
+        for r in connected_components(pairs, max_iter=12).collect()
     }
     assert got == {i: 0 for i in range(64)}
 

@@ -51,10 +51,39 @@ def test_tumbling_stream_matches_batch(spark, sf_dir, events_stream):
         assert want[batch_key] == val, key
 
 
+def test_sliding_stream_matches_batch(spark, sf_dir, events_stream):
+    """Sliding windows (1 hour, every 30 minutes) put each event in two
+    panes; every window the stream emits must equal the batch
+    aggregation over the same panes."""
+    agg = ST.sliding_counts(events_stream, "1 hour", "30 minutes", "30 minutes")
+    ST.run_to_memory_sink(agg, "sliding_out", mode="append")
+    got = {
+        r["window_start"]: (r["n_events"], r["total_value"])
+        for r in spark.sql("SELECT * FROM sliding_out").collect()
+    }
+
+    batch = (
+        load(spark, sf_dir, "events")
+        .groupBy(F.window("ts", "1 hour", "30 minutes"))
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.round(F.sum("value"), 2).alias("v"),
+        )
+        .select(F.col("window.start").alias("ws"), "n", "v")
+    )
+    want = {r["ws"]: (r["n"], r["v"]) for r in batch.collect()}
+
+    assert len(got) > 0
+    # the panes overlap: windows start on the half hour too
+    assert {ws.minute for ws in got} == {0, 30}
+    for ws, val in got.items():
+        assert want[ws.replace(tzinfo=None)] == val, ws
+
+
 def test_stateful_running_totals_matches_batch(spark, sf_dir, events_stream):
-    """applyInPandasWithState per-user running totals: after draining
-    the (single-file) stream, the last emission per user must equal
-    the batch groupBy totals."""
+    """Per-user running totals: after draining the (single-file)
+    stream, the last emission per user must equal the batch groupBy
+    totals."""
     out = ST.running_user_totals(events_stream)
     ST.run_to_memory_sink(out, "running_out", mode="update")
     got = {
@@ -501,25 +530,9 @@ def test_chunk_stream_matches_batch(spark, tmp_path):
 
 
 def test_transform_with_state_counts_match_batch(spark, sf_dir, events_stream):
-    """transformWithStateInPandas (Spark 4 MapState): after draining
-    the stream, the last emission per (user, type) equals the batch
-    groupBy counts. Requires the RocksDB state store provider, and
-    protobuf for the state-protocol driver worker (absent in this
-    container → skip; see per_type_counts_tws docstring)."""
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError:
-        pytest.skip(
-            "environment gate, not a capability gap: this container has "
-            "no google.protobuf and pip installs are off, so Spark's "
-            "transformWithStateInPandas state-protocol worker cannot "
-            "start. The stateful-streaming semantics are verified by the "
-            "applyInPandasWithState twin "
-            "(test_stateful_running_totals_matches_batch), which passes. "
-            "With protobuf present this test runs unmodified. "
-            "Adjudicated a HARD documented limitation in COVERAGE.md "
-            "§2.10 (r10): 'N passed, 1 skipped' IS the full-green state."
-        )
+    """Per-(user, type) running counters on the RocksDB state store
+    provider: after draining the stream, the last emission per (user,
+    type) equals the batch groupBy counts."""
     prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
     spark.conf.set(
         "spark.sql.streaming.stateStore.providerClass",
@@ -527,7 +540,7 @@ def test_transform_with_state_counts_match_batch(spark, sf_dir, events_stream):
         "RocksDBStateStoreProvider",
     )
     try:
-        out = ST.per_type_counts_tws(events_stream)
+        out = ST.per_type_counts_stream(events_stream)
         ST.run_to_memory_sink(out, "tws_out", mode="update")
         got = {
             (r["user_id"], r["event_type"]): r["n"]
@@ -1265,3 +1278,61 @@ def test_moments_stream_matches_batch_ols(spark, sf_dir, tmp_path):
     assert batch["n"] == got["n"]
     assert abs(batch["slope"] - math.floor(1e6 * slope * 100.0 + 0.5) / 1e6) < 1e-9
     assert abs(batch["r2"] - math.floor(1e6 * r2 + 0.5) / 1e6) < 1e-9
+
+
+def test_monoid_streams_plan_native_aggregation(spark):
+    """The eight per-key monoid folds (counts, sums, min/max, XOR,
+    register MAX) plan as Spark's native streaming aggregation, with
+    no Python state operator, and keep their output columns and
+    types."""
+    ev = ST.stream_from_rate(spark)
+    docs = ev.select(
+        F.col("event_id").alias("doc_id"), F.lit("a b c").alias("text")
+    )
+    pairs = ev.select(
+        F.col("event_type").alias("k"),
+        F.col("user_id").alias("x"),
+        F.col("event_id").alias("y"),
+    )
+    ops = {
+        "running_user_totals": (
+            ST.running_user_totals(ev),
+            "user_id bigint, n_events bigint, total_value double",
+        ),
+        "per_type_counts_stream": (
+            ST.per_type_counts_stream(ev),
+            "user_id bigint, event_type string, n bigint",
+        ),
+        "manifest_stream": (
+            ST.manifest_stream(docs),
+            "shard bigint, n_docs bigint, n_tokens bigint, min_id bigint, "
+            "max_id bigint, content_fp bigint",
+        ),
+        "cms_stream": (
+            ST.cms_stream(docs), "d int, bucket bigint, c bigint"
+        ),
+        "hll_stream": (ST.hll_stream(docs), "reg int, rho_max int"),
+        "psi_stream": (
+            ST.psi_stream(ev, [10.0, 50.0]), "bucket bigint, c bigint"
+        ),
+        "msprt_stream": (
+            ST.msprt_stream(ev), "arm bigint, n bigint, c bigint"
+        ),
+        "moments_stream": (
+            ST.moments_stream(pairs, "k", "x", "y"),
+            "k string, n bigint, sx bigint, sy bigint, sxx bigint, "
+            "syy bigint, sxy bigint",
+        ),
+    }
+    for name, (df, ddl) in ops.items():
+        plan = df._jdf.queryExecution().analyzed().toString()
+        assert "Aggregate" in plan, name
+        for node in (
+            "FlatMapGroupsInPandasWithState",
+            "TransformWithStateInPandas",
+        ):
+            assert node not in plan, (name, node)
+        got = ", ".join(
+            f"{f.name} {f.dataType.simpleString()}" for f in df.schema
+        )
+        assert got == ddl, name
