@@ -11,6 +11,7 @@ products, except where explicitly documented as small-N baselines.
 """
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 
 def widen(df: DataFrame, min_factor: int = 1) -> DataFrame:
@@ -103,6 +104,20 @@ def cut_lineage(df: DataFrame, eager: bool = True) -> DataFrame:
             sc.setCheckpointDir(ckpt_dir)
         return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)
+
+
+def blocked_pairs(rel: DataFrame, keys: list[str], id_col: str = "id") -> DataFrame:
+    """The oriented blocking self-join: ``rel`` aliased ``a`` and ``b``,
+    joined on equal ``keys`` with ``a.<id_col> < b.<id_col>``. Each
+    unordered pair of rows sharing a block key meets once per key it
+    shares, so callers that can share several keys ``distinct`` their
+    projection. The equal keys are the hash-join keys: only rows in
+    one block are ever compared. The condition is one ``F.expr`` parse.
+    """
+    cond = " AND ".join(
+        [f"a.{k} = b.{k}" for k in keys] + [f"a.{id_col} < b.{id_col}"]
+    )
+    return rel.alias("a").join(rel.alias("b"), F.expr(cond))
 
 
 def release_on_drop(result: DataFrame, *cached: DataFrame) -> DataFrame:
@@ -218,6 +233,7 @@ __all__ = [
     "timeseries",
     "widen",
     "cut_lineage",
+    "blocked_pairs",
     "release_on_drop",
     "carry_caches",
 ]

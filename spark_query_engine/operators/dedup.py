@@ -1,5 +1,5 @@
 """Deduplication operators: exact, MinHash+LSH, SimHash, n-gram
-Jaccard, embedding-cosine near-dup.
+Jaccard.
 
 All hashing is md5-based so results are engine-portable (the DuckDB
 oracle computes the identical md5 strings); all expressions are
@@ -23,7 +23,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from spark_query_engine.operators import cut_lineage, release_on_drop, widen
+from spark_query_engine.operators import (
+    blocked_pairs,
+    cut_lineage,
+    release_on_drop,
+    widen,
+)
 
 
 # --- shingling -------------------------------------------------------------
@@ -150,17 +155,13 @@ def minhash_signatures(
     return shingles.groupBy("id").agg(*aggs)
 
 
-def lsh_candidate_pairs(
-    signatures: DataFrame, num_hashes: int = 16, bands: int = 4
-) -> DataFrame:
-    """Band the signature and equi-join on (band_idx, band_key) →
-    candidate pairs (id_a < id_b). For docs with Jaccard s, the miss
-    probability is (1 - s^(h/b))^b — with 16 hashes / 4 bands,
-    s=0.8 is missed with p≈0.028, s=0.95 with p≈3e-5. Tune bands up
-    for lower thresholds."""
+def _band_keys(num_hashes: int, bands: int):
+    """(band_idx, band_key) rows of a signature with columns mh0…:
+    band b's key is the md5 of its ``num_hashes // bands`` hashes
+    joined by '|'. One ``F.expr`` per band key instead of ~3·rows
+    py4j Column calls (same construction-time shave as
+    ``minhash_signatures``)."""
     rows = num_hashes // bands
-    # r11: one F.expr per band key instead of ~3·rows py4j Column
-    # calls (same construction-time shave as minhash_signatures)
     band_cols = [
         F.expr(
             "md5(concat_ws('|', "
@@ -171,9 +172,18 @@ def lsh_candidate_pairs(
         ).alias(f"band{b}")
         for b in range(bands)
     ]
-    banded = signatures.select(
-        "id", F.posexplode(F.array(*band_cols)).alias("band_idx", "band_key")
-    )
+    return F.posexplode(F.array(*band_cols)).alias("band_idx", "band_key")
+
+
+def lsh_candidate_pairs(
+    signatures: DataFrame, num_hashes: int = 16, bands: int = 4
+) -> DataFrame:
+    """Band the signature and equi-join on (band_idx, band_key) →
+    candidate pairs (id_a < id_b). For docs with Jaccard s, the miss
+    probability is (1 - s^(h/b))^b — with 16 hashes / 4 bands,
+    s=0.8 is missed with p≈0.028, s=0.95 with p≈3e-5. Tune bands up
+    for lower thresholds."""
+    banded = signatures.select("id", _band_keys(num_hashes, bands))
     # Band self-join, kept after measuring the alternative: bucket
     # pre-aggregation (collect_list ids per (band,key), expand pairs
     # map-side with an indexed transform) was ~1.4× SLOWER at sf0.1
@@ -183,15 +193,8 @@ def lsh_candidate_pairs(
     # population), not the join. The equi-join keys distribute the
     # bucket explosion over tasks, which is also the safer shape for a
     # degenerate hot band key at 100 TB.
-    a = banded.alias("a")
-    b = banded.alias("b")
     return (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
+        blocked_pairs(banded, ["band_idx", "band_key"])
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .distinct()
     )
@@ -263,23 +266,22 @@ def minhash_banded_rows(
         for j, (a, b) in enumerate(_minhash_params(num_hashes))
     ]
     sig = base.select("id", "shingles", *mh)
-    rows = num_hashes // bands
-    # r11: one F.expr per band key instead of ~3·rows py4j Column
-    # calls (same construction-time shave as minhash_signatures)
-    band_cols = [
-        F.expr(
-            "md5(concat_ws('|', "
-            + ", ".join(
-                f"cast(mh{b * rows + j} as string)" for j in range(rows)
-            )
-            + "))"
-        ).alias(f"band{b}")
-        for b in range(bands)
-    ]
-    return sig.select(
-        "id",
-        "shingles",
-        F.posexplode(F.array(*band_cols)).alias("band_idx", "band_key"),
+    return sig.select("id", "shingles", _band_keys(num_hashes, bands))
+
+
+def _with_shingle_counts(inter: DataFrame, sizes: DataFrame) -> DataFrame:
+    """Attach both sides' shingle counts to (id_a, id_b, n_inter) pair
+    rows: (id_a, id_b, n_inter, na, nb). ``sizes`` is (id, n_sh)."""
+    return (
+        inter.join(sizes.alias("za"), F.col("za.id") == F.col("id_a"))
+        .join(sizes.alias("zb"), F.col("zb.id") == F.col("id_b"))
+        .select(
+            "id_a",
+            "id_b",
+            "n_inter",
+            F.col("za.n_sh").alias("na"),
+            F.col("zb.n_sh").alias("nb"),
+        )
     )
 
 
@@ -288,22 +290,13 @@ def _jaccard_at_least(
 ) -> DataFrame:
     """(id_a, id_b, jaccard) for the (id_a, id_b, n_inter) pairs whose
     Jaccard n_inter / (|A| + |B| − n_inter), rounded to 6dp, is at
-    least ``threshold``; ``sizes`` is (id, n_sh). Unlike
-    ``_with_shingle_counts`` it joins ``sizes`` on its own ``id``
-    without renaming: both forms plan the same joins under different
-    attribute names, and each keeps its callers' plans unchanged."""
+    least ``threshold``; ``sizes`` is (id, n_sh)."""
+    jac = F.round(
+        F.col("n_inter") / (F.col("na") + F.col("nb") - F.col("n_inter")), 6
+    )
     return (
-        inter.join(sizes.alias("za"), F.col("za.id") == F.col("id_a"))
-        .join(sizes.alias("zb"), F.col("zb.id") == F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            F.round(
-                F.col("n_inter")
-                / (F.col("za.n_sh") + F.col("zb.n_sh") - F.col("n_inter")),
-                6,
-            ).alias("jaccard"),
-        )
+        _with_shingle_counts(inter, sizes)
+        .select("id_a", "id_b", jac.alias("jaccard"))
         .where(F.col("jaccard") >= threshold)
     )
 
@@ -504,10 +497,9 @@ def simhash_near_duplicates(
     df: DataFrame,
     id_col: str,
     text_col: str,
+    n: int,
     max_distance: int = 3,
-    bits: int = 32,
     blocks: int = 4,
-    n_hint: int | None = None,
 ) -> DataFrame:
     """Hamming-distance near-dups with pigeonhole blocking: split the
     simhash into ``blocks`` equal bands; any pair within
@@ -515,42 +507,29 @@ def simhash_near_duplicates(
     band equi-join has exact recall AT EVERY band width (not
     probabilistic, unlike MinHash-LSH). Returns (id_a, id_b, hamming).
 
-    Footer-sized band width (r9): pass ``n_hint`` (the corpus row
-    count, from parquet footer metadata) and the band width becomes
-    ``simhash_band_bits(n)`` — the fingerprint widens to
-    blocks·width bits so each band's random-collision rate tracks
-    ~SIMHASH_BAND_TARGET·n instead of the fixed-width n²·blocks/2^w
-    quadratic. Below ~16k docs this resolves to width 8 /
-    bits 32 — bit-identical to the historical fixed config (the
-    wider hash's top 32 bits ARE the historical 32-bit hash, so the
-    votes, the fingerprint, and the Hamming distances all coincide).
-    Past the clamp (~2.1M docs) occupancy degrades explicitly, the
-    documented superset-exhaustion contract. The reported ``hamming``
-    is over the ACTIVE fingerprint: at driver scales exactly the
-    historical 32-bit distance; at widened scales the blocks·width-bit
-    distance, with the oracle deriving the same width from COUNT(*)."""
+    Footer-sized band width (r9): ``n`` is the corpus row count (from
+    parquet footer metadata) and the band width is
+    ``simhash_band_bits(n)`` — the fingerprint is blocks·width bits so
+    each band's random-collision rate tracks ~SIMHASH_BAND_TARGET·n
+    instead of a fixed width's n²·blocks/2^w quadratic. Below ~16k
+    docs this resolves to width 8 / 32 bits (the wider hash's top 32
+    bits ARE the first-8-hex-chars 32-bit hash). Past the clamp
+    (~2.1M docs) occupancy degrades explicitly, the documented
+    superset-exhaustion contract. The reported ``hamming`` is over
+    the blocks·width-bit fingerprint, with the oracle deriving the
+    same width from COUNT(*)."""
     assert max_distance < blocks, "pigeonhole recall needs max_distance < blocks"
-    if n_hint is not None:
-        width = simhash_band_bits(n_hint, blocks)
-        bits = blocks * width
-    else:
-        width = bits // blocks
+    width = simhash_band_bits(n, blocks)
     mask = (1 << width) - 1
     # both sides of the block self-join read the simhash relation;
     # persist so the token explode + 32-column vote agg runs once
-    sim = simhash(df, id_col, text_col, bits).persist()
+    sim = simhash(df, id_col, text_col, blocks * width).persist()
     bands = ", ".join(f"shiftright(simhash, {i * width}) & {mask}" for i in range(blocks))
     banded = sim.select(
         "id", "simhash", F.expr(f"posexplode(array({bands})) AS (block_idx, block_key)")
     )
-    a, b = banded.alias("a"), banded.alias("b")
     out = (
-        a.join(
-            b,
-            F.expr(
-                "a.block_idx = b.block_idx AND a.block_key = b.block_key AND a.id < b.id"
-            ),
-        )
+        blocked_pairs(banded, ["block_idx", "block_key"])
         .selectExpr(
             "a.id AS id_a",
             "b.id AS id_b",
@@ -568,27 +547,10 @@ def simhash_near_duplicates(
 def _shared_shingles(sh: DataFrame) -> DataFrame:
     """(id_a, id_b, n_inter): the shared-shingle count of every id
     pair, id_a < id_b, with at least one shingle in common."""
-    a, b = sh.alias("a"), sh.alias("b")
     return (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
+        blocked_pairs(sh, ["shingle"])
         .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-
-
-def _with_shingle_counts(inter: DataFrame, sizes: DataFrame) -> DataFrame:
-    """Attach both sides' shingle counts to (id_a, id_b, n_inter) pair
-    rows: (id_a, id_b, n_inter, na, nb). ``sizes`` is (id, n_sh)."""
-    za = sizes.select(F.col("id").alias("id_a"), F.col("n_sh").alias("na"))
-    zb = sizes.select(F.col("id").alias("id_b"), F.col("n_sh").alias("nb"))
-    return (
-        inter.join(za, "id_a")
-        .join(zb, "id_b")
-        .select("id_a", "id_b", "n_inter", "na", "nb")
     )
 
 
@@ -784,7 +746,7 @@ def connected_components(
     return out
 
 
-# --- embedding cosine near-dup ----------------------------------------------
+# --- cosine similarity as SQL text ------------------------------------------
 
 
 def cosine(a: str, b: str) -> str:
@@ -804,29 +766,6 @@ def cosine(a: str, b: str) -> str:
         f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0D, (acc, v) -> acc + v)"
         f" / (sqrt(aggregate({a}, 0D, (acc, v) -> acc + v * v))"
         f" * sqrt(aggregate({b}, 0D, (acc, v) -> acc + v * v)))"
-    )
-
-
-def embedding_near_duplicates(
-    df: DataFrame, id_col: str, vec_col: str, threshold: float = 0.45
-) -> DataFrame:
-    """All-pairs cosine ≥ threshold. This is the exact O(n²) baseline
-    — correct at any n but quadratic; the scale path is
-    ``similarity.lsh_bucket`` blocking (probe buckets instead of all
-    pairs). Returns (id_a, id_b, cos_sim rounded 6dp)."""
-    v = widen(df).select(
-        F.col(id_col).alias("id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("vec"),
-    )
-    a, b = v.alias("a"), v.alias("b")
-    return (
-        a.join(b, F.col("a.id") < F.col("b.id"))
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.expr(f"round({cosine('a.vec', 'b.vec')}, 6)").alias("cos_sim"),
-        )
-        .where(F.col("cos_sim") >= threshold)
     )
 
 
@@ -892,16 +831,9 @@ def ngram_jaccard_prefix_pairs(
         )
         .select("id", "shingle")
     )
-    pa, pb = prefix.alias("pa"), prefix.alias("pb")
     cand = (
-        pa.join(
-            pb,
-            (F.col("pa.shingle") == F.col("pb.shingle"))
-            & (F.col("pa.id") < F.col("pb.id")),
-        )
-        .select(
-            F.col("pa.id").alias("id_a"), F.col("pb.id").alias("id_b")
-        )
+        blocked_pairs(prefix, ["shingle"])
+        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .distinct()
     )
     sa, sb = sh.alias("sa"), sh.alias("sb")
@@ -915,15 +847,7 @@ def ngram_jaccard_prefix_pairs(
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
-    jac = F.round(
-        F.col("n_inter") / (F.col("na") + F.col("nb") - F.col("n_inter")), 6
-    )
-    return release_on_drop(
-        _with_shingle_counts(inter, sizes)
-        .select("id_a", "id_b", jac.alias("jaccard"))
-        .where(F.col("jaccard") >= threshold),
-        sh,
-    )
+    return release_on_drop(_jaccard_at_least(inter, sizes, threshold), sh)
 
 
 def dup_span_removal(

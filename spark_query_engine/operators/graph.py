@@ -4,7 +4,7 @@ interaction graphs): iterative PageRank.
 Complements ``dedup.connected_components`` (which labels clusters)
 with a CENTRALITY signal — which node in a duplicate cluster is the
 canonical one, which document a crawl graph keeps linking back to.
-Same distributed shape as CC: a persisted symmetric edge relation,
+Same distributed shape as CC: a checkpointed symmetric edge relation,
 one equi-join + one aggregation per round, lineage truncated with
 ``localCheckpoint``. No driver-side loop over data — only the scalar
 node count crosses to the driver (the damping constant's 1/N term).
@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from spark_query_engine.operators import cut_lineage
+from spark_query_engine.operators import blocked_pairs, cut_lineage
 
 
 def copurchase_pairs(li: DataFrame) -> DataFrame:
@@ -23,12 +23,9 @@ def copurchase_pairs(li: DataFrame) -> DataFrame:
     relation: one (u, v) row, u < v, per pair of parts bought in the
     same order. No dedup — a pair bought together in k orders appears
     k times, so callers choose where the distinct goes."""
-    a, b = li.alias("a"), li.alias("b")
-    return a.join(
-        b,
-        (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-        & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-    ).select(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
+    return blocked_pairs(li, ["l_orderkey"], "l_partkey").select(
+        F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v")
+    )
 
 
 def _truncate_deep_lineage(
@@ -77,16 +74,16 @@ def pagerank(
     chain LAZILY into ONE job — no per-round persist + count + job
     barrier, which the round-6 bench measured as the dominant cost
     of the iterative family (round-latency-bound, exponent ~0.2).
-    Only the edge+degree relation persists (it appears in every
+    Only the edge+degree relation is cut (it appears in every
     round); convergence semantics are untouched — same joins, same
     per-round 9dp rounding, bit-identical output. Unlike the CC loop
     the driver makes no per-round decision here, so nothing forces
-    materialization. Caches release when the caller drops the result.
+    materialization. The two barriers are lazy ``cut_lineage``
+    checkpoints, which Spark's ContextCleaner reclaims once the result
+    is garbage-collected; there is no cache to release.
 
     Returns (id, pr) for every node in ``pairs``.
     """
-    from spark_query_engine.operators import release_on_drop
-
     e = pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     # barrier the symmetric edges FIRST: pairs is usually a lazy
     # candidate-generation DAG (shingles → signatures → band join), and
@@ -127,9 +124,7 @@ def pagerank(
             )
         )
         ranks = _truncate_deep_lineage(ranks, i, iterations)
-    return release_on_drop(
-        ranks.select(F.col("u").alias("id"), "pr"), sym, ed
-    )
+    return ranks.select(F.col("u").alias("id"), "pr")
 
 
 def personalized_pagerank(
@@ -167,8 +162,6 @@ def personalized_pagerank(
 
     Returns (id, is_seed, pr) for every node in ``pairs``.
     """
-    from spark_query_engine.operators import release_on_drop
-
     e = pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     # r11: lazy localCheckpoint barriers (see ``pagerank`` above) —
     # same single evaluation, leaf-truncated lineage per round
@@ -204,12 +197,4 @@ def personalized_pagerank(
             )
         )
         ranks = _truncate_deep_lineage(ranks, i, iterations)
-    return release_on_drop(
-        ranks.select(
-            F.col("u").alias("id"),
-            seed.alias("is_seed"),
-            "pr",
-        ),
-        sym,
-        ed,
-    )
+    return ranks.select(F.col("u").alias("id"), seed.alias("is_seed"), "pr")

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from spark_query_engine.operators import widen
+from spark_query_engine.operators import blocked_pairs, release_on_drop, widen
 
 MAGIC = b"QEIM"
 
@@ -571,87 +571,55 @@ def ahash_group_size(n: int, max_distance: int = 3) -> int:
 
 def ahash_near_duplicates(
     hashes: DataFrame,
+    n: int,
     max_distance: int = 3,
-    blocks: int = 4,
-    n_hint: int | None = None,
 ) -> DataFrame:
     """Image near-dup pairs by Hamming distance over the 64-bit aHash,
-    with pigeonhole blocking: by default ``blocks`` 16-bit bands, any
-    pair within ``max_distance < blocks`` must agree on ≥1 band → the
-    band equi-join has EXACT recall. Returns (id_a, id_b, hamming).
+    with pigeonhole multi-index blocking. Returns (id_a, id_b,
+    hamming).
 
-    With ``n_hint`` (corpus row count from the parquet footer) the
-    blocking is footer-sized via :func:`ahash_group_size` multi-index
-    groups — at driver scales g=2 resolves to the 4 disjoint adjacent
-    byte-band pairs, whose keys are bit-identical to the historical
-    16-bit bands, so the plan and values are unchanged; at corpus
-    scale wider groups keep bucket occupancy ~64 where fixed 16-bit
-    bands collide n²/2¹⁶ random pairs. Recall is exact at EVERY g
-    (≥ 8−d clean bands always contain a clean g-subset), so results
-    are identical across schemes — pytest-asserted."""
+    ``n`` is the corpus row count (from the parquet footer). The hash
+    splits into 8 byte-bands, and the join keys are groups of
+    ``ahash_group_size(n)`` bands. At g=2 with ``max_distance <= 3``
+    the groups are the 4 disjoint adjacent byte pairs, i.e. four
+    16-bit bands; at corpus scale wider groups keep bucket occupancy
+    ~64 where 16-bit bands collide n²/2¹⁶ random pairs. Recall is
+    exact at EVERY g (≥ 8−d clean bands always contain a clean
+    g-subset) — pytest-asserted against brute force."""
+    import itertools
+
     hs = hashes.persist()
-    if n_hint is not None:
-        import itertools
-
-        g = ahash_group_size(n_hint, max_distance)
-        bands = [
-            F.shiftright(F.col("h_lo"), i * 8).bitwiseAND(255) for i in range(4)
-        ] + [
-            F.shiftright(F.col("h_hi"), i * 8).bitwiseAND(255) for i in range(4)
-        ]
-        # the 4-disjoint-pairs shortcut is pigeonhole-exact only for
-        # max_distance <= 3 (4 errors can dirty all 4 disjoint pairs);
-        # at higher distances g=2 needs all C(8,2) pairs (r9 ADVICE)
-        groups = (
-            [(0, 1), (2, 3), (4, 5), (6, 7)]
-            if g == 2 and max_distance <= 3
-            else list(itertools.combinations(range(8), g))
+    g = ahash_group_size(n, max_distance)
+    bands = [
+        F.shiftright(F.col("h_lo"), i * 8).bitwiseAND(255) for i in range(4)
+    ] + [
+        F.shiftright(F.col("h_hi"), i * 8).bitwiseAND(255) for i in range(4)
+    ]
+    # the 4-disjoint-pairs shortcut is pigeonhole-exact only for
+    # max_distance <= 3 (4 errors can dirty all 4 disjoint pairs);
+    # at higher distances g=2 needs all C(8,2) pairs (r9 ADVICE)
+    groups = (
+        [(0, 1), (2, 3), (4, 5), (6, 7)]
+        if g == 2 and max_distance <= 3
+        else list(itertools.combinations(range(8), g))
+    )
+    keys = [
+        sum(
+            (bands[idx].cast("long") * F.lit(1 << (8 * j)) for j, idx in enumerate(grp)),
+            F.lit(0).cast("long"),
         )
-        keys = [
-            sum(
-                (bands[idx].cast("long") * F.lit(1 << (8 * j)) for j, idx in enumerate(grp)),
-                F.lit(0).cast("long"),
-            )
-            for grp in groups
-        ]
-        banded = hs.select(
-            "id", "h_lo", "h_hi",
-            F.posexplode(F.array(*keys)).alias("block_idx", "block_key"),
-        )
-    else:
-        assert max_distance < blocks, "pigeonhole recall needs max_distance < blocks"
-        width = 64 // blocks
-        mask = (1 << width) - 1
-        half_bands = blocks // 2
-        banded = hs.select(
-            "id",
-            "h_lo",
-            "h_hi",
-            F.posexplode(
-                F.array(
-                    *[
-                        F.shiftright(F.col("h_lo"), i * width).bitwiseAND(mask)
-                        for i in range(half_bands)
-                    ],
-                    *[
-                        F.shiftright(F.col("h_hi"), i * width).bitwiseAND(mask)
-                        for i in range(half_bands)
-                    ],
-                )
-            ).alias("block_idx", "block_key"),
-        )
-    a, b = banded.alias("a"), banded.alias("b")
+        for grp in groups
+    ]
+    banded = hs.select(
+        "id", "h_lo", "h_hi",
+        F.posexplode(F.array(*keys)).alias("block_idx", "block_key"),
+    )
     hamming = (
         F.bit_count(F.col("a.h_lo").bitwiseXOR(F.col("b.h_lo")))
         + F.bit_count(F.col("a.h_hi").bitwiseXOR(F.col("b.h_hi")))
     )
     out = (
-        a.join(
-            b,
-            (F.col("a.block_idx") == F.col("b.block_idx"))
-            & (F.col("a.block_key") == F.col("b.block_key"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
+        blocked_pairs(banded, ["block_idx", "block_key"])
         .select(
             F.col("a.id").alias("id_a"),
             F.col("b.id").alias("id_b"),
@@ -660,6 +628,4 @@ def ahash_near_duplicates(
         .where(F.col("hamming") <= max_distance)
         .distinct()
     )
-    from spark_query_engine.operators import release_on_drop
-
     return release_on_drop(out, hs)

@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from spark_query_engine.operators import (
+    blocked_pairs,
     d2_sql,
     nested_sql,
     release_on_drop,
@@ -463,14 +464,8 @@ def cp_near_duplicates(
         keys = cp_bucket_keys(
             df, id_col, vec_col, cp_rotations(bands, dim), arity=arity
         ).persist()
-        a, b = keys.alias("a"), keys.alias("b")
         cand = (
-            a.join(
-                b,
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.key") == F.col("b.key")),
-            )
-            .where(F.col("a.id") < F.col("b.id"))
+            blocked_pairs(keys, ["band", "key"])
             .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
             .distinct()
             .persist()
@@ -492,17 +487,9 @@ def cp_near_duplicates(
         ).select(
             "id", "band", F.col("rk.key").alias("key"), F.col("rk.role").alias("role")
         )
-        a, b = roles.alias("a"), roles.alias("b")
         cand = (
-            a.join(
-                b,
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.key") == F.col("b.key")),
-            )
-            .where(
-                (F.col("a.id") < F.col("b.id"))
-                & ~((F.col("a.role") == 2) & (F.col("b.role") == 2))
-            )
+            blocked_pairs(roles, ["band", "key"])
+            .where(~((F.col("a.role") == 2) & (F.col("b.role") == 2)))
             .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
             .distinct()
             # persist: candidates are read by both the fraction count

@@ -284,20 +284,12 @@ def span_dup_stats(
     )
 
 
-#: Doc count above which ``winnow_fingerprints`` dispatches to the
-#: Arrow-batched scan substrate (measured a wash at 500 docs, 5×+ by
-#: sf0.1 — see the operator docstring). Referenced by the query-layer
-#: and test docstrings so the prose cannot drift from the dispatch.
-WINNOW_ARROW_MIN_DOCS = 2000
-
-
 def winnow_fingerprints(
     df: DataFrame,
     id_col: str,
     text_col: str,
     k: int = 5,
     w: int = 4,
-    n_hint: int | None = None,
 ) -> DataFrame:
     """Winnowing (Schleimer, Wilkerson & Aiken, SIGMOD 2003): hash
     every char ``k``-gram, slide a window of ``w`` consecutive
@@ -311,88 +303,28 @@ def winnow_fingerprints(
     expected density 2/(w+1) — the property mod-p sampling lacks
     (a match can fall between samples there).
 
-    Distributed shape (r8) — run-length selection over a PER-ROW hash
-    array, ZERO shuffle, no fan-out: p is the rightmost-minimum of
-    some window iff ``r_run(p) + l_run(p) ≥ w - 1``, where r_run
-    counts how many IMMEDIATELY following hashes are strictly greater
-    (capped at w-1; strict, because an equal hash to the right would
-    win the tie) and l_run counts how many immediately preceding
-    hashes are ≥ (weak: rightmost-preference lets p beat equal hashes
-    on its left). The k-gram hashes materialize once per document as
-    an array column (an owned projection — CollapseProject keeps
-    multiply-referenced non-cheap aliases, the r8b CSE rule); the
-    runs are nested-CASE arithmetic over ``F.get`` neighbor lookups
-    (NULL past either boundary stops the run, exactly like the
-    lead/lag NULLs of the window formulation this replaces); only
-    the SELECTED positions (expected density 2/(w+1)) ever explode.
-    The previous plan exploded every char position and shuffled the
-    n_chars-row relation into a (doc)-partitioned window.
-    Equivalence with the paper's per-window algorithm is
+    Run-length selection per document, ZERO shuffle, no fan-out: p is
+    the rightmost-minimum of some window iff ``r_run(p) + l_run(p) ≥
+    w - 1``, where r_run counts how many IMMEDIATELY following hashes
+    are strictly greater (capped at w-1; strict, because an equal
+    hash to the right would win the tie) and l_run counts how many
+    immediately preceding hashes are ≥ (weak: rightmost-preference
+    lets p beat equal hashes on its left). Boundary windows fall out
+    automatically because a run cannot extend past the document's
+    last k-gram. Equivalence with the paper's per-window algorithm is
     property-tested against a sequential implementation
-    (tests/test_training_ops.py::test_winnow_matches_sequential);
-    boundary windows fall out automatically because a run cannot
-    extend past the document's last k-gram.
+    (tests/test_training_ops.py::test_winnow_matches_sequential).
 
-    Substrate dispatch (the ``assign_to_centroids`` r8 pattern): both
-    the old windowed plan and the array formulation evaluate the
-    per-position run logic at INTERPRETED rates (window lead/lag paid
-    a full n_chars-row shuffle besides; higher-order lambdas never
-    enter codegen) — measured a wash at sf1, ~30-36 s for 16.6M
-    k-grams. Above ``n_hint ≥ WINNOW_ARROW_MIN_DOCS`` (2,000) docs
-    the scan runs as one
-    Arrow-batched mapInPandas: hashlib md5 produces the SAME hex
-    string Spark's md5 does (UTF-8 bytes; Python slicing = substr
-    character semantics), numpy vectorizes the run counts per
-    document, and hex comparison is byte-lexicographic in both
-    engines — bit-identical output, asserted by the same sequential
-    property test across both substrates. Zero shuffle either way;
-    only selected positions leave the scan. Measured (count of the
-    fingerprint relation, min-of-2): sf0.1 3.46 → 0.66 s, sf0.3
-    10.15 → 0.88 s, sf1 ~36 → ~1.9 s — and a wash at 500 docs, so
-    the JVM array path remains the no-hint default for ad-hoc
-    library calls."""
-    if n_hint is not None and n_hint >= WINNOW_ARROW_MIN_DOCS:
-        return _winnow_arrow(df, id_col, text_col, k, w)
-    base = df.where(F.length(text_col) >= k + w - 1).select(
-        F.col(id_col).alias("id"), F.col(text_col).alias("__t")
-    )
-    h = base.select(
-        "id",
-        F.transform(
-            F.sequence(F.lit(1), F.length("__t") - (k - 1)),
-            lambda p: F.md5(F.substr(F.col("__t"), p, F.lit(k))),
-        ).alias("harr"),
-    )
-
-    def run_len(i: Column, sign: int, strict: bool) -> Column:
-        # consecutive-run length via nested CASE: level j counts only
-        # if every earlier level matched; NULL (past the boundary —
-        # F.get is out-of-range-safe) takes the otherwise-branch and
-        # stops the run
-        h_i = F.get(F.col("harr"), i - 1)
-        e: Column | None = None
-        for depth in range(w - 1, 0, -1):
-            nb = F.get(F.col("harr"), i + sign * depth - 1)
-            c = (nb > h_i) if strict else (nb >= h_i)
-            inner = F.lit(depth) if e is None else e
-            e = F.when(c, inner).otherwise(F.lit(depth - 1))
-        return e if e is not None else F.lit(0)
-
-    selected = F.filter(
-        F.sequence(F.lit(1), F.size("harr")),
-        lambda i: run_len(i, 1, True) + run_len(i, -1, False) >= w - 1,
-    )
-    return h.select("id", "harr", F.explode(selected).alias("pos")).select(
-        "id", "pos", F.get(F.col("harr"), F.col("pos") - 1).alias("h")
-    )
-
-
-def _winnow_arrow(
-    df: DataFrame, id_col: str, text_col: str, k: int, w: int
-) -> DataFrame:
-    """Arrow-batched winnowing scan — see ``winnow_fingerprints``."""
-    from spark_query_engine.operators import widen
-
+    The scan is one Arrow-batched mapInPandas: hashlib md5 produces
+    the SAME hex string Spark's md5 does (UTF-8 bytes; Python slicing
+    = substr character semantics), numpy vectorizes the run counts
+    per document, and hex comparison is byte-lexicographic in both
+    engines. Only selected positions leave the scan. An array-of-
+    hashes formulation in JVM expressions ran its per-position run
+    logic at interpreted rates (higher-order lambdas never enter
+    codegen): measured on the count of the fingerprint relation,
+    min-of-2, sf0.1 3.46 → 0.66 s, sf0.3 10.15 → 0.88 s, sf1 ~36 →
+    ~1.9 s, and a wash at 500 docs."""
     base = widen(df.where(F.length(text_col) >= k + w - 1)).select(
         F.col(id_col).cast("long").alias("id"), F.col(text_col).alias("__t")
     )

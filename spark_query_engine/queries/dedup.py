@@ -177,16 +177,16 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     bits per band, fingerprint 4·w bits — killing the fixed-8-bit
     config's n²·blocks/256 background-collision term (the last
     documented-but-unwired fixed-denominator quadratic from the r8
-    audit, SCALING.md). Resolves to the historical 32-bit/byte-band
-    config at sf0.01 (500 docs) and sf0.1 (5k docs); widens to 10-bit
+    audit, SCALING.md). Resolves to a 32-bit fingerprint in byte
+    bands at sf0.01 (500 docs) and sf0.1 (5k docs); widens to 10-bit
     bands at the ~50k-doc sf1 replica corpus."""
     return D.simhash_near_duplicates(
         load(spark, sf_dir, "documents"),
         "doc_id",
         "text",
+        n=footer_rows(spark, sf_dir, "documents"),
         max_distance=3,
         blocks=4,
-        n_hint=footer_rows(spark, sf_dir, "documents"),
     )
 
 

@@ -399,8 +399,8 @@ def multimodal_image_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     payloads = MM.attach_ppm_payload(docs, "doc_id", "text")
     return MM.ahash_near_duplicates(
         MM.ahash_images(payloads),
+        n=footer_rows(spark, sf_dir, "documents"),
         max_distance=3,
-        n_hint=footer_rows(spark, sf_dir, "documents"),
     )
 
 

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from spark_query_engine.operators import blocked_pairs
 from spark_query_engine.queries import load, query
 
 
@@ -402,13 +403,8 @@ def basket_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     norders = items.agg(F.countDistinct("okey").alias("n"))
-    a, b = items.alias("a"), items.alias("b")
     pairs = (
-        a.join(
-            b,
-            (F.col("a.okey") == F.col("b.okey"))
-            & (F.col("a.part") < F.col("b.part")),
-        )
+        blocked_pairs(items, ["okey"], "part")
         .groupBy(
             F.col("a.part").alias("part_a"), F.col("b.part").alias("part_b")
         )

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from spark_query_engine.operators import (
+    blocked_pairs,
     carry_caches,
     cut_lineage,
     nested_sql,
@@ -477,26 +478,15 @@ def corpus_winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     WindowGroupLimit, keeping one row per window before the distinct.
 
     Scale: zero shuffle — the selection happens inside the scan (the
-    ``winnow_fingerprints`` substrate dispatch: per-row array runs
-    while small, one Arrow-batched mapInPandas past
-    ``WINNOW_ARROW_MIN_DOCS`` (2,000) docs — both
-    bit-identical, property-tested); only the selected positions
+    ``winnow_fingerprints`` Arrow-batched mapInPandas, property-tested
+    against the sequential algorithm); only the selected positions
     (density 2/(w+1)) leave it, into one per-doc count. Output
     verifies the per-doc fingerprint count and density against the
     oracle's identical construction."""
     from spark_query_engine.operators import textanalysis as T
 
     docs = load(spark, sf_dir, "documents")
-    # NOT widened (r11 fan-out audit): above WINNOW_ARROW_MIN_DOCS the
-    # operator dispatches to the zero-shuffle Arrow mapInPandas
-    # substrate, and a widen respread of the full text column in front
-    # of it MEASURED 2.31 s -> 6.11 s at sf1; the explode path the
-    # audit flags only exists below 2,000 docs, where per-row work is
-    # trivially small. Adjudicated in SCAN_FANOUT_ALLOWLIST.
-    sel = T.winnow_fingerprints(
-        docs, "doc_id", "text", k=_WK, w=_WW,
-        n_hint=footer_rows(spark, sf_dir, "documents"),
-    )
+    sel = T.winnow_fingerprints(docs, "doc_id", "text", k=_WK, w=_WW)
     cnt = (
         sel.groupBy(F.col("id").alias("doc_id"))
         .agg(F.count(F.lit(1)).alias("n_fp"))
@@ -1507,12 +1497,9 @@ def corpus_contrastive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             % nb
         ).alias("bucket"),
     )
-    a, b = bk.alias("a"), bk.alias("b")
-    cand = a.join(
-        b,
-        (F.col("a.bucket") == F.col("b.bucket"))
-        & (F.col("a.doc_id") < F.col("b.doc_id")),
-    ).select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
+    cand = blocked_pairs(bk, ["bucket"], "doc_id").select(
+        F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b")
+    )
     gate = (
         F.conv(
             F.substring(
@@ -3114,13 +3101,8 @@ def dedup_fuzzy_typenames(spark: SparkSession, sf_dir: str) -> DataFrame:
     names = p.groupBy(F.col("p_name").alias("name")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_parts")
     ).withColumn("noun", F.element_at(F.split("name", " "), -1))
-    a, b = names.alias("a"), names.alias("b")
     return (
-        a.join(
-            b,
-            (F.col("a.noun") == F.col("b.noun"))
-            & (F.col("a.name") < F.col("b.name")),
-        )
+        blocked_pairs(names, ["noun"], "name")
         .where(
             (
                 F.abs(F.length(F.col("a.name")) - F.length(F.col("b.name")))
@@ -3918,13 +3900,8 @@ def pipeline_dedup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "doc_id",
     ).persist()
-    a, b = s2e.alias("a"), s2e.alias("b")
     d3 = (
-        a.join(
-            b,
-            (F.col("a.centroid") == F.col("b.centroid"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
+        blocked_pairs(s2e, ["centroid"], "doc_id")
         .where(
             F.expr(f"round({cosine('a.vec', 'b.vec')}, 6)") >= _CASC_COS
         )
@@ -5659,14 +5636,9 @@ def text_source_jsd(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("p"),
         )
     )
-    a, b = dense.alias("a"), dense.alias("b")
     m = F.col("a.p") + F.col("b.p")
     return (
-        a.join(
-            b,
-            (F.col("a.sym") == F.col("b.sym"))
-            & (F.col("a.source") < F.col("b.source")),
-        )
+        blocked_pairs(dense, ["sym"], "source")
         .groupBy(
             F.col("a.source").alias("source_a"),
             F.col("b.source").alias("source_b"),
@@ -6252,12 +6224,7 @@ def events_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     dd = daily.select(
         "event_type", "c", F.datediff("d", F.lit("1970-01-01")).alias("dn")
     )
-    a, b = dd.alias("a"), dd.alias("b")
-    slopes = a.join(
-        b,
-        (F.col("a.event_type") == F.col("b.event_type"))
-        & (F.col("a.dn") < F.col("b.dn")),
-    ).select(
+    slopes = blocked_pairs(dd, ["event_type"], "dn").select(
         F.col("a.event_type").alias("event_type"),
         (
             F.lit(1.0)

@@ -15,6 +15,15 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory() -> str:
+    """Half of the host's physical memory, capped at 16g, in MiB. On a
+    local master the driver JVM also hosts every executor thread, so
+    a heap past physical memory lets the JVM defer collection until
+    the host itself runs short. ``SPARK_QE_DRIVER_MEM`` overrides it."""
+    host = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(host // 2, 16 << 30) >> 20}m"
+
+
 def get_session(
     app_name: str = "spark_query_engine",
     master: str | None = None,
@@ -42,7 +51,10 @@ def get_session(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_QE_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_QE_DRIVER_MEM", default_driver_memory()),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

@@ -420,22 +420,22 @@ def minhash_dedup_stream(
 def write_foreach_batch_parquet(
     stream_df: DataFrame, out_dir: str, checkpoint_dir: str
 ):
-    """Production sink shape: ``foreachBatch`` hands each micro-batch
-    to arbitrary batch-writer logic (here: append parquet; in
-    production: MERGE into a lakehouse table, upsert to a store, ...).
-    At-least-once as written: the append is blind, so a batch
-    replayed after a failure lands twice. Replayed batches carry the
-    same batch_id, so a writer that skips an id it already holds
-    would make it exactly-once. Drains currently-available input and
-    returns the finished query."""
+    """Parquet sink on Spark's own file sink: drain the currently
+    available input into ``out_dir`` and return the finished query.
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.withColumn("batch_id", F.lit(batch_id)).write.mode(
-            "append"
-        ).parquet(out_dir)
-
+    Exactly-once: each micro-batch's files are committed to the
+    ``_spark_metadata`` log under ``out_dir``, and a batch replayed
+    after a failure (same batch id, logged in the checkpoint's
+    offsets but not its commits) is skipped by the sink. Readers that
+    go through the log, as ``spark.read.parquet(out_dir)`` does, see
+    each batch once. pyarrow skips the underscore directory and reads
+    every part file, so it would also read the files of a batch that
+    failed before its commit. The name predates this sink, which no longer runs
+    a ``foreachBatch`` callback; it is kept because callers, the
+    benchmark's stream workload among them, use it."""
     q = (
-        stream_df.writeStream.foreachBatch(sink)
+        stream_df.writeStream.format("parquet")
+        .option("path", out_dir)
         .option("checkpointLocation", checkpoint_dir)
         .start()
     )

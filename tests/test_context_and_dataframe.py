@@ -192,3 +192,23 @@ def test_catalog_keys_schema_by_nanos_conf(spark, tmp_path):
             spark.conf.unset(key)
         else:
             spark.conf.set(key, before)
+
+
+def test_default_driver_memory_fits_host(monkeypatch):
+    """The driver-memory default is half the host's physical memory,
+    capped at 16g: it never exceeds the host, however small or large."""
+    from spark_query_engine import session
+
+    page = 4096
+    for host in (2 << 30, 15 << 30, 15 * (1 << 30) + 12345 * page, 256 << 30):
+        pages = host // page
+        monkeypatch.setattr(
+            session.os,
+            "sysconf",
+            lambda k, pages=pages: page if k == "SC_PAGE_SIZE" else pages,
+        )
+        mem = session.default_driver_memory()
+        assert mem.endswith("m")
+        mib = int(mem[:-1])
+        assert 0 < mib << 20 <= min(host // 2, 16 << 30), (host, mem)
+    assert session.default_driver_memory() == "16384m"  # the 256 GiB host

@@ -59,7 +59,7 @@ def test_simhash_distance_properties(docs):
 
 
 def test_simhash_near_duplicates(docs):
-    out = D.simhash_near_duplicates(docs, "doc_id", "text", max_distance=3)
+    out = D.simhash_near_duplicates(docs, "doc_id", "text", n=4, max_distance=3)
     pairs = {(r["id_a"], r["id_b"]): r["hamming"] for r in out.collect()}
     assert pairs[(1, 4)] == 0
     assert (1, 2) in pairs  # one-token difference → tiny hamming
@@ -95,8 +95,9 @@ def test_minhash_config_prices_recall():
 
 def test_simhash_band_width_footer_sizing(docs):
     """r9: the band width is footer-sized (the LSH-plane pattern) —
-    pin the crossovers and the superset clamp, and assert the
-    prefix-stability contract at driver scales."""
+    pin the crossovers and the superset clamp, and check the banded
+    join against brute force over the same fingerprint at each
+    width."""
     # historical 8-bit bands hold through ceil(n/64) <= 2^8 docs
     assert D.simhash_band_bits(1) == 8
     assert D.simhash_band_bits(500) == 8  # sf0.01
@@ -106,15 +107,28 @@ def test_simhash_band_width_footer_sizing(docs):
     assert D.simhash_band_bits(50000) == 10  # the sf1 replica corpus
     assert D.simhash_band_bits(2_097_152) == 15
     assert D.simhash_band_bits(10**12) == 15  # explicit superset clamp
-    # a footer-sized call below the crossover is BIT-IDENTICAL to the
-    # historical fixed config (top 32 bits of the 60-bit token hash
-    # are the first-8-hex-chars hash; votes and distances coincide)
-    fixed = D.simhash_near_duplicates(docs, "doc_id", "text", max_distance=3)
-    sized = D.simhash_near_duplicates(
-        docs, "doc_id", "text", max_distance=3, n_hint=5
-    )
-    key = lambda r: (r["id_a"], r["id_b"], r["hamming"])  # noqa: E731
-    assert sorted(map(key, fixed.collect())) == sorted(map(key, sized.collect()))
+    # pigeonhole recall is exact at every width: the band join returns
+    # exactly the brute-force Hamming <= 3 pairs of the 4·width-bit
+    # fingerprint, widths 8, 9, 14 and the clamped 15
+    for n in (5, 16385, 10**6, 10**12):
+        bits = 4 * D.simhash_band_bits(n)
+        sims = sorted(
+            (r["id"], r["simhash"])
+            for r in D.simhash(docs, "doc_id", "text", bits=bits).collect()
+        )
+        want = {
+            (a, b, bin(x ^ y).count("1"))
+            for i, (a, x) in enumerate(sims)
+            for b, y in sims[i + 1:]
+            if bin(x ^ y).count("1") <= 3
+        }
+        got = {
+            (r["id_a"], r["id_b"], r["hamming"])
+            for r in D.simhash_near_duplicates(
+                docs, "doc_id", "text", n=n, max_distance=3
+            ).collect()
+        }
+        assert got == want, n
 
 
 def test_simhash_wide_fingerprint_prefix(docs):
@@ -127,7 +141,7 @@ def test_simhash_wide_fingerprint_prefix(docs):
     s40 = {r["id"]: r["simhash"] for r in D.simhash(docs, "doc_id", "text", bits=40).collect()}
     assert s32 and {i: v >> 8 for i, v in s40.items()} == s32
     out = D.simhash_near_duplicates(
-        docs, "doc_id", "text", max_distance=3, n_hint=10**6  # width 14
+        docs, "doc_id", "text", n=10**6, max_distance=3  # width 14
     )
     pairs = {(r["id_a"], r["id_b"]): r["hamming"] for r in out.collect()}
     assert pairs[(1, 4)] == 0
@@ -138,20 +152,6 @@ def test_ngram_jaccard(docs):
     pairs = {(r["id_a"], r["id_b"]): r["jaccard"] for r in out.collect()}
     assert pairs[(1, 4)] == 1.0
     assert (1, 2) in pairs
-
-
-def test_embedding_near_duplicates(spark):
-    vecs = spark.createDataFrame(
-        [
-            (1, [1.0, 0.0, 0.0]),
-            (2, [0.999, 0.04, 0.0]),  # nearly parallel to 1
-            (3, [0.0, 1.0, 0.0]),  # orthogonal
-        ],
-        ["vec_id", "embedding"],
-    )
-    out = D.embedding_near_duplicates(vecs, "vec_id", "embedding", threshold=0.95)
-    pairs = [(r["id_a"], r["id_b"]) for r in out.collect()]
-    assert pairs == [(1, 2)]
 
 
 def test_cosine_topk_exact(spark):
@@ -1001,6 +1001,17 @@ def test_cosine_pairs_exact_matches_brute_force(spark):
             ).collect()
         )
         assert got == brute, f"block_rows={block_rows}"
+    # a hand-made input: one nearly parallel pair, one orthogonal vector
+    small = spark.createDataFrame(
+        [
+            (1, [1.0, 0.0, 0.0]),
+            (2, [0.999, 0.04, 0.0]),  # nearly parallel to 1
+            (3, [0.0, 1.0, 0.0]),  # orthogonal
+        ],
+        "id bigint, vec array<double>",
+    )
+    pairs = S.cosine_pairs_exact(small, "id", "vec", 0.95, n_rows=3).collect()
+    assert [(r.id_a, r.id_b) for r in pairs] == [(1, 2)]
 
 
 def test_release_on_drop_rejects_self_reference(spark):

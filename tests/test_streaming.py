@@ -253,15 +253,24 @@ def test_minhash_dedup_stream_matches_batch(spark, sf_dir, tmp_path):
 
 
 def test_foreach_batch_parquet_sink(spark, sf_dir, tmp_path, events_stream):
-    """foreachBatch sink: every input row lands in the output parquet
-    exactly once, stamped with its micro-batch id."""
+    """The parquet sink is exactly-once: replaying the last micro-batch
+    (its offsets are logged, its commit marker is deleted) writes no
+    second copy of its rows, and every input row lands once."""
     out = tmp_path / "sink_out"
     ckpt = tmp_path / "sink_ckpt"
-    ST.write_foreach_batch_parquet(
-        events_stream.select("event_id"), str(out), str(ckpt)
+    stream = events_stream.select("event_id")
+    ST.write_foreach_batch_parquet(stream, str(out), str(ckpt))
+    files = sorted(out.glob("*.parquet"))
+    last = max(
+        (p for p in (ckpt / "commits").iterdir() if p.name.isdigit()),
+        key=lambda p: int(p.name),
     )
+    last.unlink()
+    (last.parent / f".{last.name}.crc").unlink(missing_ok=True)
+    ST.write_foreach_batch_parquet(stream, str(out), str(ckpt))
+    assert last.exists()  # the second drain re-ran and committed the batch
+    assert sorted(out.glob("*.parquet")) == files
     written = spark.read.parquet(str(out))
-    assert "batch_id" in written.columns
     assert written.count() == load(spark, sf_dir, "events").count()
     assert written.select("event_id").distinct().count() == written.count()
 

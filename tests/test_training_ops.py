@@ -54,10 +54,11 @@ def _winnow_sequential(text: str, k: int, w: int) -> set[tuple[int, str]]:
 )
 @settings(**SETTINGS)
 def test_winnow_matches_sequential(spark, docs):
-    """The distributed winnowing operator (run-length lead/lag
-    selection) selects exactly the positions the paper's per-window
-    sequential algorithm selects — tiny alphabet so hash ties and
-    repeated k-grams are actually exercised."""
+    """The winnowing operator (run-length selection in one
+    Arrow-batched scan) selects exactly the positions the paper's
+    per-window sequential algorithm selects, with the same hex hashes
+    — tiny alphabet so hash ties and repeated k-grams are actually
+    exercised."""
     from spark_query_engine.operators.textanalysis import winnow_fingerprints
 
     df = spark.createDataFrame(
@@ -73,17 +74,6 @@ def test_winnow_matches_sequential(spark, docs):
         for (pos, h) in _winnow_sequential(d, k=3, w=3)
     }
     assert got == want
-    # the Arrow substrate (forced via n_hint past the
-    # WINNOW_ARROW_MIN_DOCS dispatch) must select the exact same
-    # set — bit-identical hex,
-    # same tie semantics on the same tiny-alphabet tie-heavy corpus
-    arrow = {
-        (r["id"], r["pos"], r["h"])
-        for r in winnow_fingerprints(
-            df, "id", "text", k=3, w=3, n_hint=10**9
-        ).collect()
-    }
-    assert arrow == want
 
 
 def test_winnow_shared_substring_guarantee(spark):
@@ -592,9 +582,10 @@ def test_triangle_sampled_is_exact_at_p1(spark, sf_dir):
 
 
 def test_image_ahash_blocking_has_exact_recall(spark):
-    """The banded Hamming join must return exactly the brute-force
-    pair set over the real hash relation (pigeonhole guarantee), and
-    hashes must fit in two positive 32-bit words."""
+    """The multi-index Hamming join must return exactly the
+    brute-force pair set over the real hash relation (pigeonhole
+    guarantee) at every group width, and hashes must fit in two
+    positive 32-bit words."""
     from spark_query_engine.operators import multimodal as MM
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
@@ -602,10 +593,6 @@ def test_image_ahash_blocking_has_exact_recall(spark):
     rows = hs.collect()
     assert all(0 <= r["h_lo"] < 2**32 and 0 <= r["h_hi"] < 2**32 for r in rows)
 
-    got = {
-        (r["id_a"], r["id_b"]): r["hamming"]
-        for r in MM.ahash_near_duplicates(hs, max_distance=3, blocks=4).collect()
-    }
     want = {}
     for i, a in enumerate(rows):
         for b in rows[i + 1 :]:
@@ -615,20 +602,17 @@ def test_image_ahash_blocking_has_exact_recall(spark):
             ).count("1")
             if d <= 3:
                 want[(x, y)] = d
-    assert got == want
 
     # r9: the footer-sized multi-index schemes are EXACT at every
-    # group width — g=2 (disjoint pairs ≡ historical 16-bit bands),
-    # g=4 (C(8,4) byte-band groups, the ~1e9-image regime) both
-    # reproduce brute force on the same relation
-    for n_hint in (500, 10**9):
-        sized = {
+    # group width — g=2 (4 disjoint byte pairs = 16-bit bands), g=3,
+    # g=4 (C(8,4) byte-band groups, the ~1e9-image regime) and the
+    # clamped g=5 all reproduce brute force on the same relation
+    for n in (500, 1_048_577, 10**9, 10**14):
+        got = {
             (r["id_a"], r["id_b"]): r["hamming"]
-            for r in MM.ahash_near_duplicates(
-                hs, max_distance=3, n_hint=n_hint
-            ).collect()
+            for r in MM.ahash_near_duplicates(hs, n=n, max_distance=3).collect()
         }
-        assert sized == want
+        assert got == want, n
     # crossover pins for the group-size selector
     assert MM.ahash_group_size(500) == 2
     assert MM.ahash_group_size(1_048_576) == 2
@@ -639,7 +623,7 @@ def test_image_ahash_blocking_has_exact_recall(spark):
 
     # r10 (r9 ADVICE): at max_distance=4 the g=2 disjoint-pairs
     # shortcut is NOT pigeonhole-exact (4 errors can dirty all 4
-    # disjoint pairs) — the n_hint branch must fall back to all
+    # disjoint pairs) — the blocking must fall back to all
     # C(8,2) pairs and still reproduce brute force at d<=4
     want4 = {}
     for i, a in enumerate(rows):
@@ -652,9 +636,7 @@ def test_image_ahash_blocking_has_exact_recall(spark):
                 want4[(x, y)] = d
     got4 = {
         (r["id_a"], r["id_b"]): r["hamming"]
-        for r in MM.ahash_near_duplicates(
-            hs, max_distance=4, n_hint=500
-        ).collect()
+        for r in MM.ahash_near_duplicates(hs, n=500, max_distance=4).collect()
     }
     assert got4 == want4
     # the occupancy term follows: ngroups=28 at d=4 crosses to g=3

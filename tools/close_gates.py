@@ -282,13 +282,6 @@ SCAN_FANOUT_ALLOWLIST = {
     "ann_hybrid_search": 1,
     "join_salted_skew": 1,
     "text_bm25_search": 1,
-    # the JVM array path's selected-position explode, taken only
-    # below WINNOW_ARROW_MIN_DOCS (2,000) docs — the gate walks plans
-    # at sf0.001 where this path is active; at bench scales the
-    # operator dispatches to the zero-shuffle Arrow substrate and a
-    # widen in front of it measured 2.31 s -> 6.11 s at sf1
-    # (SCALING.md 11e)
-    "corpus_winnow_fingerprint": 1,
 }
 
 
