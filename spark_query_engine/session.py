@@ -6,6 +6,15 @@ skew-join handling, partition coalescing), shuffle partitions sized to
 the parallelism at hand, UTC session timezone (required for byte-exact
 agreement with the DuckDB oracle on timestamp values), and Arrow
 enabled for the few Pandas-UDF operators.
+
+On a ``local…`` master, streaming checkpoints (offset, commit and
+source logs, the file sink's ``_spark_metadata`` and state-store
+deltas) go through Spark's ``FileSystemBasedCheckpointFileManager``.
+The default FileContext manager's rename on the local filesystem
+forks the ``readlink`` binary twice per file when Hadoop's native
+library is absent; on one local filesystem both managers end in the
+same ``rename(2)``, with the same ``.crc`` files and the same layout.
+Cluster masters keep Spark's default, whose rename is atomic on HDFS.
 """
 
 from __future__ import annotations
@@ -13,6 +22,11 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+CHECKPOINT_MANAGER_LOCAL = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
 
 
 def default_driver_memory() -> str:
@@ -35,6 +49,12 @@ def get_session(
     Defaults are environment-driven so the same code runs under the
     driver harness (``SPARK_GRAFT_CPUS``) and on a real cluster (where
     ``master`` comes from spark-submit and these become no-ops).
+
+    A ``local…`` master writes streaming checkpoints through the
+    FileSystem checkpoint manager: the FileContext default renames
+    each checkpoint file by way of ``readlink`` child processes,
+    which took most of a trigger's commit time. ``extra_conf`` can
+    still set ``spark.sql.streaming.checkpointFileManagerClass``.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     if master is None:
@@ -59,6 +79,11 @@ def get_session(
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
+    if master.startswith("local"):
+        builder = builder.config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            CHECKPOINT_MANAGER_LOCAL,
+        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -432,7 +432,14 @@ def write_foreach_batch_parquet(
     every part file, so it would also read the files of a batch that
     failed before its commit. The name predates this sink, which no longer runs
     a ``foreachBatch`` callback; it is kept because callers, the
-    benchmark's stream workload among them, use it."""
+    benchmark's stream workload among them, use it.
+
+    Checkpoint manager: a session from ``get_session`` on a ``local…``
+    master writes the checkpoint, the state deltas and the
+    ``_spark_metadata`` log through Spark's
+    ``FileSystemBasedCheckpointFileManager``; other masters keep
+    Spark's default FileContext manager. Both lay the checkpoint out
+    the same way, so either one resumes the other's."""
     q = (
         stream_df.writeStream.format("parquet")
         .option("path", out_dir)

@@ -212,3 +212,46 @@ def test_default_driver_memory_fits_host(monkeypatch):
         mib = int(mem[:-1])
         assert 0 < mib << 20 <= min(host // 2, 16 << 30), (host, mem)
     assert session.default_driver_memory() == "16384m"  # the 256 GiB host
+
+
+def test_checkpoint_manager_set_for_local_masters_only(monkeypatch):
+    """A ``local…`` master gets the FileSystem checkpoint manager, a
+    cluster master keeps Spark's default, and ``extra_conf`` wins."""
+    from spark_query_engine import session
+
+    class Builder:
+        def __init__(self):
+            self.conf = {}
+
+        def appName(self, _name):
+            return self
+
+        def master(self, _master):
+            return self
+
+        def config(self, k, v):
+            self.conf[k] = v
+            return self
+
+        def getOrCreate(self):
+            return self
+
+        @property
+        def sparkContext(self):
+            return self
+
+        def setLogLevel(self, _level):
+            pass
+
+    key = "spark.sql.streaming.checkpointFileManagerClass"
+    for master, extra, want in (
+        ("local[2]", None, session.CHECKPOINT_MANAGER_LOCAL),
+        ("local-cluster[2,1,1024]", None, session.CHECKPOINT_MANAGER_LOCAL),
+        ("spark://host:7077", None, None),
+        ("yarn", None, None),
+        ("local[2]", {key: "x.Mine"}, "x.Mine"),
+    ):
+        fake = type("SparkSession", (), {"builder": Builder()})
+        monkeypatch.setattr(session, "SparkSession", fake)
+        conf = session.get_session(master=master, extra_conf=extra).conf
+        assert conf.get(key) == want, master

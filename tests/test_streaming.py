@@ -5,11 +5,14 @@ unified model makes them the same transformation)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
 from spark_query_engine import streaming as ST
 from spark_query_engine.queries import load
+from spark_query_engine.session import CHECKPOINT_MANAGER_LOCAL
 
 
 @pytest.fixture(scope="module")
@@ -273,6 +276,97 @@ def test_foreach_batch_parquet_sink(spark, sf_dir, tmp_path, events_stream):
     written = spark.read.parquet(str(out))
     assert written.count() == load(spark, sf_dir, "events").count()
     assert written.select("event_id").distinct().count() == written.count()
+
+
+def test_local_checkpoint_manager_keeps_checksums(spark, tmp_path, events_stream):
+    """A local session writes checkpoints through the FileSystem
+    checkpoint manager, and every state delta keeps both checksums:
+    Spark's CRC32C sidecar ``N.delta.crc`` and Hadoop's ``.N.delta.crc``."""
+    jvm = spark._jvm
+    checkpointing = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    manager = checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(f"file:{tmp_path}"),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+    assert manager.getClass().getName() == CHECKPOINT_MANAGER_LOCAL
+
+    ckpt = tmp_path / "ckpt"
+    agg = ST.tumbling_counts(events_stream, "1 hour", "30 minutes")
+    ST.write_foreach_batch_parquet(agg, str(tmp_path / "out"), str(ckpt))
+    deltas = sorted((ckpt / "state" / "0").glob("*/*.delta"))
+    assert deltas
+    for d in deltas:
+        assert d.with_name(f"{d.name}.crc").is_file(), d
+        assert d.with_name(f".{d.name}.crc").is_file(), d
+
+
+def test_checkpoint_resumes_across_manager_switch(spark, sf_dir, tmp_path):
+    """A checkpoint written by Spark's default FileContext manager
+    resumes under the engine's local default: the second drain picks
+    up the offsets and window state of the first, and the sink ends
+    equal to the batch aggregation over every closed window, each
+    row once."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    events = pq.read_table(f"{sf_dir}/events.parquet")
+    events = events.take(pc.sort_indices(events, [("ts", "ascending")]))
+    src, out, ckpt = tmp_path / "src", tmp_path / "out", tmp_path / "ckpt"
+    src.mkdir()
+    step = -(-events.num_rows // 4)
+
+    def release(i):
+        # in event-time order, one micro-batch per file, so no event is late
+        path = src / f"part{i}.parquet"
+        pq.write_table(events.slice(i * step, step), path)
+        os.utime(path, (1_700_000_000 + i,) * 2)
+
+    def drain():
+        agg = ST.tumbling_counts(
+            ST.stream_from_parquet_dir(spark, str(src)), "1 hour", "30 minutes"
+        )
+        ST.write_foreach_batch_parquet(agg, str(out), str(ckpt))
+
+    key = "spark.sql.streaming.checkpointFileManagerClass"
+    engine_default = spark.conf.get(key)
+    for i in range(2):
+        release(i)
+    spark.conf.set(
+        key,
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileContextBasedCheckpointFileManager",
+    )
+    try:
+        drain()
+    finally:
+        spark.conf.set(key, engine_default)
+    first = spark.read.parquet(str(out)).count()
+    for i in range(2, 4):
+        release(i)
+    drain()
+
+    got = [
+        (r["window_start"].replace(tzinfo=None), r["event_type"],
+         r["n_events"], r["total_value"])
+        for r in spark.read.parquet(str(out)).collect()
+    ]
+    batch = load(spark, sf_dir, "events")
+    closes = F.max("ts") - F.expr("INTERVAL 30 MINUTES")
+    watermark = batch.select(closes).first()[0]
+    want = [
+        (r["ws"], r["event_type"], r["n"], r["v"])
+        for r in batch.groupBy(F.window("ts", "1 hour"), "event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.round(F.sum("value"), 2).alias("v"),
+        )
+        .where(F.col("window.end") <= F.lit(watermark))
+        .select(F.col("window.start").alias("ws"), "event_type", "n", "v")
+        .collect()
+    ]
+    assert 0 < first < len(got)
+    assert len(set(got)) == len(got)
+    assert sorted(got) == sorted(want)
 
 
 def test_stream_stream_interval_join_matches_batch(spark, sf_dir, events_stream):

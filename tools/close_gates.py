@@ -16,9 +16,10 @@ Gates, in order (fail-fast):
      equals ``len(queries())``; every bench.HEADLINE name is
      registered; every query has an oracle or is on the documented
      rows-only list.
-  4. plan audit (one walk, two invariants): no registered query's
-     optimized plan carries an unpartitioned Window node unless its
-     support is bounded and allowlisted (GLOBAL_WINDOW_ALLOWLIST),
+  4. plan audit (one walk over the plans built on ``sf_dir``, two
+     invariants): no registered query's optimized plan carries an
+     unpartitioned Window node unless its support is bounded and
+     allowlisted (GLOBAL_WINDOW_ALLOWLIST),
      and no Generate fan-out feeds straight off an unshuffled file
      scan unless adjudicated (SCAN_FANOUT_ALLOWLIST — the SCALING.md
      11c split-count-inheritance defect class).
@@ -474,7 +475,7 @@ def main() -> int:
         return 1
 
     print("== gate 4/5: global-window plan audit ==", flush=True)
-    errs = gate_global_windows()
+    errs = gate_global_windows(sf_dir)
     if errs:
         for e in errs:
             print(" -", e)
