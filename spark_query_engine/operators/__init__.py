@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def widen(df: DataFrame, min_factor: int = 1) -> DataFrame:
+def widen(df: DataFrame) -> DataFrame:
     """Ensure at least defaultParallelism partitions before expensive
     per-row work (shingling, hashing, UDF batches).
 
@@ -29,7 +29,7 @@ def widen(df: DataFrame, min_factor: int = 1) -> DataFrame:
     under-approximates splits only for multi-split large files, and a
     table that large does not need widening in the first place.
     """
-    target = df.sparkSession.sparkContext.defaultParallelism * min_factor
+    target = df.sparkSession.sparkContext.defaultParallelism
     try:
         n_splits = len(df.inputFiles())
     except Exception:

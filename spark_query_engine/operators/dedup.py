@@ -104,14 +104,14 @@ def exact_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 _MINHASH_PRIME = 4294967311  # smallest prime > 2^32
 
 
-def _minhash_params(num_hashes: int, seed: int = 11) -> list[tuple[int, int]]:
+def _minhash_params(num_hashes: int) -> list[tuple[int, int]]:
     """Deterministic affine-permutation coefficients (a_j, b_j) drawn
     from [1, 2^30) — caps a_j·h at 2^62 (h < 2^32), so the arithmetic
     is exact signed-64-bit in any engine, no ANSI overflow. Fixed seed
-    for cross-run/cross-engine reproducibility."""
+    (11) for cross-run/cross-engine reproducibility."""
     import numpy as np
 
-    rng = np.random.RandomState(seed)
+    rng = np.random.RandomState(11)
     bound = 1 << 30
     params = [
         (int(rng.randint(1, bound)), int(rng.randint(0, bound)))

@@ -7,7 +7,7 @@ canonical one, which document a crawl graph keeps linking back to.
 Same distributed shape as CC: a checkpointed symmetric edge relation,
 one equi-join + one aggregation per round, lineage truncated with
 ``localCheckpoint``. No driver-side loop over data — only the scalar
-node count crosses to the driver (the damping constant's 1/N term).
+seed count crosses to the driver (the teleport term's 1/|S|).
 """
 
 from __future__ import annotations
@@ -28,103 +28,42 @@ def copurchase_pairs(li: DataFrame) -> DataFrame:
     )
 
 
-def _truncate_deep_lineage(
-    df: DataFrame, i: int, iterations: int, every: int = 8
-) -> DataFrame:
+#: Past 15 rounds, the round chain's lineage is cut every this many rounds.
+_LINEAGE_EVERY = 8
+
+
+def _truncate_deep_lineage(df: DataFrame, i: int, iterations: int) -> DataFrame:
     """Bound the lazy round-chain's PLAN depth for large iteration
     counts (r7 advice row): the lazy chaining that wins at the
     registered 5 rounds builds an O(iterations)-deep join+aggregate
     plan whose Catalyst analysis/codegen cost grows sharply past
-    ~15 rounds. Above that, cut lineage every ``every`` rounds with a
-    LAZY localCheckpoint — no job is forced at the cut (materializes
-    on first downstream use), so fixed-small-round callers are
-    untouched and deep library calls stay plannable. Values are
-    unchanged either way (checkpointing replays the same 9dp-rounded
-    state)."""
-    if iterations > 15 and (i + 1) % every == 0 and (i + 1) < iterations:
+    ~15 rounds. Above that, cut lineage every ``_LINEAGE_EVERY``
+    rounds with a LAZY localCheckpoint — no job is forced at the cut
+    (materializes on first downstream use), so fixed-small-round
+    callers are untouched and deep library calls stay plannable.
+    Values are unchanged either way (checkpointing replays the same
+    9dp-rounded state)."""
+    if iterations > 15 and (i + 1) % _LINEAGE_EVERY == 0 and (i + 1) < iterations:
         return cut_lineage(df, eager=False)
     return df
 
 
 def pagerank(
-    pairs: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    iterations: int = 5,
-    damping: float = 0.85,
-    round_decimals: int = 9,
+    pairs: DataFrame, src: str = "id_a", dst: str = "id_b", iterations: int = 5
 ) -> DataFrame:
     """PageRank on the UNDIRECTED graph of ``pairs`` (each pair
-    contributes both directions). Fixed ``iterations`` rounds of
+    contributes both directions): ``personalized_pagerank`` with every
+    node a seed, so the teleport term is the uniform (1-d)/N of
 
         pr'(v) = (1-d)/N + d * Σ_{u~v} pr(u)/deg(u)
 
-    with every round's ranks ROUNDed to ``round_decimals`` — the
-    repo's iterative float discipline (see kmeans_fit): rounding
-    between rounds pins the running state to values every engine
-    agrees on, so an unrolled SQL replay matches bit-for-bit.
-
-    Per round: edges ⋈ ranks (equi-join on the node id both relations
-    are already hash-partitioned by) + one sum-aggregation on the
-    destination id; symmetric edges mean every node receives a
-    contribution, so no dangling-mass term is needed.
-
-    Round-7 cost model: the round count is FIXED and each round's
-    state is consumed exactly once (by the next round), so the rounds
-    chain LAZILY into ONE job — no per-round persist + count + job
-    barrier, which the round-6 bench measured as the dominant cost
-    of the iterative family (round-latency-bound, exponent ~0.2).
-    Only the edge+degree relation is cut (it appears in every
-    round); convergence semantics are untouched — same joins, same
-    per-round 9dp rounding, bit-identical output. Unlike the CC loop
-    the driver makes no per-round decision here, so nothing forces
-    materialization. The two barriers are lazy ``cut_lineage``
-    checkpoints, which Spark's ContextCleaner reclaims once the result
-    is garbage-collected; there is no cache to release.
-
-    Returns (id, pr) for every node in ``pairs``.
+    and the values are bit-identical to a dedicated loop (1·base is
+    exact and 1/|S| = 1/N). Returns (id, pr) for every node in
+    ``pairs``.
     """
-    e = pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    # barrier the symmetric edges FIRST: pairs is usually a lazy
-    # candidate-generation DAG (shingles → signatures → band join), and
-    # without this both deg and ed would re-run that whole pipeline.
-    # r11: LAZY localCheckpoint instead of persist — same single
-    # evaluation, but the round chain references ``ed`` once per round
-    # and a persist leaves the full candidate lineage in every
-    # reference's analyzed plan (the r10 plan: 356 Exchange / 177
-    # scans printed for 5 rounds); the checkpoint truncates each
-    # reference to a leaf (the cascade-census pattern, measured there
-    # 15.1 s degrading → 6.9 s stable).
-    sym = cut_lineage(
-        e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v"))),
-        eager=False,
-    )
-    deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
-    ed = cut_lineage(
-        sym.join(deg, "u").select("u", "v", "deg"), eager=False
-    )
-
-    n = deg.count()  # scalar model state, as in any iterative job
-    # derive (1-d)/N from the same /1000 rational the SQL oracle
-    # writes literally: (1.0-0.85)/n is 0.15000000000000002/n, one ULP
-    # above the oracle's 0.15/n — a divergence feeding the per-round
-    # rounded state (the repo's pinned-state float discipline)
-    base = round(1000.0 - damping * 1000.0) / 1000.0 / n
-    ranks = deg.select("u", F.lit(1.0 / n).alias("pr"))
-    for i in range(iterations):
-        ranks = (
-            ed.join(ranks, "u")
-            .groupBy(F.col("v").alias("u"))
-            .agg(
-                F.round(
-                    F.lit(base)
-                    + F.lit(damping) * F.sum(F.col("pr") / F.col("deg")),
-                    round_decimals,
-                ).alias("pr")
-            )
-        )
-        ranks = _truncate_deep_lineage(ranks, i, iterations)
-    return ranks.select(F.col("u").alias("id"), "pr")
+    return personalized_pagerank(
+        pairs, src, dst, seed_mod=1, iterations=iterations
+    ).select("id", "pr")
 
 
 def personalized_pagerank(
@@ -133,8 +72,6 @@ def personalized_pagerank(
     dst: str = "id_b",
     seed_mod: int = 5,
     iterations: int = 5,
-    damping: float = 0.85,
-    round_decimals: int = 9,
 ) -> DataFrame:
     """Personalized PageRank (Jeh & Widom 2003) on the undirected graph
     of ``pairs``: the teleport mass restarts at a SEED set (here the
@@ -149,11 +86,21 @@ def personalized_pagerank(
     (docs tightly linked to trusted seeds score high; isolated spam
     clusters decay geometrically).
 
-    Same distributed shape and float discipline as ``pagerank``, and
-    the same round-7 cost model: a FIXED round count whose state is
-    consumed once per round chains LAZILY into one job — no per-round
+    with d = 0.85 and every round's ranks ROUNDed to 9 decimals — the
+    repo's iterative float discipline (see kmeans_fit): rounding
+    between rounds pins the running state to values every engine
+    agrees on, so an unrolled SQL replay matches bit-for-bit.
+
+    Per round: edges ⋈ ranks (equi-join on the node id) + one
+    sum-aggregation on the destination id; symmetric edges mean every
+    node receives a contribution, so no dangling-mass term is needed.
+    Round-7 cost model: a FIXED round count whose state is consumed
+    once per round chains LAZILY into one job — no per-round
     persist/count/localCheckpoint barriers (the measured dominant
-    cost of the iterative family at sf0.1). Two per-round fusions on
+    cost of the iterative family at sf0.1). Only the edge+degree
+    relation is cut (it appears in every round), with lazy
+    ``cut_lineage`` checkpoints that Spark's ContextCleaner reclaims
+    once the result is garbage-collected. Two per-round fusions on
     top: the seed flag is derived from the id EXPRESSION instead of
     re-joining the nodes relation every round (one join fewer per
     round), and the teleport+damping projection folds into the
@@ -163,9 +110,13 @@ def personalized_pagerank(
     Returns (id, is_seed, pr) for every node in ``pairs``.
     """
     e = pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    # r11: lazy localCheckpoint barriers (see ``pagerank`` above) —
-    # same single evaluation, leaf-truncated lineage per round
-    # reference.
+    # barrier the symmetric edges FIRST: pairs is usually a lazy
+    # candidate-generation DAG (shingles → signatures → band join), and
+    # without this both deg and ed would re-run that whole pipeline.
+    # r11: LAZY localCheckpoint instead of persist — the round chain
+    # references ``ed`` once per round, and the checkpoint truncates
+    # each reference to a leaf (a persist left the full candidate
+    # lineage in every reference's analyzed plan).
     sym = cut_lineage(
         e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v"))),
         eager=False,
@@ -178,7 +129,9 @@ def personalized_pagerank(
     seed = (F.col("u") % seed_mod == 0).cast("int")
     nodes = deg.select("u", seed.alias("is_seed"))
     ns = nodes.where(F.col("is_seed") == 1).count()
-    base = round(1000.0 - damping * 1000.0) / 1000.0 / ns
+    # 1 - d written as the oracle's literal 0.15: (1.0 - 0.85) is
+    # 0.15000000000000002, one ULP above it
+    base = 0.15 / ns
     ranks = nodes.select(
         "u", (F.col("is_seed") / F.lit(float(ns))).alias("pr")
     )
@@ -190,9 +143,7 @@ def personalized_pagerank(
             .select(
                 "u",
                 F.round(
-                    seed * F.lit(base)
-                    + F.lit(damping) * F.col("mass"),
-                    round_decimals,
+                    seed * F.lit(base) + F.lit(0.85) * F.col("mass"), 9
                 ).alias("pr"),
             )
         )

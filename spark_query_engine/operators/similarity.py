@@ -310,19 +310,17 @@ _CP_CURVE: dict[float, dict[tuple[int, int], tuple[float, float]]] = {
 }
 
 
-def cp_arity(
-    n: int, bands: int, dim: int = 64, target_occupancy: int = 64
-) -> int:
+def cp_arity(n: int, bands: int, dim: int = 64) -> int:
     """Key arity m for n vectors — the round-6 scaling rule in
     integer arithmetic (EXACT, so a SQL oracle replays it without
     float-log edge cases): the per-band key space must grow with the
     corpus, (2·dim)^m buckets, m chosen as the smallest arity keeping
-    expected bucket occupancy ≤ ``target_occupancy`` —
-    m = min{ m ≥ 1 : n·bands ≤ occ·(2d)^m }, capped at 5 (that cap
+    expected bucket occupancy ≤ 64 —
+    m = min{ m ≥ 1 : n·bands ≤ 64·(2d)^m }, capped at 5 (that cap
     is n ≈ 5e14 at d=64; see SCALING.md round-6 for the collision
     math: fixed arity ⇒ background candidates ∝ n²/(2d)^m)."""
     m, space = 1, 2 * dim
-    while m < 5 and n * bands > target_occupancy * space:
+    while m < 5 and n * bands > 64 * space:
         m += 1
         space *= 2 * dim
     return m
@@ -955,6 +953,19 @@ def pq_train_codebooks(
     return cbs
 
 
+def _query_bucket(q: list[float], planes: list[list[float]]) -> int:
+    """The query's LSH bucket, folded per plane in ``_bucket_expr``'s
+    order so it matches the bucket Spark computes for the same vector."""
+    qbucket = 0
+    for p, plane in enumerate(planes):
+        dot = 0.0
+        for x, w in zip(q, plane):
+            dot += x * w
+        if dot > 0:
+            qbucket |= 1 << p
+    return qbucket
+
+
 def ann_topk_lsh(
     df: DataFrame,
     id_col: str,
@@ -965,28 +976,9 @@ def ann_topk_lsh(
     exclude_id=None,
 ) -> DataFrame:
     """Approximate top-k: probe only the query's LSH bucket, rank by
-    exact cosine within it. At scale the bucket column is a partition/
-    cluster key, so the probe reads ~1/2^n_planes of the data."""
-    q = [float(x) for x in query_vec]
-    qbucket = 0
-    for p, plane in enumerate(planes):
-        dot = 0.0
-        for x, w in zip(q, plane):
-            dot += x * w
-        if dot > 0:
-            qbucket |= 1 << p
-    bucketed = lsh_bucket(df, id_col, vec_col, planes).where(
-        F.col("bucket") == qbucket
-    )
-    if exclude_id is not None:
-        bucketed = bucketed.where(F.col("id") != exclude_id)
-    qlit = nested_sql(q)
-    return (
-        bucketed.select(
-            "id", F.expr(f"round({cosine('vec', qlit)}, 6)").alias("cos_sim")
-        )
-        .orderBy(F.col("cos_sim").desc(), F.col("id"))
-        .limit(k)
+    exact cosine within it — the zero-flip ``ann_topk_lsh_multiprobe``."""
+    return ann_topk_lsh_multiprobe(
+        df, id_col, vec_col, query_vec, planes, k, max_flips=0, exclude_id=exclude_id
     )
 
 
@@ -1006,20 +998,16 @@ def ann_topk_lsh_multiprobe(
     falls on the wrong side with probability ∝ its margin; probing
     1-flip neighbors recovers exactly those borderline misses —
     recall rises from the single-probe (1-p)^planes at the cost of
-    1 + n_planes buckets instead of one (still ~(1+n)/2^n of the
-    table; partition pruning still applies because the probe set is
-    a literal list at plan time, not a runtime predicate)."""
+    1 + n_planes buckets instead of one. The ball is one per-row
+    predicate, ``bit_count(bucket ^ q) <= max_flips``, on the bucket
+    this plan computes: every vector is still hashed, and the probe
+    cuts only what the cosine rerank and the sort see. It prunes no
+    file or partition; that would take a stored bucket column and
+    the ball as a literal list."""
     q = [float(x) for x in query_vec]
-    qbucket = 0
-    for p, plane in enumerate(planes):
-        dot = 0.0
-        for x, w in zip(q, plane):
-            dot += x * w
-        if dot > 0:
-            qbucket |= 1 << p
     bucketed = lsh_bucket(df, id_col, vec_col, planes).where(
         F.bit_count(
-            F.col("bucket").bitwiseXOR(F.lit(qbucket))
+            F.col("bucket").bitwiseXOR(F.lit(_query_bucket(q, planes)))
         )
         <= max_flips
     )

@@ -14,6 +14,8 @@ hashes, not approximate values.
 
 from __future__ import annotations
 
+import functools
+import string
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -47,6 +49,32 @@ def query(name: str, oracle: str | None = None):
             )
         REGISTRY[name] = Query(name, fn, oracle)
         return fn
+
+    return deco
+
+
+def sql_query(name: str, text: str):
+    """Register a query whose Spark SQL and DuckDB oracle are one text.
+
+    ``text`` names each testdata table as a ``{table}`` placeholder;
+    literal braces are doubled, as in ``str.format``. The oracle is the
+    text with each placeholder filled by the table's own name
+    (``{orders}`` → ``orders``). Spark runs the same text as
+    ``spark.sql(text, orders=load(spark, sf_dir, "orders"), ...)``,
+    which binds each DataFrame to a temp view only while the text is
+    parsed, so no named view is left in the caller's session. The
+    decorated function gives the query its name, docstring and family
+    module; its body is never called."""
+    fields = (f for _, f, _, _ in string.Formatter().parse(text) if f)
+    tables = list(dict.fromkeys(fields))
+    oracle = text.format(**{t: t for t in tables})
+
+    def deco(fn):
+        @functools.wraps(fn)
+        def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+            return spark.sql(text, **{t: load(spark, sf_dir, t) for t in tables})
+
+        return query(name, oracle)(run)
 
     return deco
 

@@ -303,15 +303,15 @@ def udtf_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
                     yield (f"{a} {b}",)
 
     spark.udtf.register("bigrams_udtf", Bigrams)
-    load(spark, sf_dir, "documents").createOrReplaceTempView("docs_udtf")
     return spark.sql(
         """
         SELECT b.bigram, COUNT(*) AS n
-        FROM docs_udtf, LATERAL bigrams_udtf(text) AS b
+        FROM {documents}, LATERAL bigrams_udtf(text) AS b
         GROUP BY b.bigram
         ORDER BY n DESC, b.bigram
         LIMIT 50
-        """
+        """,
+        documents=load(spark, sf_dir, "documents"),
     )
 
 
@@ -401,11 +401,11 @@ def udtf_polymorphic_onehot(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
     spark.udtf.register("onehot_udtf", udtf(OneHot))
-    load(spark, sf_dir, "documents").createOrReplaceTempView("docs_onehot")
     return spark.sql(
         """
         SELECT d.doc_id, o.*
-        FROM docs_onehot d,
+        FROM {documents} d,
              LATERAL onehot_udtf(d.lang, 'en,de,fr,es,zh') o
-        """
+        """,
+        documents=load(spark, sf_dir, "documents"),
     )

@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from spark_query_engine.operators import carry_caches, release_on_drop, widen
 from spark_query_engine.operators import dedup as D
 from spark_query_engine.operators import textanalysis as T
-from spark_query_engine.queries import EVENTS_ORACLE, footer_rows, load, query
+from spark_query_engine.queries import EVENTS_ORACLE, footer_rows, load, query, sql_query
 from spark_query_engine.queries.dedup import (
     _INTER_SIZES,
     _SHINGLE_INTER,
@@ -55,16 +55,16 @@ def corpus_normalize_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+@sql_query(
     "corpus_length_gate",
-    oracle="""
+    """
         WITH b AS (
             SELECT percentile_cont(0.05) WITHIN GROUP (ORDER BY n_chars) AS lo,
                    percentile_cont(0.95) WITHIN GROUP (ORDER BY n_chars) AS hi
-            FROM documents
+            FROM {documents}
         )
         SELECT d.doc_id, d.lang, d.n_chars
-        FROM documents d, b
+        FROM {documents} d, b
         WHERE d.n_chars BETWEEN b.lo AND b.hi
     """,
 )
@@ -76,24 +76,11 @@ def corpus_length_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     reduction to a single row that broadcasts back over the scan (no
     second shuffle of the corpus); linear interpolation over integer
     lengths is float-identical across engines."""
-    load(spark, sf_dir, "documents").createOrReplaceTempView("documents_gate")
-    return spark.sql(
-        """
-        WITH b AS (
-            SELECT percentile_cont(0.05) WITHIN GROUP (ORDER BY n_chars) AS lo,
-                   percentile_cont(0.95) WITHIN GROUP (ORDER BY n_chars) AS hi
-            FROM documents_gate
-        )
-        SELECT d.doc_id, d.lang, d.n_chars
-        FROM documents_gate d, b
-        WHERE d.n_chars BETWEEN b.lo AND b.hi
-        """
-    )
 
 
-@query(
+@sql_query(
     "corpus_source_mix",
-    oracle="""
+    """
         SELECT lang, source,
                COUNT(*) AS n_docs,
                CAST(SUM(n_chars) AS BIGINT) AS sum_chars,
@@ -103,7 +90,7 @@ def corpus_length_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
                          ROWS UNBOUNDED PRECEDING)
                      * CAST(1.0 AS DOUBLE) / SUM(COUNT(*)) OVER (), 6)
                    AS cum_share
-        FROM documents
+        FROM {documents}
         GROUP BY lang, source
         ORDER BY n_docs DESC, lang, source
     """,
@@ -116,23 +103,6 @@ def corpus_source_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     the AGGREGATED relation (|langs|x|sources| rows, not documents),
     so the window stage is negligible at any corpus size. Integer
     counts keep every ratio float-exact cross-engine."""
-    load(spark, sf_dir, "documents").createOrReplaceTempView("documents_mix")
-    return spark.sql(
-        """
-        SELECT lang, source,
-               COUNT(*) AS n_docs,
-               CAST(SUM(n_chars) AS BIGINT) AS sum_chars,
-               ROUND(CAST(COUNT(*) AS DOUBLE) / SUM(COUNT(*)) OVER (), 6) AS share,
-               ROUND(SUM(COUNT(*)) OVER (
-                         ORDER BY COUNT(*) DESC, lang, source
-                         ROWS UNBOUNDED PRECEDING)
-                     * CAST(1.0 AS DOUBLE) / SUM(COUNT(*)) OVER (), 6)
-                   AS cum_share
-        FROM documents_mix
-        GROUP BY lang, source
-        ORDER BY n_docs DESC, lang, source
-        """
-    )
 
 
 @query(
@@ -273,19 +243,13 @@ def corpus_curate_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     parts without a single collect or recompute of the corpus."""
     docs = load(spark, sf_dir, "documents")
     norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
-    docs.select(
-        "doc_id", "lang", "n_chars", "text", F.md5(norm).alias("norm_fp")
-    ).createOrReplaceTempView("docs_cf")
-    T.repetition_metrics(docs, "doc_id", "text").createOrReplaceTempView(
-        "repmetrics_cf"
-    )
     return spark.sql(
         f"""
         WITH reps AS (
-            SELECT MIN(doc_id) AS doc_id FROM docs_cf GROUP BY norm_fp
+            SELECT MIN(doc_id) AS doc_id FROM {{docs}} GROUP BY norm_fp
         ),
         base AS (SELECT d.doc_id, d.lang, d.n_chars
-                 FROM docs_cf d JOIN reps USING (doc_id)),
+                 FROM {{docs}} d JOIN reps USING (doc_id)),
         b AS (
             SELECT percentile_cont(0.05) WITHIN GROUP (ORDER BY n_chars) AS lo,
                    percentile_cont(0.95) WITHIN GROUP (ORDER BY n_chars) AS hi
@@ -294,7 +258,7 @@ def corpus_curate_full(spark: SparkSession, sf_dir: str) -> DataFrame:
         clean AS (
             SELECT base.doc_id, base.lang, base.n_chars
             FROM base, b
-            JOIN repmetrics_cf r ON base.doc_id = r.id
+            JOIN {{repmetrics}} r ON base.doc_id = r.id
             WHERE base.n_chars BETWEEN b.lo AND b.hi
               AND r.top_unigram_frac < 0.14 AND r.dup_trigram_frac <= 0.05
         ),
@@ -307,7 +271,11 @@ def corpus_curate_full(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM clean c JOIN rates r ON c.lang = r.lang
         WHERE conv(substr(md5(CAST(c.doc_id AS STRING)), 1, 8), 16, 10)
               % 1000000 < rate * 1000000
-        """
+        """,
+        docs=docs.select(
+            "doc_id", "lang", "n_chars", "text", F.md5(norm).alias("norm_fp")
+        ),
+        repmetrics=T.repetition_metrics(docs, "doc_id", "text"),
     )
 
 
@@ -591,17 +559,18 @@ def corpus_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _minhash_oracle_ctes(num_hashes: int = 16, bands: int = 4) -> str:
+def _minhash_oracle_ctes() -> str:
     """DuckDB CTEs replicating ``dedup.minhash_signatures`` +
-    ``lsh_candidate_pairs`` bit-for-bit: same md5 base hash, same
-    affine (a, b) parameters (embedded as literals from the shared
-    seeded generator), same banded md5 keys — so the CANDIDATE set,
-    not just the verified output, is oracle-checkable."""
+    ``lsh_candidate_pairs`` at 16 hashes in 4 bands bit-for-bit: same
+    md5 base hash, same affine (a, b) parameters (embedded as literals
+    from the shared seeded generator), same banded md5 keys — so the
+    CANDIDATE set, not just the verified output, is oracle-checkable."""
     from spark_query_engine.operators.dedup import (
         _MINHASH_PRIME,
         _minhash_params,
     )
 
+    num_hashes, bands = 16, 4
     params = _minhash_params(num_hashes)
     rows = num_hashes // bands
     mins = ",\n               ".join(
@@ -781,20 +750,20 @@ def corpus_temperature_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     are kept on every engine, run, and partitioning. Rates are
     6dp-rounded on both sides and the uniform lives on the 1e-6 grid,
     making the boundary comparison integer-exact."""
-    load(spark, sf_dir, "documents").createOrReplaceTempView("documents_temp")
     return spark.sql(
         f"""
         WITH stats AS (
             SELECT lang, COUNT(*) AS n_l,
                    SUM(COUNT(*)) OVER () AS n_total
-            FROM documents_temp GROUP BY lang
+            FROM {{documents}} GROUP BY lang
         ),
         {_TEMPERATURE_RATES_SQL}
         SELECT d.doc_id, d.lang
-        FROM documents_temp d JOIN rates r ON d.lang = r.lang
+        FROM {{documents}} d JOIN rates r ON d.lang = r.lang
         WHERE conv(substr(md5(CAST(d.doc_id AS STRING)), 1, 8), 16, 10)
               % 1000000 < rate * 1000000
-        """
+        """,
+        documents=load(spark, sf_dir, "documents"),
     )
 
 
@@ -2510,16 +2479,17 @@ def corpus_mixture_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ppr_oracle_iters(t: int = 5, seed_mod: int = 5) -> str:
+def _ppr_oracle_iters(t: int = 5) -> str:
     """Unrolled personalized-PageRank rounds over the replayed LSH
-    candidate graph — teleport mass restricted to the seed set, same
+    candidate graph — teleport mass restricted to the seed set
+    (``id % 5 = 0``), same
     per-round 9dp rounding as operators/graph.personalized_pagerank."""
     iters = []
     for i in range(1, t + 1):
         iters.append(
             f"""p{i} AS (
             SELECT e.dst AS id,
-                   ROUND(CASE WHEN e.dst % {seed_mod} = 0
+                   ROUND(CASE WHEN e.dst % 5 = 0
                               THEN 0.15/(SELECT n FROM nseeds)
                               ELSE 0.0 END
                          + 0.85*SUM(r.pr/d.deg), 9) AS pr

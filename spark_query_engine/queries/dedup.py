@@ -267,9 +267,7 @@ def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.connected_components(pairs)
 
 
-def _cp_key_ctes(
-    bands: int, rank: int, dim: int = 64, dynamic_arity: bool = False
-) -> str:
+def _cp_key_ctes(bands: int, rank: int, dynamic_arity: bool = False) -> str:
     """DuckDB CTE fragment replaying ``similarity.cp_keys`` over a CTE
     named ``v(id, vec)``: md5-rebuilt pseudo-rotations → 6dp-rounded
     rotated coordinates → signed-argmax rank-1/rank-2 keys, with the
@@ -283,6 +281,7 @@ def _cp_key_ctes(
     parquet-footer row count — smallest m ≥ 1 with
     n·bands ≤ 64·(2·dim)^m, capped at 5 — so both engines grow the
     key space with the corpus in lockstep."""
+    dim = 64  # the embedding width
     base = f"""
         rot AS (
             SELECT b, i, j,
@@ -605,16 +604,15 @@ def dedup_chain_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a leaf instead of the full LSH lineage (the cascade-census
     # pattern).
     pairs = cut_lineage(pairs)
-    pairs.createOrReplaceTempView("dedup_chain_pairs")
     out = spark.sql(
         """
         WITH RECURSIVE
         walk(src, cur, depth) AS (
             SELECT u, u, 0
-            FROM (SELECT DISTINCT id_a AS u FROM dedup_chain_pairs)
+            FROM (SELECT DISTINCT id_a AS u FROM {pairs})
             UNION ALL
             SELECT w.src, d.id_b, w.depth + 1
-            FROM walk w JOIN dedup_chain_pairs d ON d.id_a = w.cur
+            FROM walk w JOIN {pairs} d ON d.id_a = w.cur
         )
         SELECT src AS doc_id,
                MAX(cur) AS furthest_dup,
@@ -622,7 +620,8 @@ def dedup_chain_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
                COUNT(DISTINCT cur) - 1 AS n_reachable
         FROM walk
         GROUP BY src
-        """
+        """,
+        pairs=pairs,
     )
     return release_on_drop(out, pairs)
 

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from spark_query_engine.queries import EVENTS_ORACLE, load, query
+from spark_query_engine.streaming.events import sliding_counts, tumbling_counts
 
 
 @query(
@@ -32,21 +33,10 @@ from spark_query_engine.queries import EVENTS_ORACLE, load, query
 )
 def events_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1-hour window aggregation via the native F.window
-    operator (epoch-aligned, same as date_trunc('hour'))."""
-    ev = load(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.window("ts", "1 hour"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("total_value"),
-        )
-        .select(
-            F.col("window.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
-    )
+    operator (epoch-aligned, same as date_trunc('hour')): the stream
+    operator ``tumbling_counts`` on the batch table, where the
+    optimizer drops its watermark."""
+    return tumbling_counts(load(spark, sf_dir, "events"))
 
 
 @query(
@@ -69,20 +59,9 @@ def events_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def events_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding 1-hour window, 30-minute slide (each event lands in 2
-    windows). Native F.window(ts, '1 hour', '30 minutes')."""
-    ev = load(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.window("ts", "1 hour", "30 minutes"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("total_value"),
-        )
-        .select(
-            F.col("window.start").alias("window_start"),
-            "n_events",
-            "total_value",
-        )
-    )
+    windows). Native F.window(ts, '1 hour', '30 minutes'): the stream
+    operator ``sliding_counts`` on the batch table."""
+    return sliding_counts(load(spark, sf_dir, "events"))
 
 
 @query(

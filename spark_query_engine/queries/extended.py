@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 
 from spark_query_engine.operators import similarity as S
 from spark_query_engine.operators import widen
-from spark_query_engine.queries import footer_rows, load, query
+from spark_query_engine.queries import footer_rows, load, query, sql_query
 
 
 @query(
@@ -97,12 +97,12 @@ def tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+@sql_query(
     "agg_grouping_sets",
-    oracle="""
+    """
         SELECT o_orderstatus, o_orderpriority,
                COUNT(*) AS n, ROUND(SUM(o_totalprice), 2) AS total
-        FROM orders
+        FROM {orders}
         GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority),
                                 (o_orderstatus, o_orderpriority))
     """,
@@ -111,25 +111,15 @@ def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS (the general form of rollup/cube —
     SURVEY.md §2.5 ABSENT row). Expands inside the aggregate; the
     input is scanned once."""
-    load(spark, sf_dir, "orders").createOrReplaceTempView("orders_gs")
-    return spark.sql(
-        """
-        SELECT o_orderstatus, o_orderpriority,
-               COUNT(*) AS n, ROUND(SUM(o_totalprice), 2) AS total
-        FROM orders_gs
-        GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority),
-                                (o_orderstatus, o_orderpriority))
-        """
-    )
 
 
-@query(
+@sql_query(
     "window_range_frame",
-    oracle="""
+    """
         SELECT c_custkey, c_nationkey, c_acctbal,
                COUNT(*) OVER w AS n_within_100,
                ROUND(SUM(c_acctbal) OVER w, 2) AS bal_within_100
-        FROM customer
+        FROM {customer}
         WINDOW w AS (PARTITION BY c_nationkey ORDER BY c_acctbal
                      RANGE BETWEEN 100.0 PRECEDING AND CURRENT ROW)
     """,
@@ -142,17 +132,6 @@ def window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     PySpark's Window.rangeBetween only accepts integer offsets, but
     c_acctbal is DOUBLE — the SQL frame spec takes any numeric
     literal.)"""
-    load(spark, sf_dir, "customer").createOrReplaceTempView("customer_rf")
-    return spark.sql(
-        """
-        SELECT c_custkey, c_nationkey, c_acctbal,
-               COUNT(*) OVER w AS n_within_100,
-               ROUND(SUM(c_acctbal) OVER w, 2) AS bal_within_100
-        FROM customer_rf
-        WINDOW w AS (PARTITION BY c_nationkey ORDER BY c_acctbal
-                     RANGE BETWEEN 100.0 PRECEDING AND CURRENT ROW)
-        """
-    )
 
 
 @query(
@@ -350,12 +329,12 @@ def scalar_null_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+@sql_query(
     "subquery_exists",
-    oracle="""
+    """
         SELECT c_custkey, c_name
-        FROM customer c
-        WHERE EXISTS (SELECT 1 FROM orders o
+        FROM {customer} c
+        WHERE EXISTS (SELECT 1 FROM {orders} o
                       WHERE o.o_custkey = c.c_custkey
                         AND o.o_totalprice > 400000)
     """,
@@ -364,38 +343,19 @@ def subquery_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated EXISTS subquery — Catalyst decorrelates it to a left
     semi join (RewriteCorrelatedScalarSubquery / RewritePredicate
     Subquery), so no per-row re-execution ever happens."""
-    load(spark, sf_dir, "customer").createOrReplaceTempView("customer_sq")
-    load(spark, sf_dir, "orders").createOrReplaceTempView("orders_sq")
-    return spark.sql(
-        """
-        SELECT c_custkey, c_name
-        FROM customer_sq c
-        WHERE EXISTS (SELECT 1 FROM orders_sq o
-                      WHERE o.o_custkey = c.c_custkey
-                        AND o.o_totalprice > 400000)
-        """
-    )
 
 
-@query(
+@sql_query(
     "subquery_scalar",
-    oracle="""
+    """
         SELECT o_orderkey, o_totalprice
-        FROM orders
-        WHERE o_totalprice > 1.5 * (SELECT AVG(o_totalprice) FROM orders)
+        FROM {orders}
+        WHERE o_totalprice > 1.5 * (SELECT AVG(o_totalprice) FROM {orders})
     """,
 )
 def subquery_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Uncorrelated scalar subquery: the inner AVG computes once and
     broadcasts as a literal into the outer filter."""
-    load(spark, sf_dir, "orders").createOrReplaceTempView("orders_ssq")
-    return spark.sql(
-        """
-        SELECT o_orderkey, o_totalprice
-        FROM orders_ssq
-        WHERE o_totalprice > 1.5 * (SELECT AVG(o_totalprice) FROM orders_ssq)
-        """
-    )
 
 
 @query(
@@ -971,33 +931,21 @@ def window_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+@sql_query(
     "agg_filter_clause",
-    oracle="""
+    """
         SELECT o_orderstatus,
                COUNT(*) AS n_all,
                COUNT(*) FILTER (WHERE o_totalprice > 200000.0) AS n_big,
                ROUND(SUM(o_totalprice) FILTER (WHERE o_orderpriority = '1-URGENT'),
                      2) AS urgent_total
-        FROM orders
+        FROM {orders}
         GROUP BY o_orderstatus
     """,
 )
 def agg_filter_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANSI FILTER clause on aggregates — per-aggregate predicates in
     one pass over the input (vs scanning once per conditional sum)."""
-    load(spark, sf_dir, "orders").createOrReplaceTempView("orders_fc")
-    return spark.sql(
-        """
-        SELECT o_orderstatus,
-               COUNT(*) AS n_all,
-               COUNT(*) FILTER (WHERE o_totalprice > 200000.0) AS n_big,
-               ROUND(SUM(o_totalprice) FILTER (WHERE o_orderpriority = '1-URGENT'),
-                     2) AS urgent_total
-        FROM orders_fc
-        GROUP BY o_orderstatus
-        """
-    )
 
 
 @query(
@@ -1152,12 +1100,12 @@ def window_gaps_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+@sql_query(
     "sql_text_q6",
-    oracle="""
+    """
         SELECT ROUND(SUM(l_extendedprice * l_discount), 2) AS revenue,
                COUNT(*) AS n_rows
-        FROM lineitem
+        FROM {lineitem}
         WHERE l_shipdate >= TIMESTAMP '1994-01-01'
           AND l_shipdate < TIMESTAMP '1995-01-01'
           AND l_discount BETWEEN 0.05 AND 0.07
@@ -1166,25 +1114,13 @@ def window_gaps_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def sql_text_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SQL-TEXT surface end-to-end through the driver gate: the
-    TPC-H Q6 predicate battery submitted as a literal SQL string over
-    a registered temp view — proving the engine's second API (the
+    TPC-H Q6 predicate battery submitted as a literal SQL string, with
+    lineitem bound as a ``spark.sql`` argument — proving the engine's second API (the
     reference's planned-but-unbuilt SQL frontend, SURVEY.md §2.12) is
     the same Catalyst plan as the DataFrame build: identical pushdown
     (three range predicates reach the parquet scan), identical
     codegen, identical result hash. ``spark.sql`` and the DataFrame
     API are one engine — this row certifies it."""
-    load(spark, sf_dir, "lineitem").createOrReplaceTempView("li_sql")
-    return spark.sql(
-        """
-        SELECT ROUND(SUM(l_extendedprice * l_discount), 2) AS revenue,
-               COUNT(*) AS n_rows
-        FROM li_sql
-        WHERE l_shipdate >= TIMESTAMP '1994-01-01'
-          AND l_shipdate < TIMESTAMP '1995-01-01'
-          AND l_discount BETWEEN 0.05 AND 0.07
-          AND l_quantity < 24
-        """
-    )
 
 
 @query(
@@ -1274,23 +1210,23 @@ def join_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB this is THE pattern for "top-k related rows per entity"
     served from SQL: one shuffle on the correlation key, per-group
     state bounded by k."""
-    load(spark, sf_dir, "customer").createOrReplaceTempView("cust_lat")
-    load(spark, sf_dir, "orders").createOrReplaceTempView("ord_lat")
     return spark.sql(
         """
         SELECT c.c_custkey, c.c_mktsegment,
                t.o_orderkey, t.o_totalprice, t.rn
-        FROM cust_lat c
+        FROM {customer} c
         JOIN LATERAL (
             SELECT o_orderkey, ROUND(o_totalprice, 2) AS o_totalprice,
                    ROW_NUMBER() OVER (
                        ORDER BY o_totalprice DESC, o_orderkey
                    ) AS rn
-            FROM ord_lat
+            FROM {orders}
             WHERE o_custkey = c.c_custkey
             ORDER BY o_totalprice DESC, o_orderkey
             LIMIT 3
         ) t
         WHERE c.c_mktsegment = 'MACHINERY'
-        """
+        """,
+        customer=load(spark, sf_dir, "customer"),
+        orders=load(spark, sf_dir, "orders"),
     )

@@ -505,31 +505,27 @@ def corpus_pq_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PQT_M, _PQT_SD, _PQT_K, _PQT_ITERS, _PQT_SHORT = 16, 4, 16, 2, 256
 
 
-def _pq_trained_ctes(
-    m: int = _PQT_M,
-    sd: int = _PQT_SD,
-    k: int = _PQT_K,
-    iters: int = _PQT_ITERS,
-) -> str:
-    """DuckDB CTE chain replicating ``similarity.pq_train_codebooks``:
-    t0 (init = 6dp-rounded subvectors of id<k) → [assign → mean →
-    next codebooks] × iters, all subspaces batched through the ``j``
-    column exactly like the Spark trainer. Ends with ``t{iters}`` =
-    the trained codebooks and ``subs`` = (id, j, subvector)."""
+def _pq_trained_ctes() -> str:
+    """DuckDB CTE chain replicating ``similarity.pq_train_codebooks``
+    at the ``_PQT_*`` geometry: t0 (init = 6dp-rounded subvectors of
+    id < _PQT_K) → [assign → mean → next codebooks] × _PQT_ITERS, all
+    subspaces batched through the ``j`` column exactly like the Spark
+    trainer. Ends with ``t{_PQT_ITERS}`` = the trained codebooks and
+    ``subs`` = (id, j, subvector)."""
     parts = [
         "v AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS vec"
         " FROM embeddings)",
-        f"js AS (SELECT unnest(range(0, {m})) AS j)",
-        f"subs AS (SELECT id, j, vec[j*{sd}+1:(j+1)*{sd}] AS s FROM v, js)",
+        f"js AS (SELECT unnest(range(0, {_PQT_M})) AS j)",
+        f"subs AS (SELECT id, j, vec[j*{_PQT_SD}+1:(j+1)*{_PQT_SD}] AS s FROM v, js)",
         f"t0 AS (SELECT j, id AS code,"
         f" list_transform(s, x -> ROUND(x, 6)) AS c"
-        f" FROM subs WHERE id < {k})",
+        f" FROM subs WHERE id < {_PQT_K})",
     ]
     prev = "t0"
-    for i in range(1, iters + 1):
+    for i in range(1, _PQT_ITERS + 1):
         parts += [
             f"d{i} AS (SELECT subs.id, subs.j, subs.s, t.code,"
-            f" ROUND(list_sum(list_transform(range(1, {sd}+1),"
+            f" ROUND(list_sum(list_transform(range(1, {_PQT_SD}+1),"
             f" i2 -> (s[i2]-c[i2])*(s[i2]-c[i2]))), 6) AS d2"
             f" FROM subs JOIN {prev} t ON subs.j = t.j)",
             f"a{i} AS (SELECT id, j, s, code FROM"

@@ -423,9 +423,9 @@ def ann_lsh_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-probe LSH ANN: probe the query bucket plus all 1-bit-flip
     neighbors (p+1 of 2^p buckets at p footer-sized planes — the
     standard recall repair for vectors that fall just past a
-    hyperplane), with the probe set still a plan-time constant
-    (partition pruning intact) and each probed bucket holding ~64
-    vectors at any corpus size (``_n_planes``). Exact cosine ranks
+    hyperplane), with each probed bucket holding ~64 vectors at any
+    corpus size (``_n_planes``). The probe is a per-row Hamming-ball
+    filter on the computed bucket, so it cuts the rerank, not the scan. Exact cosine ranks
     the union; same fixed-seed planes as ``ann_lsh_topk``, replayed
     literally in the oracle down to the bucket bits."""
     qv = _query_vec(spark, sf_dir, 0)

@@ -25,17 +25,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from spark_query_engine.queries import load, query
+from spark_query_engine.queries import load, query, sql_query
 
 
-@query(
+@sql_query(
     "tpch_q4",
-    oracle="""
+    """
         SELECT o_orderpriority, COUNT(*) AS order_count
-        FROM orders o
+        FROM {orders} o
         WHERE o.o_orderdate >= TIMESTAMP '1996-01-01'
           AND o.o_orderdate < TIMESTAMP '1996-07-01'
-          AND EXISTS (SELECT 1 FROM lineitem l
+          AND EXISTS (SELECT 1 FROM {lineitem} l
                       WHERE l.l_orderkey = o.o_orderkey
                         AND l.l_shipdate > o.o_orderdate + INTERVAL 60 DAY)
         GROUP BY o_orderpriority
@@ -47,20 +47,6 @@ def tpch_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
     rewrites it to a left semi join on l_orderkey with the date
     comparison as a join residual; the order-date range filter pushes
     to the orders parquet scan."""
-    load(spark, sf_dir, "orders").createOrReplaceTempView("orders_q4")
-    load(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem_q4")
-    return spark.sql(
-        """
-        SELECT o_orderpriority, COUNT(*) AS order_count
-        FROM orders_q4 o
-        WHERE o.o_orderdate >= TIMESTAMP '1996-01-01'
-          AND o.o_orderdate < TIMESTAMP '1996-07-01'
-          AND EXISTS (SELECT 1 FROM lineitem_q4 l
-                      WHERE l.l_orderkey = o.o_orderkey
-                        AND l.l_shipdate > o.o_orderdate + INTERVAL 60 DAY)
-        GROUP BY o_orderpriority
-        """
-    )
 
 
 @query(
@@ -223,19 +209,19 @@ def tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+@sql_query(
     "tpch_q21",
-    oracle="""
+    """
         SELECT s.s_name, COUNT(*) AS numwait
-        FROM supplier s
-        JOIN lineitem l1 ON l1.l_suppkey = s.s_suppkey
-        JOIN orders o ON o.o_orderkey = l1.l_orderkey
+        FROM {supplier} s
+        JOIN {lineitem} l1 ON l1.l_suppkey = s.s_suppkey
+        JOIN {orders} o ON o.o_orderkey = l1.l_orderkey
         WHERE o.o_orderstatus = 'F'
           AND l1.l_returnflag = 'R'
-          AND EXISTS (SELECT 1 FROM lineitem l2
+          AND EXISTS (SELECT 1 FROM {lineitem} l2
                       WHERE l2.l_orderkey = l1.l_orderkey
                         AND l2.l_suppkey <> l1.l_suppkey)
-          AND NOT EXISTS (SELECT 1 FROM lineitem l3
+          AND NOT EXISTS (SELECT 1 FROM {lineitem} l3
                           WHERE l3.l_orderkey = l1.l_orderkey
                             AND l3.l_suppkey <> l1.l_suppkey
                             AND l3.l_returnflag = 'R')
@@ -252,43 +238,17 @@ def tpch_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
     anti) against the same fact table; both probes join on l_orderkey
     with the suppkey inequality as a residual, so lineitem is shuffled
     on orderkey once per probe, not re-scanned per row."""
-    for name, t in [
-        ("supplier_q21", "supplier"),
-        ("lineitem_q21", "lineitem"),
-        ("orders_q21", "orders"),
-    ]:
-        load(spark, sf_dir, t).createOrReplaceTempView(name)
-    return spark.sql(
-        """
-        SELECT s.s_name, COUNT(*) AS numwait
-        FROM supplier_q21 s
-        JOIN lineitem_q21 l1 ON l1.l_suppkey = s.s_suppkey
-        JOIN orders_q21 o ON o.o_orderkey = l1.l_orderkey
-        WHERE o.o_orderstatus = 'F'
-          AND l1.l_returnflag = 'R'
-          AND EXISTS (SELECT 1 FROM lineitem_q21 l2
-                      WHERE l2.l_orderkey = l1.l_orderkey
-                        AND l2.l_suppkey <> l1.l_suppkey)
-          AND NOT EXISTS (SELECT 1 FROM lineitem_q21 l3
-                          WHERE l3.l_orderkey = l1.l_orderkey
-                            AND l3.l_suppkey <> l1.l_suppkey
-                            AND l3.l_returnflag = 'R')
-        GROUP BY s.s_name
-        ORDER BY numwait DESC, s_name
-        LIMIT 20
-        """
-    )
 
 
-@query(
+@sql_query(
     "tpch_q22",
-    oracle="""
+    """
         SELECT c.c_mktsegment, COUNT(*) AS numcust,
                ROUND(SUM(c.c_acctbal), 2) AS totacctbal
-        FROM customer c
-        WHERE c.c_acctbal > (SELECT AVG(c2.c_acctbal) FROM customer c2
+        FROM {customer} c
+        WHERE c.c_acctbal > (SELECT AVG(c2.c_acctbal) FROM {customer} c2
                              WHERE c2.c_acctbal > 0.0)
-          AND NOT EXISTS (SELECT 1 FROM orders o
+          AND NOT EXISTS (SELECT 1 FROM {orders} o
                           WHERE o.o_custkey = c.c_custkey
                             AND o.o_orderdate >= TIMESTAMP '2000-01-01')
         GROUP BY c.c_mktsegment
@@ -300,21 +260,6 @@ def tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
     no recent (year-2000+) orders. The uncorrelated AVG computes once and broadcasts
     into the filter; NOT EXISTS becomes a left anti join against a
     1-column projection of orders."""
-    load(spark, sf_dir, "customer").createOrReplaceTempView("customer_q22")
-    load(spark, sf_dir, "orders").createOrReplaceTempView("orders_q22")
-    return spark.sql(
-        """
-        SELECT c.c_mktsegment, COUNT(*) AS numcust,
-               ROUND(SUM(c.c_acctbal), 2) AS totacctbal
-        FROM customer_q22 c
-        WHERE c.c_acctbal > (SELECT AVG(c2.c_acctbal) FROM customer_q22 c2
-                             WHERE c2.c_acctbal > 0.0)
-          AND NOT EXISTS (SELECT 1 FROM orders_q22 o
-                          WHERE o.o_custkey = c.c_custkey
-                            AND o.o_orderdate >= TIMESTAMP '2000-01-01')
-        GROUP BY c.c_mktsegment
-        """
-    )
 
 
 @query(
@@ -554,27 +499,27 @@ def tpch_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
 # nested semi with aggregate threshold, multi-dim profit rollup).
 
 
-@query(
+@sql_query(
     "tpch_q2",
-    oracle="""
+    """
         WITH supply AS (
             SELECT l_partkey AS partkey, l_suppkey AS suppkey,
                    MIN(l_extendedprice / l_quantity) AS unit_cost
-            FROM lineitem GROUP BY 1, 2
+            FROM {lineitem} GROUP BY 1, 2
         )
         SELECT s.s_acctbal, s.s_name, n.n_name, p.p_partkey, p.p_name
-        FROM part p
+        FROM {part} p
         JOIN supply sp ON sp.partkey = p.p_partkey
-        JOIN supplier s ON s.s_suppkey = sp.suppkey
-        JOIN nation n ON n.n_nationkey = s.s_nationkey
-        JOIN region r ON r.r_regionkey = n.n_regionkey
+        JOIN {supplier} s ON s.s_suppkey = sp.suppkey
+        JOIN {nation} n ON n.n_nationkey = s.s_nationkey
+        JOIN {region} r ON r.r_regionkey = n.n_regionkey
         WHERE p.p_size = 4 AND p.p_type = 'SMALL' AND r.r_name = 'EUROPE'
           AND sp.unit_cost = (
               SELECT MIN(sp2.unit_cost)
               FROM supply sp2
-              JOIN supplier s2 ON s2.s_suppkey = sp2.suppkey
-              JOIN nation n2 ON n2.n_nationkey = s2.s_nationkey
-              JOIN region r2 ON r2.r_regionkey = n2.n_regionkey
+              JOIN {supplier} s2 ON s2.s_suppkey = sp2.suppkey
+              JOIN {nation} n2 ON n2.n_nationkey = s2.s_nationkey
+              JOIN {region} r2 ON r2.r_regionkey = n2.n_regionkey
               WHERE sp2.partkey = p.p_partkey AND r2.r_name = 'EUROPE')
         ORDER BY s.s_acctbal DESC, n.n_name, s.s_name, p.p_partkey
         LIMIT 100
@@ -589,39 +534,6 @@ def tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
     suppliers" never re-executes per row. MIN over identical double
     sets is order-insensitive, so the float equality join is
     deterministic cross-engine."""
-    for name, t in [
-        ("part_q2", "part"),
-        ("supplier_q2", "supplier"),
-        ("nation_q2", "nation"),
-        ("region_q2", "region"),
-        ("lineitem_q2", "lineitem"),
-    ]:
-        load(spark, sf_dir, t).createOrReplaceTempView(name)
-    return spark.sql(
-        """
-        WITH supply AS (
-            SELECT l_partkey AS partkey, l_suppkey AS suppkey,
-                   MIN(l_extendedprice / l_quantity) AS unit_cost
-            FROM lineitem_q2 GROUP BY 1, 2
-        )
-        SELECT s.s_acctbal, s.s_name, n.n_name, p.p_partkey, p.p_name
-        FROM part_q2 p
-        JOIN supply sp ON sp.partkey = p.p_partkey
-        JOIN supplier_q2 s ON s.s_suppkey = sp.suppkey
-        JOIN nation_q2 n ON n.n_nationkey = s.s_nationkey
-        JOIN region_q2 r ON r.r_regionkey = n.n_regionkey
-        WHERE p.p_size = 4 AND p.p_type = 'SMALL' AND r.r_name = 'EUROPE'
-          AND sp.unit_cost = (
-              SELECT MIN(sp2.unit_cost)
-              FROM supply sp2
-              JOIN supplier_q2 s2 ON s2.s_suppkey = sp2.suppkey
-              JOIN nation_q2 n2 ON n2.n_nationkey = s2.s_nationkey
-              JOIN region_q2 r2 ON r2.r_regionkey = n2.n_regionkey
-              WHERE sp2.partkey = p.p_partkey AND r2.r_name = 'EUROPE')
-        ORDER BY s.s_acctbal DESC, n.n_name, s.s_name, p.p_partkey
-        LIMIT 100
-        """
-    )
 
 
 @query(
@@ -674,14 +586,14 @@ def tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+@sql_query(
     "tpch_q11",
-    oracle="""
+    """
         WITH val AS (
             SELECT l.l_partkey AS partkey, SUM(l.l_quantity) AS stock_value
-            FROM lineitem l
-            JOIN supplier s ON s.s_suppkey = l.l_suppkey
-            JOIN nation n ON n.n_nationkey = s.s_nationkey
+            FROM {lineitem} l
+            JOIN {supplier} s ON s.s_suppkey = l.l_suppkey
+            JOIN {nation} n ON n.n_nationkey = s.s_nationkey
             WHERE n.n_name = 'NATION_3'
             GROUP BY l.l_partkey
         )
@@ -698,27 +610,6 @@ def tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
     scalar subquery once (a one-row broadcast), not per group.
     Quantities are integers, so both sums are float-exact and the
     threshold comparison is deterministic cross-engine."""
-    for name, t in [
-        ("lineitem_q11", "lineitem"),
-        ("supplier_q11", "supplier"),
-        ("nation_q11", "nation"),
-    ]:
-        load(spark, sf_dir, t).createOrReplaceTempView(name)
-    return spark.sql(
-        """
-        WITH val AS (
-            SELECT l.l_partkey AS partkey, SUM(l.l_quantity) AS stock_value
-            FROM lineitem_q11 l
-            JOIN supplier_q11 s ON s.s_suppkey = l.l_suppkey
-            JOIN nation_q11 n ON n.n_nationkey = s.s_nationkey
-            WHERE n.n_name = 'NATION_3'
-            GROUP BY l.l_partkey
-        )
-        SELECT partkey, stock_value FROM val
-        WHERE stock_value > (SELECT SUM(stock_value) * 0.0025 FROM val)
-        ORDER BY stock_value DESC, partkey
-        """
-    )
 
 
 @query(
@@ -765,25 +656,25 @@ def tpch_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+@sql_query(
     "tpch_q20",
-    oracle="""
+    """
         SELECT s.s_name, s.s_acctbal
-        FROM supplier s
-        JOIN nation n ON n.n_nationkey = s.s_nationkey
+        FROM {supplier} s
+        JOIN {nation} n ON n.n_nationkey = s.s_nationkey
         WHERE n.n_name = 'NATION_3'
           AND s.s_suppkey IN (
               SELECT ps.suppkey FROM (
                   SELECT l_partkey AS partkey, l_suppkey AS suppkey,
                          SUM(l_quantity) AS qty
-                  FROM lineitem
+                  FROM {lineitem}
                   WHERE l_shipdate >= TIMESTAMP '1997-01-01'
                     AND l_shipdate < TIMESTAMP '1998-01-01'
                   GROUP BY 1, 2) ps
               WHERE ps.partkey IN
-                    (SELECT p_partkey FROM part WHERE p_name LIKE 'small%')
+                    (SELECT p_partkey FROM {part} WHERE p_name LIKE 'small%')
                 AND ps.qty > 0.5 * (
-                    SELECT SUM(l2.l_quantity) FROM lineitem l2
+                    SELECT SUM(l2.l_quantity) FROM {lineitem} l2
                     WHERE l2.l_partkey = ps.partkey
                       AND l2.l_shipdate >= TIMESTAMP '1997-01-01'
                       AND l2.l_shipdate < TIMESTAMP '1998-01-01'))
@@ -800,34 +691,3 @@ def tpch_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
     is scanned twice and shuffled on partkey once each, never probed
     per supplier. Integer quantities keep the 0.5 * total threshold
     float-exact on both engines."""
-    for name, t in [
-        ("supplier_q20", "supplier"),
-        ("nation_q20", "nation"),
-        ("lineitem_q20", "lineitem"),
-        ("part_q20", "part"),
-    ]:
-        load(spark, sf_dir, t).createOrReplaceTempView(name)
-    return spark.sql(
-        """
-        SELECT s.s_name, s.s_acctbal
-        FROM supplier_q20 s
-        JOIN nation_q20 n ON n.n_nationkey = s.s_nationkey
-        WHERE n.n_name = 'NATION_3'
-          AND s.s_suppkey IN (
-              SELECT ps.suppkey FROM (
-                  SELECT l_partkey AS partkey, l_suppkey AS suppkey,
-                         SUM(l_quantity) AS qty
-                  FROM lineitem_q20
-                  WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-                    AND l_shipdate < TIMESTAMP '1998-01-01'
-                  GROUP BY 1, 2) ps
-              WHERE ps.partkey IN
-                    (SELECT p_partkey FROM part_q20 WHERE p_name LIKE 'small%')
-                AND ps.qty > 0.5 * (
-                    SELECT SUM(l2.l_quantity) FROM lineitem_q20 l2
-                    WHERE l2.l_partkey = ps.partkey
-                      AND l2.l_shipdate >= TIMESTAMP '1997-01-01'
-                      AND l2.l_shipdate < TIMESTAMP '1998-01-01'))
-        ORDER BY s.s_name
-        """
-    )

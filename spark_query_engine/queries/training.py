@@ -1046,20 +1046,24 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _zorder_sql(xcol: str, ycol: str, bits: int = 16) -> str:
+#: Bits per coordinate of the Z-order key; callers quantize to 65536.
+_ZORDER_BITS = 16
+
+
+def _zorder_sql(xcol: str, ycol: str) -> str:
     """DuckDB bit-interleave: z = Σ_i ((x>>i & 1) << 2i) | ((y>>i & 1)
     << (2i+1)) unrolled to a literal sum (constant-folds at plan
     time, same as the Spark expression)."""
     terms = []
-    for i in range(bits):
+    for i in range(_ZORDER_BITS):
         terms.append(f"((({xcol} >> {i}) & 1) << {2 * i})")
         terms.append(f"((({ycol} >> {i}) & 1) << {2 * i + 1})")
     return " + ".join(terms)
 
 
-def _zorder_col(xcol, ycol, bits: int = 16):
+def _zorder_col(xcol, ycol):
     z = F.lit(0).cast("long")
-    for i in range(bits):
+    for i in range(_ZORDER_BITS):
         z = z + F.shiftleft(F.shiftright(xcol, i) % 2, 2 * i)
         z = z + F.shiftleft(F.shiftright(ycol, i) % 2, 2 * i + 1)
     return z
@@ -2932,12 +2936,10 @@ def udtf_run_length(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     spark.udtf.register("run_length", RunLength)
     docs = load(spark, sf_dir, "documents")
-    docs.where(F.col("doc_id") < 200).select("doc_id", "text").createOrReplaceTempView(
-        "_udtf_docs"
-    )
     return spark.sql(
         "SELECT u.doc_id, u.run_idx, u.token, u.run_len, u.start_pos "
-        "FROM _udtf_docs d, LATERAL run_length(d.doc_id, d.text) u"
+        "FROM {docs} d, LATERAL run_length(d.doc_id, d.text) u",
+        docs=docs.where(F.col("doc_id") < 200).select("doc_id", "text"),
     )
 
 

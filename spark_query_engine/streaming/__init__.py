@@ -1,10 +1,14 @@
 """Structured Streaming operators over event streams.
 
 The reference is batch-only (SURVEY.md §2.10 ABSENT); these are the
-engine's streaming equivalents, built on Spark's unified model: the
-same transformation functions used by the batch queries
-(spark_query_engine.queries.events) applied to an unbounded source,
-plus watermarking for late data and stateful sessionization.
+engine's streaming equivalents, built on Spark's unified model, plus
+watermarking for late data and stateful sessionization. Two of them
+are also the batch queries: ``events_tumbling_window`` is
+``tumbling_counts`` and ``events_sliding_window`` is ``sliding_counts``
+applied to the ``events`` table (spark_query_engine.queries.events),
+where the optimizer drops the watermark. The other operators have
+their own code; several are incremental twins of a batch query, such
+as ``ohlc_stream`` of ``events_downsample_ohlc``.
 """
 
 from spark_query_engine.streaming.events import (

@@ -24,7 +24,15 @@ def test_registry_shape():
     assert set(qs) - set(osql) == {"agg_approx_distinct"}
 
 
+def _temp_views(spark) -> set[str]:
+    return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+
 def test_every_query_runs_at_smoke_sf(spark, sf_dir):
+    """Every query builds and runs, and none leaves a named temp view
+    in the caller's session (a query must not shadow or replace a
+    view of the caller's)."""
+    views = _temp_views(spark)
     failures = []
     for name, fn in E.queries().items():
         try:
@@ -32,6 +40,7 @@ def test_every_query_runs_at_smoke_sf(spark, sf_dir):
         except Exception as e:  # noqa: BLE001
             failures.append((name, str(e)[:200]))
     assert not failures, failures
+    assert _temp_views(spark) == views
 
 
 def test_driver_window_prioritizes_unverified_families():
