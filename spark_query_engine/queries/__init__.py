@@ -64,7 +64,11 @@ def sql_query(name: str, text: str):
     which binds each DataFrame to a temp view only while the text is
     parsed, so no named view is left in the caller's session. The
     decorated function gives the query its name, docstring and family
-    module; its body is never called."""
+    module; its body is never called. The registered callable's
+    ``__wrapped__`` is that function, which tells a ``sql_query`` from
+    a DataFrame builder. A join hint the plan depends on is written in
+    the text (``SELECT /*+ BROADCAST(n) */ ...``); DuckDB reads it as
+    a comment."""
     fields = (f for _, f, _, _ in string.Formatter().parse(text) if f)
     tables = list(dict.fromkeys(fields))
     oracle = text.format(**{t: t for t in tables})

@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from spark_query_engine.queries import EVENTS_ORACLE, load, query
+from spark_query_engine.queries import EVENTS_ORACLE, load, query, sql_query
 
 
 @query(
@@ -131,26 +131,18 @@ def agg_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+@sql_query(
     "agg_cube",
-    oracle="""
+    """
         SELECT o_orderstatus, o_orderpriority,
                COUNT(*) AS n_orders,
                ROUND(SUM(o_totalprice), 2) AS total
-        FROM orders
+        FROM {orders}
         GROUP BY CUBE (o_orderstatus, o_orderpriority)
     """,
 )
 def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE grouping sets (SURVEY.md §2.5 ABSENT row)."""
-    return (
-        load(spark, sf_dir, "orders")
-        .cube("o_orderstatus", "o_orderpriority")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.round(F.sum("o_totalprice"), 2).alias("total"),
-        )
-    )
 
 
 @query(
@@ -302,16 +294,13 @@ def udtf_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
                 if a and b:
                     yield (f"{a} {b}",)
 
-    spark.udtf.register("bigrams_udtf", Bigrams)
-    return spark.sql(
-        """
-        SELECT b.bigram, COUNT(*) AS n
-        FROM {documents}, LATERAL bigrams_udtf(text) AS b
-        GROUP BY b.bigram
-        ORDER BY n DESC, b.bigram
-        LIMIT 50
-        """,
-        documents=load(spark, sf_dir, "documents"),
+    return (
+        load(spark, sf_dir, "documents")
+        .lateralJoin(Bigrams(F.col("text").outer()))
+        .groupBy("bigram")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .orderBy(F.desc("n"), "bigram")
+        .limit(50)
     )
 
 
@@ -400,12 +389,9 @@ def udtf_polymorphic_onehot(spark: SparkSession, sf_dir: str) -> DataFrame:
                 1 if value == c else 0 for c in cats.split(",")
             )
 
-    spark.udtf.register("onehot_udtf", udtf(OneHot))
-    return spark.sql(
-        """
-        SELECT d.doc_id, o.*
-        FROM {documents} d,
-             LATERAL onehot_udtf(d.lang, 'en,de,fr,es,zh') o
-        """,
-        documents=load(spark, sf_dir, "documents"),
+    onehot = udtf(OneHot)(F.col("lang").outer(), F.lit("en,de,fr,es,zh"))
+    return (
+        load(spark, sf_dir, "documents")
+        .lateralJoin(onehot.alias("o"))
+        .select("doc_id", "o.*")
     )

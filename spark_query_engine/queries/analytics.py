@@ -9,17 +9,17 @@ inside whole-stage codegen. No Python UDFs.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_query_engine.operators import cut_lineage
 
-from spark_query_engine.queries import load, query
+from spark_query_engine.queries import load, query, sql_query
 
 
-@query(
+@sql_query(
     "window_topk_per_group",
-    oracle="""
+    """
         SELECT c_nationkey, c_custkey, c_acctbal, rn
         FROM (
             SELECT c_nationkey, c_custkey, c_acctbal,
@@ -27,7 +27,7 @@ from spark_query_engine.queries import load, query
                        PARTITION BY c_nationkey
                        ORDER BY c_acctbal DESC, c_custkey
                    ) AS rn
-            FROM customer
+            FROM {customer}
         )
         WHERE rn <= 3
     """,
@@ -35,89 +35,49 @@ from spark_query_engine.queries import load, query
 def window_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k per group via ROW_NUMBER — the canonical windowed pattern;
     shuffles once on the partition key."""
-    w = W.partitionBy("c_nationkey").orderBy(
-        F.col("c_acctbal").desc(), F.col("c_custkey")
-    )
-    return (
-        load(spark, sf_dir, "customer")
-        .select(
-            "c_nationkey",
-            "c_custkey",
-            "c_acctbal",
-            F.row_number().over(w).alias("rn"),
-        )
-        .filter(F.col("rn") <= 3)
-    )
 
 
-@query(
+@sql_query(
     "window_rank_dense",
-    oracle="""
+    """
         SELECT p_brand, p_partkey, p_retailprice,
                RANK() OVER (PARTITION BY p_brand ORDER BY p_retailprice DESC, p_partkey) AS rnk,
                DENSE_RANK() OVER (PARTITION BY p_brand ORDER BY p_size) AS drnk
-        FROM part
+        FROM {part}
     """,
 )
 def window_rank_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
-    wp = W.partitionBy("p_brand").orderBy(
-        F.col("p_retailprice").desc(), F.col("p_partkey")
-    )
-    ws = W.partitionBy("p_brand").orderBy("p_size")
-    return load(spark, sf_dir, "part").select(
-        "p_brand",
-        "p_partkey",
-        "p_retailprice",
-        F.rank().over(wp).alias("rnk"),
-        F.dense_rank().over(ws).alias("drnk"),
-    )
+    """RANK and DENSE_RANK over two different window orders, each
+    partitioned by brand."""
 
 
-@query(
+@sql_query(
     "window_running_sum",
-    oracle="""
+    """
         SELECT o_custkey, o_orderkey, o_orderdate,
                ROUND(SUM(o_totalprice) OVER (
                    PARTITION BY o_custkey
                    ORDER BY o_orderdate, o_orderkey
                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
                ), 2) AS running_spend
-        FROM orders
+        FROM {orders}
     """,
 )
 def window_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Running aggregate with an explicit ROWS frame."""
-    w = (
-        W.partitionBy("o_custkey")
-        .orderBy("o_orderdate", "o_orderkey")
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    return load(spark, sf_dir, "orders").select(
-        "o_custkey",
-        "o_orderkey",
-        "o_orderdate",
-        F.round(F.sum("o_totalprice").over(w), 2).alias("running_spend"),
-    )
 
 
-@query(
+@sql_query(
     "window_lag_lead",
-    oracle="""
+    """
         SELECT user_id, event_id, ts,
                LAG(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_type,
                LEAD(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS next_type
-        FROM events
+        FROM {events}
     """,
 )
 def window_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    return load(spark, sf_dir, "events").select(
-        "user_id",
-        "event_id",
-        "ts",
-        F.lag("event_type").over(w).alias("prev_type"),
-        F.lead("event_type").over(w).alias("next_type"),
-    )
+    """LAG and LEAD over each user's event sequence."""
 
 
 @query(
@@ -148,34 +108,26 @@ def scalar_string_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+@sql_query(
     "scalar_date_funcs",
-    oracle="""
+    """
         SELECT o_orderkey,
                CAST(EXTRACT(YEAR FROM o_orderdate) AS INT) AS order_year,
                CAST(EXTRACT(MONTH FROM o_orderdate) AS INT) AS order_month,
                CAST(EXTRACT(DAY FROM o_orderdate) AS INT) AS order_day,
                CAST(DATE_TRUNC('month', o_orderdate) AS TIMESTAMP) AS month_start,
                CAST(o_orderdate AS DATE) AS order_date
-        FROM orders
+        FROM {orders}
     """,
 )
 def scalar_date_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Date/time function surface. Session TZ is pinned UTC so values
     agree with the oracle's naive timestamps."""
-    return load(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        F.year("o_orderdate").alias("order_year"),
-        F.month("o_orderdate").alias("order_month"),
-        F.dayofmonth("o_orderdate").alias("order_day"),
-        F.date_trunc("month", "o_orderdate").alias("month_start"),
-        F.to_date("o_orderdate").alias("order_date"),
-    )
 
 
-@query(
+@sql_query(
     "scalar_math_funcs",
-    oracle="""
+    """
         SELECT l_orderkey, l_linenumber,
                ROUND(ABS(l_discount - 0.05), 6) AS abs_disc,
                ROUND(SQRT(l_quantity), 6) AS sqrt_qty,
@@ -184,7 +136,7 @@ def scalar_date_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(l_linenumber % 3 AS INT) AS line_mod,
                ROUND(LN(l_extendedprice), 6) AS ln_price,
                ROUND(POWER(2.0, CAST(l_linenumber AS DOUBLE)), 6) AS pow2
-        FROM lineitem
+        FROM {lineitem}
     """,
 )
 def scalar_math_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -192,23 +144,11 @@ def scalar_math_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sqrt/ln) against cross-engine libm last-bit differences; CEIL/FLOOR
     are pinned to BIGINT on BOTH sides (Spark returns LongType, DuckDB
     returns DOUBLE — the driver hashes typed values, so 28 != 28.0)."""
-    li = load(spark, sf_dir, "lineitem")
-    return li.select(
-        "l_orderkey",
-        "l_linenumber",
-        F.round(F.abs(F.col("l_discount") - 0.05), 6).alias("abs_disc"),
-        F.round(F.sqrt("l_quantity"), 6).alias("sqrt_qty"),
-        F.ceil(F.col("l_quantity") / 7.0).cast("bigint").alias("ceil_qty"),
-        F.floor(F.col("l_quantity") / 7.0).cast("bigint").alias("floor_qty"),
-        (F.col("l_linenumber") % 3).alias("line_mod"),
-        F.round(F.log("l_extendedprice"), 6).alias("ln_price"),
-        F.round(F.pow(F.lit(2.0), F.col("l_linenumber").cast("double")), 6).alias("pow2"),
-    )
 
 
-@query(
+@sql_query(
     "scalar_case_when",
-    oracle="""
+    """
         SELECT o_orderkey,
                CASE
                    WHEN o_totalprice < 50000.0 THEN 'small'
@@ -217,65 +157,40 @@ def scalar_math_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
                    ELSE 'jumbo'
                END AS price_band,
                CASE WHEN o_orderstatus = 'O' THEN 1 ELSE 0 END AS is_open
-        FROM orders
+        FROM {orders}
     """,
 )
 def scalar_case_when(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = load(spark, sf_dir, "orders")
-    return o.select(
-        "o_orderkey",
-        F.when(F.col("o_totalprice") < 50000.0, "small")
-        .when(F.col("o_totalprice") < 150000.0, "medium")
-        .when(F.col("o_totalprice") < 300000.0, "large")
-        .otherwise("jumbo")
-        .alias("price_band"),
-        F.when(F.col("o_orderstatus") == "O", 1).otherwise(0).alias("is_open"),
-    )
+    """Searched and simple CASE WHEN banding."""
 
 
-@query(
+@sql_query(
     "agg_count_distinct",
-    oracle="""
+    """
         SELECT o_orderpriority,
                COUNT(DISTINCT o_custkey) AS n_customers,
                COUNT(*) AS n_orders
-        FROM orders
+        FROM {orders}
         GROUP BY o_orderpriority
     """,
 )
 def agg_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DISTINCT aggregate (SURVEY.md §2.5 ABSENT row). Spark expands
     this to a two-phase aggregation automatically."""
-    return (
-        load(spark, sf_dir, "orders")
-        .groupBy("o_orderpriority")
-        .agg(
-            F.countDistinct("o_custkey").alias("n_customers"),
-            F.count(F.lit(1)).alias("n_orders"),
-        )
-    )
 
 
-@query(
+@sql_query(
     "agg_rollup",
-    oracle="""
+    """
         SELECT l_returnflag, l_linestatus,
                COUNT(*) AS n_rows,
                ROUND(SUM(l_quantity), 2) AS sum_qty
-        FROM lineitem
+        FROM {lineitem}
         GROUP BY ROLLUP (l_returnflag, l_linestatus)
     """,
 )
 def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP grouping sets (SURVEY.md §2.5 ABSENT row)."""
-    return (
-        load(spark, sf_dir, "lineitem")
-        .rollup("l_returnflag", "l_linestatus")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-        )
-    )
 
 
 @query(

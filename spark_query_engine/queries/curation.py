@@ -1288,19 +1288,19 @@ def sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+@sql_query(
     "data_snapshot_diff",
-    oracle="""
+    """
         WITH old AS (
             SELECT o_orderkey AS k, o_orderstatus AS st, o_totalprice AS tp
-            FROM orders WHERE o_orderkey % 97 <> 3
+            FROM {orders} WHERE o_orderkey % 97 <> 3
         ),
         new AS (
             SELECT o_orderkey AS k, o_orderstatus AS st,
                    CASE WHEN o_orderkey % 13 = 0
                         THEN o_totalprice * 1.1
                         ELSE o_totalprice END AS tp
-            FROM orders WHERE o_orderkey % 89 <> 7
+            FROM {orders} WHERE o_orderkey % 89 <> 7
         )
         SELECT CASE WHEN o.k IS NULL THEN 'added'
                     WHEN n.k IS NULL THEN 'removed'
@@ -1327,45 +1327,6 @@ def data_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     product: per-row decimal ROUND of a float lands on boundaries
     where engines disagree, while the raw IEEE multiply is identical
     everywhere), so the oracle replays them exactly."""
-    orders = load(spark, sf_dir, "orders")
-    old = orders.where(F.col("o_orderkey") % 97 != 3).select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderstatus").alias("st"),
-        F.col("o_totalprice").alias("tp"),
-    )
-    new = orders.where(F.col("o_orderkey") % 89 != 7).select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderstatus").alias("st"),
-        F.when(
-            F.col("o_orderkey") % 13 == 0, F.col("o_totalprice") * 1.1
-        )
-        .otherwise(F.col("o_totalprice"))
-        .alias("tp"),
-    )
-    o, n = old.alias("o"), new.alias("n")
-    joined = o.join(n, F.col("o.k") == F.col("n.k"), "full_outer")
-    change = (
-        F.when(F.col("o.k").isNull(), "added")
-        .when(F.col("n.k").isNull(), "removed")
-        .when(
-            (F.col("o.st") != F.col("n.st"))
-            | (F.col("o.tp") != F.col("n.tp")),
-            "modified",
-        )
-        .otherwise("unchanged")
-    )
-    return joined.groupBy(change.alias("change_type")).agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.round(
-            F.sum(
-                F.abs(
-                    F.coalesce(F.col("n.tp"), F.lit(0.0))
-                    - F.coalesce(F.col("o.tp"), F.lit(0.0))
-                )
-            ),
-            2,
-        ).alias("total_drift"),
-    )
 
 
 @query(

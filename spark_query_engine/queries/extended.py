@@ -69,11 +69,11 @@ def tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+@sql_query(
     "tpch_q6",
-    oracle="""
+    """
         SELECT ROUND(SUM(l_extendedprice * l_discount), 2) AS revenue
-        FROM lineitem
+        FROM {lineitem}
         WHERE l_shipdate >= TIMESTAMP '1997-01-01'
           AND l_shipdate < TIMESTAMP '1998-01-01'
           AND l_discount BETWEEN 0.05 AND 0.07
@@ -84,17 +84,6 @@ def tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q6 forecast revenue: pure filter + global sum. All four
     predicates push to the parquet scan; the aggregate is a single
     partial/final pair with a 1-row shuffle."""
-    l = load(spark, sf_dir, "lineitem")
-    return (
-        l.where(
-            (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
-            & (F.col("l_discount") >= 0.05)
-            & (F.col("l_discount") <= 0.07)
-            & (F.col("l_quantity") < 24)
-        )
-        .agg(F.round(F.sum(F.col("l_extendedprice") * F.col("l_discount")), 2).alias("revenue"))
-    )
 
 
 @sql_query(
@@ -307,13 +296,13 @@ def scalar_array_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+@sql_query(
     "scalar_null_funcs",
-    oracle="""
+    """
         SELECT COALESCE(NULLIF(o_orderstatus, 'O'), 'OPEN') AS status,
                COUNT(NULLIF(o_orderstatus, 'O')) AS n_nonnull,
                COUNT(*) AS n
-        FROM orders
+        FROM {orders}
         GROUP BY COALESCE(NULLIF(o_orderstatus, 'O'), 'OPEN')
     """,
 )
@@ -321,12 +310,6 @@ def scalar_null_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NULL-handling scalars: NULLIF / COALESCE and the COUNT(col)
     null-skipping contract (ANSI semantics — the deliberate divergence
     from the reference's Null==Null quirk, SURVEY.md §1.2)."""
-    o = load(spark, sf_dir, "orders")
-    status = F.coalesce(F.nullif(F.col("o_orderstatus"), F.lit("O")), F.lit("OPEN"))
-    return o.groupBy(status.alias("status")).agg(
-        F.count(F.nullif(F.col("o_orderstatus"), F.lit("O"))).alias("n_nonnull"),
-        F.count(F.lit(1)).alias("n"),
-    )
 
 
 @sql_query(
@@ -396,12 +379,12 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return S.ivf_topk(emb, "vec_id", "embedding", query_id=42, n_centroids=8, k=5)
 
 
-@query(
+@sql_query(
     "join_full_outer",
-    oracle="""
+    """
         SELECT n.n_name, s.s_suppkey, s.s_name
-        FROM (SELECT * FROM nation WHERE n_regionkey <= 1) n
-        FULL OUTER JOIN (SELECT * FROM supplier WHERE s_acctbal > 3000.0) s
+        FROM (SELECT * FROM {nation} WHERE n_regionkey <= 1) n
+        FULL OUTER JOIN (SELECT * FROM {supplier} WHERE s_acctbal > 3000.0) s
           ON n.n_nationkey = s.s_nationkey
     """,
 )
@@ -410,56 +393,40 @@ def join_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     semi / anti / asof / range live in relational.py & advanced.py).
     Full outer forbids broadcast; Spark plans a sort-merge join on the
     shuffled key, which is the right 100 TB plan anyway."""
-    n = load(spark, sf_dir, "nation").where(F.col("n_regionkey") <= 1)
-    s = load(spark, sf_dir, "supplier").where(F.col("s_acctbal") > 3000.0)
-    return n.join(s, n.n_nationkey == s.s_nationkey, "full_outer").select(
-        "n_name", "s_suppkey", "s_name"
-    )
 
 
-@query(
+@sql_query(
     "join_cross_count",
-    oracle="""
+    """
         SELECT r.r_name, COUNT(*) AS n_pairs
-        FROM region r CROSS JOIN nation n
+        FROM {region} r CROSS JOIN {nation} n
         GROUP BY r.r_name
     """,
 )
 def join_cross_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit CROSS join (tiny dims only — a documented anti-pattern
     on fact tables; Catalyst plans BroadcastNestedLoopJoin here)."""
-    r = load(spark, sf_dir, "region")
-    n = load(spark, sf_dir, "nation")
-    return r.crossJoin(n).groupBy("r_name").agg(F.count(F.lit(1)).alias("n_pairs"))
 
 
-@query(
+@sql_query(
     "agg_stats",
-    oracle="""
+    """
         SELECT l_returnflag,
                ROUND(STDDEV_SAMP(l_quantity), 4) AS sd_qty,
                ROUND(VAR_SAMP(l_discount), 6) AS var_disc,
                ROUND(COVAR_SAMP(l_quantity, l_extendedprice), 2) AS cov_qty_price,
                ROUND(CORR(l_quantity, l_extendedprice), 6) AS corr_qty_price,
-               ROUND(SKEWNESS(l_quantity), 4) AS skew_qty
-        FROM lineitem
+               ROUND(SKEWNESS(l_quantity), 4) + 0.0 AS skew_qty
+        FROM {lineitem}
         GROUP BY l_returnflag
     """,
 )
 def agg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Statistical aggregates (stddev/variance/covariance/correlation/
     skewness) — single-pass moment accumulators, partial+final split
-    like any hash aggregate."""
-    l = load(spark, sf_dir, "lineitem")
-    return l.groupBy("l_returnflag").agg(
-        F.round(F.stddev_samp("l_quantity"), 4).alias("sd_qty"),
-        F.round(F.var_samp("l_discount"), 6).alias("var_disc"),
-        F.round(F.covar_samp("l_quantity", "l_extendedprice"), 2).alias(
-            "cov_qty_price"
-        ),
-        F.round(F.corr("l_quantity", "l_extendedprice"), 6).alias("corr_qty_price"),
-        F.round(F.skewness("l_quantity"), 4).alias("skew_qty"),
-    )
+    like any hash aggregate. A skewness that rounds to zero can come
+    out as -0.0 in one engine and 0.0 in the other; ``+ 0.0`` makes
+    both +0.0."""
 
 
 @query(
@@ -494,40 +461,30 @@ def window_first_last(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+@sql_query(
     "set_union_all",
-    oracle="""
-        SELECT c_custkey AS custkey FROM customer WHERE c_mktsegment = 'MACHINERY'
+    """
+        SELECT c_custkey AS custkey FROM {customer} WHERE c_mktsegment = 'MACHINERY'
         UNION ALL
-        SELECT o_custkey AS custkey FROM orders WHERE o_orderpriority = '1-URGENT'
+        SELECT o_custkey AS custkey FROM {orders} WHERE o_orderpriority = '1-URGENT'
     """,
 )
 def set_union_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UNION ALL — bag union, no dedup shuffle (vs set_union's
     DISTINCT): a pure concatenation of partitions."""
-    a = (
-        load(spark, sf_dir, "customer")
-        .filter(F.col("c_mktsegment") == "MACHINERY")
-        .select(F.col("c_custkey").alias("custkey"))
-    )
-    b = (
-        load(spark, sf_dir, "orders")
-        .filter(F.col("o_orderpriority") == "1-URGENT")
-        .select(F.col("o_custkey").alias("custkey"))
-    )
-    return a.unionAll(b)
 
 
-@query(
+@sql_query(
     "tpch_q5",
-    oracle="""
-        SELECT n_name, ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS revenue
-        FROM customer
-        JOIN orders ON c_custkey = o_custkey
-        JOIN lineitem ON l_orderkey = o_orderkey
-        JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-        JOIN nation ON s_nationkey = n_nationkey
-        JOIN region ON n_regionkey = r_regionkey
+    """
+        SELECT /*+ BROADCAST({nation}, {region}) */
+               n_name, ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS revenue
+        FROM {customer}
+        JOIN {orders} ON c_custkey = o_custkey
+        JOIN {lineitem} ON l_orderkey = o_orderkey
+        JOIN {supplier} ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
+        JOIN {nation} ON s_nationkey = n_nationkey
+        JOIN {region} ON n_regionkey = r_regionkey
         WHERE r_name = 'EUROPE'
           AND o_orderdate >= TIMESTAMP '1996-01-01'
           AND o_orderdate < TIMESTAMP '1997-01-01'
@@ -540,32 +497,6 @@ def tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins (customer⋈orders⋈lineitem⋈supplier) shuffle on their keys
     with AQE replanning; nation/region broadcast. The orderdate range
     pushes into the orders scan."""
-    c = load(spark, sf_dir, "customer")
-    o = load(spark, sf_dir, "orders").where(
-        (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp"))
-    )
-    l = load(spark, sf_dir, "lineitem")
-    s = load(spark, sf_dir, "supplier")
-    n = load(spark, sf_dir, "nation")
-    r = load(spark, sf_dir, "region").where(F.col("r_name") == "EUROPE")
-    return (
-        c.join(o, c.c_custkey == o.o_custkey)
-        .join(l, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(
-            s,
-            (F.col("l_suppkey") == F.col("s_suppkey"))
-            & (F.col("c_nationkey") == F.col("s_nationkey")),
-        )
-        .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
-        .join(F.broadcast(r), F.col("n_regionkey") == F.col("r_regionkey"))
-        .groupBy("n_name")
-        .agg(
-            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2)
-            .alias("revenue")
-        )
-        .orderBy(F.col("revenue").desc(), "n_name")
-    )
 
 
 @query(
@@ -751,45 +682,29 @@ def agg_array_collect(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+@sql_query(
     "set_intersect_all",
-    oracle="""
-        SELECT o_custkey AS custkey FROM orders WHERE o_orderstatus = 'O'
+    """
+        SELECT o_custkey AS custkey FROM {orders} WHERE o_orderstatus = 'O'
         INTERSECT ALL
-        SELECT o_custkey AS custkey FROM orders WHERE o_totalprice > 50000.0
+        SELECT o_custkey AS custkey FROM {orders} WHERE o_totalprice > 50000.0
     """,
 )
 def set_intersect_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INTERSECT ALL — bag intersection (multiplicity = min of the two
     sides), completing §2.8 with the ALL variants."""
-    o = load(spark, sf_dir, "orders")
-    a = o.where(F.col("o_orderstatus") == "O").select(
-        F.col("o_custkey").alias("custkey")
-    )
-    b = o.where(F.col("o_totalprice") > 50000.0).select(
-        F.col("o_custkey").alias("custkey")
-    )
-    return a.intersectAll(b)
 
 
-@query(
+@sql_query(
     "set_except_all",
-    oracle="""
-        SELECT o_custkey AS custkey FROM orders WHERE o_totalprice > 100000.0
+    """
+        SELECT o_custkey AS custkey FROM {orders} WHERE o_totalprice > 100000.0
         EXCEPT ALL
-        SELECT o_custkey AS custkey FROM orders WHERE o_orderpriority = '1-URGENT'
+        SELECT o_custkey AS custkey FROM {orders} WHERE o_orderpriority = '1-URGENT'
     """,
 )
 def set_except_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXCEPT ALL — bag difference (per-row multiplicity subtraction)."""
-    o = load(spark, sf_dir, "orders")
-    a = o.where(F.col("o_totalprice") > 100000.0).select(
-        F.col("o_custkey").alias("custkey")
-    )
-    b = o.where(F.col("o_orderpriority") == "1-URGENT").select(
-        F.col("o_custkey").alias("custkey")
-    )
-    return a.exceptAll(b)
 
 
 @query(
@@ -825,14 +740,14 @@ def sample_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
     return l.where(h % 20 == 0).select("l_orderkey", "l_linenumber", "l_quantity")
 
 
-@query(
+@sql_query(
     "agg_histogram",
-    oracle="""
+    """
         SELECT LEAST(FLOOR(o_totalprice / 50000.0), 9)::BIGINT AS bucket,
                COUNT(*) AS n,
                ROUND(MIN(o_totalprice), 2) AS lo,
                ROUND(MAX(o_totalprice), 2) AS hi
-        FROM orders
+        FROM {orders}
         GROUP BY 1
     """,
 )
@@ -840,15 +755,6 @@ def agg_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-width histogram via floor-bucket arithmetic (portable —
     no width_bucket dependency): one scan, one small-key aggregation.
     The first look at any 100 TB numeric column."""
-    o = load(spark, sf_dir, "orders")
-    bucket = F.least(F.floor(F.col("o_totalprice") / 50000.0), F.lit(9)).cast(
-        "bigint"
-    )
-    return o.groupBy(bucket.alias("bucket")).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.round(F.min("o_totalprice"), 2).alias("lo"),
-        F.round(F.max("o_totalprice"), 2).alias("hi"),
-    )
 
 
 @query(
@@ -902,14 +808,14 @@ def reshape_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     return o.unpivot("o_orderkey", ["price", "cust"], "kind", "val")
 
 
-@query(
+@sql_query(
     "window_moving_avg",
-    oracle="""
+    """
         SELECT o_custkey, o_orderkey, o_totalprice,
                ROUND(AVG(o_totalprice) OVER
                    (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
                     ROWS BETWEEN 6 PRECEDING AND CURRENT ROW), 4) AS ma7
-        FROM orders
+        FROM {orders}
     """,
 )
 def window_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -917,18 +823,6 @@ def window_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     state regardless of partition size, unlike the growing unbounded
     frame in window_running_sum. Deterministic via the unique
     o_orderkey in the ORDER BY."""
-    o = load(spark, sf_dir, "orders")
-    w = (
-        Window.partitionBy("o_custkey")
-        .orderBy("o_orderdate", "o_orderkey")
-        .rowsBetween(-6, Window.currentRow)
-    )
-    return o.select(
-        "o_custkey",
-        "o_orderkey",
-        "o_totalprice",
-        F.round(F.avg("o_totalprice").over(w), 4).alias("ma7"),
-    )
 
 
 @sql_query(
@@ -1047,15 +941,15 @@ def scalar_try_arith(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+@sql_query(
     "window_gaps_islands",
-    oracle="""
+    """
         WITH keyed AS (
             SELECT o_orderpriority AS pr, o_orderkey AS k,
                    o_orderkey - ROW_NUMBER() OVER (
                        PARTITION BY o_orderpriority ORDER BY o_orderkey
                    ) AS grp
-            FROM orders
+            FROM {orders}
         ),
         islands AS (
             SELECT pr, grp, MIN(k) AS island_start, MAX(k) AS island_end,
@@ -1081,23 +975,6 @@ def window_gaps_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
     One shuffle on the partition key; the rank, the island rollup,
     and the per-class census all reuse that partitioning. Rank runs
     per priority class (5-way split of the table), never globally."""
-    o = load(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_orderpriority").orderBy("o_orderkey")
-    keyed = o.select(
-        F.col("o_orderpriority").alias("pr"),
-        F.col("o_orderkey").alias("k"),
-        (F.col("o_orderkey") - F.row_number().over(w)).alias("grp"),
-    )
-    islands = keyed.groupBy("pr", "grp").agg(
-        F.count(F.lit(1)).alias("island_len")
-    )
-    return islands.groupBy("pr").agg(
-        F.count(F.lit(1)).alias("n_islands"),
-        F.max("island_len").cast("bigint").alias("longest_island"),
-        F.sum(F.when(F.col("island_len") == 1, 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_singletons"),
-    )
 
 
 @sql_query(
@@ -1177,18 +1054,18 @@ def window_topk_with_ties(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+@sql_query(
     "join_lateral_topk",
-    oracle="""
+    """
         SELECT c.c_custkey, c.c_mktsegment,
                t.o_orderkey, t.o_totalprice, t.rn
-        FROM customer c,
+        FROM {customer} c,
         LATERAL (
             SELECT o_orderkey, ROUND(o_totalprice, 2) AS o_totalprice,
                    ROW_NUMBER() OVER (
                        ORDER BY o_totalprice DESC, o_orderkey
                    ) AS rn
-            FROM orders
+            FROM {orders}
             WHERE o_custkey = c.c_custkey
             ORDER BY o_totalprice DESC, o_orderkey
             LIMIT 3
@@ -1210,23 +1087,3 @@ def join_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB this is THE pattern for "top-k related rows per entity"
     served from SQL: one shuffle on the correlation key, per-group
     state bounded by k."""
-    return spark.sql(
-        """
-        SELECT c.c_custkey, c.c_mktsegment,
-               t.o_orderkey, t.o_totalprice, t.rn
-        FROM {customer} c
-        JOIN LATERAL (
-            SELECT o_orderkey, ROUND(o_totalprice, 2) AS o_totalprice,
-                   ROW_NUMBER() OVER (
-                       ORDER BY o_totalprice DESC, o_orderkey
-                   ) AS rn
-            FROM {orders}
-            WHERE o_custkey = c.c_custkey
-            ORDER BY o_totalprice DESC, o_orderkey
-            LIMIT 3
-        ) t
-        WHERE c.c_mktsegment = 'MACHINERY'
-        """,
-        customer=load(spark, sf_dir, "customer"),
-        orders=load(spark, sf_dir, "orders"),
-    )

@@ -4,8 +4,9 @@ src/logical_plan/mod.rs:12-18 has no join/sort/set nodes).
 
 Scale notes (100 TB design):
 - region/nation are tiny dimensions at every scale factor → always
-  broadcast (`F.broadcast`), so the fact-side scan never shuffles for
-  the dim join.
+  broadcast (`F.broadcast`, or a `/*+ BROADCAST(n) */` hint in a
+  `sql_query` text), so the fact-side scan never shuffles for the dim
+  join.
 - customer⋈orders⋈lineitem are key-partitioned shuffle joins; AQE
   handles skew and coalesces post-shuffle partitions.
 - top-k = orderBy().limit(k) which Spark plans as
@@ -20,17 +21,17 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from spark_query_engine.operators import blocked_pairs
-from spark_query_engine.queries import load, query
+from spark_query_engine.queries import load, query, sql_query
 
 
-@query(
+@sql_query(
     "join_broadcast_dims",
-    oracle="""
-        SELECT n.n_name, COUNT(*) AS n_customers,
+    """
+        SELECT /*+ BROADCAST(n, r) */ n.n_name, COUNT(*) AS n_customers,
                ROUND(SUM(c.c_acctbal), 2) AS total_acctbal
-        FROM customer c
-        JOIN nation n ON c.c_nationkey = n.n_nationkey
-        JOIN region r ON n.n_regionkey = r.r_regionkey
+        FROM {customer} c
+        JOIN {nation} n ON c.c_nationkey = n.n_nationkey
+        JOIN {region} r ON n.n_regionkey = r.r_regionkey
         WHERE r.r_name = 'ASIA'
         GROUP BY n.n_name
     """,
@@ -38,29 +39,17 @@ from spark_query_engine.queries import load, query
 def join_broadcast_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Star-schema dim joins: both dims broadcast → zero shuffle on the
     customer scan side until the final aggregation."""
-    c = load(spark, sf_dir, "customer")
-    n = load(spark, sf_dir, "nation")
-    r = load(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    return (
-        c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
-        .groupBy("n_name")
-        .agg(
-            F.count(F.lit(1)).alias("n_customers"),
-            F.round(F.sum("c_acctbal"), 2).alias("total_acctbal"),
-        )
-    )
 
 
-@query(
+@sql_query(
     "join_shuffle_revenue",
-    oracle="""
+    """
         SELECT l.l_orderkey,
                ROUND(SUM(l.l_extendedprice * (1 - l.l_discount)), 2) AS revenue,
                o.o_orderdate
-        FROM customer c
-        JOIN orders o ON c.c_custkey = o.o_custkey
-        JOIN lineitem l ON l.l_orderkey = o.o_orderkey
+        FROM {customer} c
+        JOIN {orders} o ON c.c_custkey = o.o_custkey
+        JOIN {lineitem} l ON l.l_orderkey = o.o_orderkey
         WHERE c.c_mktsegment = 'BUILDING'
         GROUP BY l.l_orderkey, o.o_orderdate
         ORDER BY revenue DESC, l_orderkey
@@ -72,49 +61,21 @@ def join_shuffle_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     mktsegment filter pushes to the customer parquet scan; at cluster
     scale AQE converts the filtered customer side to broadcast when it
     fits."""
-    c = load(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    o = load(spark, sf_dir, "orders")
-    l = load(spark, sf_dir, "lineitem")
-    return (
-        c.join(o, c.c_custkey == o.o_custkey)
-        .join(l, l.l_orderkey == o.o_orderkey)
-        .groupBy("l_orderkey", "o_orderdate")
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue")
-        )
-        .select("l_orderkey", "revenue", "o_orderdate")
-        .orderBy(F.col("revenue").desc(), "l_orderkey")
-        .limit(20)
-    )
 
 
-@query(
+@sql_query(
     "join_left_outer",
-    oracle="""
+    """
         SELECT c.c_custkey, c.c_name,
                COUNT(o.o_orderkey) AS n_orders,
                ROUND(COALESCE(SUM(o.o_totalprice), 0.0), 2) AS total_spent
-        FROM customer c
-        LEFT JOIN orders o ON c.c_custkey = o.o_custkey
+        FROM {customer} c
+        LEFT JOIN {orders} o ON c.c_custkey = o.o_custkey
         GROUP BY c.c_custkey, c.c_name
     """,
 )
 def join_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LEFT OUTER join; COUNT over a nullable side + COALESCE."""
-    c = load(spark, sf_dir, "customer")
-    o = load(spark, sf_dir, "orders")
-    return (
-        c.join(o, c.c_custkey == o.o_custkey, "left")
-        .groupBy("c_custkey", "c_name")
-        .agg(
-            F.count("o_orderkey").alias("n_orders"),
-            F.round(F.coalesce(F.sum("o_totalprice"), F.lit(0.0)), 2).alias(
-                "total_spent"
-            ),
-        )
-    )
 
 
 @query(
@@ -157,98 +118,63 @@ def join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+@sql_query(
     "sort_multi_key",
-    oracle="""
+    """
         SELECT s_suppkey, s_name, s_nationkey, s_acctbal
-        FROM supplier
+        FROM {supplier}
         ORDER BY s_nationkey ASC, s_acctbal DESC, s_suppkey
     """,
 )
 def sort_multi_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-key global sort (range-partitioned exchange + per-partition
     sort at scale)."""
-    return (
-        load(spark, sf_dir, "supplier")
-        .select("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
-        .orderBy(F.col("s_nationkey").asc(), F.col("s_acctbal").desc(), "s_suppkey")
-    )
 
 
-@query(
+@sql_query(
     "set_union",
-    oracle="""
-        SELECT c_custkey AS custkey FROM customer WHERE c_mktsegment = 'AUTOMOBILE'
+    """
+        SELECT c_custkey AS custkey FROM {customer} WHERE c_mktsegment = 'AUTOMOBILE'
         UNION
-        SELECT o_custkey AS custkey FROM orders WHERE o_totalprice > 300000.0
+        SELECT o_custkey AS custkey FROM {orders} WHERE o_totalprice > 300000.0
     """,
 )
 def set_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UNION (distinct) — SURVEY.md §2.8 ABSENT row."""
-    a = (
-        load(spark, sf_dir, "customer")
-        .filter(F.col("c_mktsegment") == "AUTOMOBILE")
-        .select(F.col("c_custkey").alias("custkey"))
-    )
-    b = (
-        load(spark, sf_dir, "orders")
-        .filter(F.col("o_totalprice") > 300000.0)
-        .select(F.col("o_custkey").alias("custkey"))
-    )
-    return a.union(b).distinct()
 
 
-@query(
+@sql_query(
     "set_intersect",
-    oracle="""
-        SELECT c_custkey AS custkey FROM customer WHERE c_acctbal > 5000.0
+    """
+        SELECT c_custkey AS custkey FROM {customer} WHERE c_acctbal > 5000.0
         INTERSECT
-        SELECT o_custkey AS custkey FROM orders WHERE o_orderstatus = 'F'
+        SELECT o_custkey AS custkey FROM {orders} WHERE o_orderstatus = 'F'
     """,
 )
 def set_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    a = (
-        load(spark, sf_dir, "customer")
-        .filter(F.col("c_acctbal") > 5000.0)
-        .select(F.col("c_custkey").alias("custkey"))
-    )
-    b = (
-        load(spark, sf_dir, "orders")
-        .filter(F.col("o_orderstatus") == "F")
-        .select(F.col("o_custkey").alias("custkey"))
-    )
-    return a.intersect(b)
+    """INTERSECT (distinct) — SURVEY.md §2.8 ABSENT row."""
 
 
-@query(
+@sql_query(
     "set_except",
-    oracle="""
-        SELECT c_custkey AS custkey FROM customer
+    """
+        SELECT c_custkey AS custkey FROM {customer}
         EXCEPT
-        SELECT o_custkey AS custkey FROM orders WHERE o_totalprice > 100000.0
+        SELECT o_custkey AS custkey FROM {orders} WHERE o_totalprice > 100000.0
     """,
 )
 def set_except(spark: SparkSession, sf_dir: str) -> DataFrame:
-    a = load(spark, sf_dir, "customer").select(F.col("c_custkey").alias("custkey"))
-    b = (
-        load(spark, sf_dir, "orders")
-        .filter(F.col("o_totalprice") > 100000.0)
-        .select(F.col("o_custkey").alias("custkey"))
-    )
-    return a.subtract(b)
+    """EXCEPT (distinct) — SURVEY.md §2.8 ABSENT row."""
 
 
-@query(
+@sql_query(
     "distinct_dedup_rows",
-    oracle="""
-        SELECT DISTINCT o_orderstatus, o_orderpriority FROM orders
+    """
+        SELECT DISTINCT o_orderstatus, o_orderpriority FROM {orders}
     """,
 )
 def distinct_dedup_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DISTINCT — hash-partitioned dedup (map-side partial dedup first)."""
-    return load(spark, sf_dir, "orders").select(
-        "o_orderstatus", "o_orderpriority"
-    ).distinct()
 
 
 @query(
@@ -546,12 +472,12 @@ def orders_lead_time_sla(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+@sql_query(
     "supplier_concentration_hhi",
-    oracle="""
+    """
         WITH ps AS (
             SELECT l_partkey, l_suppkey, SUM(l_quantity) AS q
-            FROM lineitem GROUP BY 1, 2
+            FROM {lineitem} GROUP BY 1, 2
         ),
         tot AS (SELECT l_partkey, SUM(q) AS t FROM ps GROUP BY 1),
         hhi AS (
@@ -579,42 +505,17 @@ def supplier_concentration_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combined aggregations plus one part-keyed join; share
     squares divide exact quantity sums, so only the final rounding
     touches float discipline."""
-    li = load(spark, sf_dir, "lineitem")
-    ps = li.groupBy("l_partkey", "l_suppkey").agg(
-        F.sum("l_quantity").alias("q")
-    )
-    tot = ps.groupBy("l_partkey").agg(F.sum("q").alias("t"))
-    share2 = (F.col("q") / F.col("t")) * (F.col("q") / F.col("t"))
-    hhi = (
-        ps.join(tot, "l_partkey")
-        .groupBy("l_partkey")
-        .agg(
-            F.round(F.sum(share2), 6).alias("hhi"),
-            F.count(F.lit(1)).alias("n_suppliers"),
-        )
-    )
-    band = (
-        F.when(F.col("hhi") >= 0.25, "concentrated")
-        .when(F.col("hhi") >= 0.15, "moderate")
-        .otherwise("competitive")
-    )
-    return hhi.groupBy(band.alias("band")).agg(
-        F.count(F.lit(1)).alias("n_parts"),
-        F.round(F.min("hhi"), 6).alias("min_hhi"),
-        F.round(F.max("hhi"), 6).alias("max_hhi"),
-        F.round(F.avg("n_suppliers"), 4).alias("avg_suppliers"),
-    )
 
 
-@query(
+@sql_query(
     "part_price_integrity",
-    oracle="""
+    """
         WITH pp AS (
             SELECT l_partkey,
                    COUNT(*) AS n_lines,
                    ROUND(MIN(l_extendedprice / l_quantity), 4) AS min_unit,
                    ROUND(MAX(l_extendedprice / l_quantity), 4) AS max_unit
-            FROM lineitem WHERE l_quantity > 0
+            FROM {lineitem} WHERE l_quantity > 0
             GROUP BY l_partkey
         )
         SELECT CASE WHEN max_unit > min_unit * 1.5 THEN 'suspect'
@@ -632,20 +533,6 @@ def part_price_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
     envelope is a min/max aggregate (no variance float summation),
     and the band compare uses the rounded envelope values — one
     part-keyed rollup plus a 2-row census."""
-    li = load(spark, sf_dir, "lineitem").where(F.col("l_quantity") > 0)
-    unit = F.col("l_extendedprice") / F.col("l_quantity")
-    pp = li.groupBy("l_partkey").agg(
-        F.count(F.lit(1)).alias("n_lines"),
-        F.round(F.min(unit), 4).alias("min_unit"),
-        F.round(F.max(unit), 4).alias("max_unit"),
-    )
-    band = F.when(
-        F.col("max_unit") > F.col("min_unit") * 1.5, "suspect"
-    ).otherwise("consistent")
-    return pp.groupBy(band.alias("band")).agg(
-        F.count(F.lit(1)).alias("n_parts"),
-        F.sum("n_lines").cast("bigint").alias("n_lines"),
-    )
 
 
 @query(
@@ -809,12 +696,12 @@ def customer_interpurchase_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+@sql_query(
     "part_supply_geography",
-    oracle="""
+    """
         WITH ps AS (
-            SELECT DISTINCT l.l_partkey, s.s_nationkey
-            FROM lineitem l JOIN supplier s ON l.l_suppkey = s.s_suppkey
+            SELECT /*+ BROADCAST(s) */ DISTINCT l.l_partkey, s.s_nationkey
+            FROM {lineitem} l JOIN {supplier} s ON l.l_suppkey = s.s_suppkey
         ),
         div AS (
             SELECT l_partkey, COUNT(*) AS n_nations FROM ps GROUP BY 1
@@ -834,41 +721,23 @@ def part_supply_geography(spark: SparkSession, sf_dir: str) -> DataFrame:
     misses (two suppliers in one country is still one earthquake).
     The supplier dim broadcasts into the fact scan, one distinct on
     (part, nation), one diversity rollup, a 3-band census."""
-    li = load(spark, sf_dir, "lineitem")
-    s = load(spark, sf_dir, "supplier")
-    ps = (
-        li.join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .select("l_partkey", "s_nationkey")
-        .distinct()
-    )
-    div = ps.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("n_nations"))
-    band = (
-        F.when(F.col("n_nations") == 1, "single-nation")
-        .when(F.col("n_nations") <= 3, "2-3 nations")
-        .otherwise("4+ nations")
-    )
-    return div.groupBy(band.alias("supply_geography")).agg(
-        F.count(F.lit(1)).alias("n_parts"),
-        F.min("n_nations").cast("bigint").alias("min_nations"),
-        F.max("n_nations").cast("bigint").alias("max_nations"),
-    )
 
 
-@query(
+@sql_query(
     "region_revenue_rollup",
-    oracle="""
+    """
         WITH rev AS (
-            SELECT r.r_name AS region, n.n_name AS nation,
+            SELECT /*+ BROADCAST(n, r) */ r.r_name AS region, n.n_name AS nation,
                    SUM(l.l_extendedprice * (1 - l.l_discount)) AS v
-            FROM lineitem l
-            JOIN orders o ON l.l_orderkey = o.o_orderkey
-            JOIN customer c ON o.o_custkey = c.c_custkey
-            JOIN nation n ON c.c_nationkey = n.n_nationkey
-            JOIN region r ON n.n_regionkey = r.r_regionkey
+            FROM {lineitem} l
+            JOIN {orders} o ON l.l_orderkey = o.o_orderkey
+            JOIN {customer} c ON o.o_custkey = c.c_custkey
+            JOIN {nation} n ON c.c_nationkey = n.n_nationkey
+            JOIN {region} r ON n.n_regionkey = r.r_regionkey
             GROUP BY 1, 2
         ),
         tot AS (SELECT SUM(v) AS t FROM rev)
-        SELECT region,
+        SELECT /*+ BROADCAST(tot) */ region,
                COUNT(*) AS n_nations,
                ROUND(SUM(v), 2) AS revenue,
                ROUND(SUM(v) / tot.t, 6) AS revenue_share
@@ -886,31 +755,3 @@ def region_revenue_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     partials aggregate BEFORE the share division and round at 2dp;
     the share divides the rounded sums so both engines see identical
     numerators."""
-    li = load(spark, sf_dir, "lineitem")
-    o = load(spark, sf_dir, "orders")
-    c = load(spark, sf_dir, "customer")
-    n = load(spark, sf_dir, "nation")
-    r = load(spark, sf_dir, "region")
-    rev = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
-        .groupBy(F.col("r_name").alias("region"), F.col("n_name").alias("nation"))
-        .agg(
-            F.sum(
-                F.col("l_extendedprice") * (1 - F.col("l_discount"))
-            ).alias("v")
-        )
-    )
-    tot = rev.agg(F.sum("v").alias("t"))
-    return (
-        rev.crossJoin(F.broadcast(tot))
-        .groupBy("region", "t")
-        .agg(
-            F.count(F.lit(1)).alias("n_nations"),
-            F.round(F.sum("v"), 2).alias("revenue"),
-            F.round(F.sum("v") / F.col("t"), 6).alias("revenue_share"),
-        )
-        .select("region", "n_nations", "revenue", "revenue_share")
-    )

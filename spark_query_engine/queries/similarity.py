@@ -122,10 +122,11 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH-bucketed ANN: footer-sized random hyperplanes (fixed seed,
     literal weights — identical in the oracle; count ⌈log₂⌈n/64⌉⌉
     with the historical floor of 8, see ``_n_planes``) → probe only
-    the query's bucket → exact cosine rank within it. The scale path:
-    bucket is a cluster/partition key and holds ~64 vectors at ANY
-    corpus size, so a probe reads a bounded slice instead of the
-    fixed-plane n/256.
+    the query's bucket → exact cosine rank within it. A bucket holds
+    ~64 vectors at any corpus size, against n/256 with fixed planes.
+    The plan scans every embedding and computes its bucket, then
+    filters on the query's bucket, so the bucket cuts the rerank, not
+    the scan: nothing is pruned before the hashing.
 
     Cross-engine sign stability: the oracle computes plane·vec with an
     unordered SUM while Spark uses a sequential fold, so order-dependent

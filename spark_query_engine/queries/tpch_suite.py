@@ -49,14 +49,14 @@ def tpch_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the orders parquet scan."""
 
 
-@query(
+@sql_query(
     "tpch_q13",
-    oracle="""
+    """
         SELECT c_count, COUNT(*) AS custdist
         FROM (
             SELECT c.c_custkey, COUNT(o.o_orderkey) AS c_count
-            FROM customer c
-            LEFT JOIN orders o
+            FROM {customer} c
+            LEFT JOIN {orders} o
               ON o.o_custkey = c.c_custkey
              AND o.o_orderpriority <> '1-URGENT'
             GROUP BY c.c_custkey
@@ -71,16 +71,6 @@ def tpch_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
     then a second aggregation over the first's output. The second
     shuffle is tiny (one row per distinct count) — re-aggregation cost
     is independent of table size."""
-    c = load(spark, sf_dir, "customer")
-    o = load(spark, sf_dir, "orders").filter(
-        F.col("o_orderpriority") != "1-URGENT"
-    )
-    per_cust = (
-        c.join(o, o.o_custkey == c.c_custkey, "left")
-        .groupBy("c_custkey")
-        .agg(F.count("o_orderkey").alias("c_count"))
-    )
-    return per_cust.groupBy("c_count").agg(F.count(F.lit(1)).alias("custdist"))
 
 
 @query(
@@ -161,12 +151,13 @@ def tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+@sql_query(
     "tpch_q19",
-    oracle="""
-        SELECT ROUND(SUM(l.l_extendedprice * (1 - l.l_discount)), 2) AS revenue
-        FROM lineitem l
-        JOIN part p ON p.p_partkey = l.l_partkey
+    """
+        SELECT /*+ BROADCAST(p) */
+               ROUND(SUM(l.l_extendedprice * (1 - l.l_discount)), 2) AS revenue
+        FROM {lineitem} l
+        JOIN {part} p ON p.p_partkey = l.l_partkey
         WHERE (p.p_brand = 'Brand#12' AND p.p_size BETWEEN 1 AND 15
                AND l.l_quantity BETWEEN 1 AND 11)
            OR (p.p_brand = 'Brand#23' AND p.p_size BETWEEN 1 AND 25
@@ -182,31 +173,6 @@ def tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
     Catalyst's predicate inference, and the part side filters to a few
     brands → broadcast; the OR residual evaluates post-join in one
     codegen stage, never as three scans."""
-    l = load(spark, sf_dir, "lineitem")
-    p = load(spark, sf_dir, "part")
-    joined = l.join(F.broadcast(p), l.l_partkey == p.p_partkey)
-    branch = (
-        (
-            (F.col("p_brand") == "Brand#12")
-            & F.col("p_size").between(1, 15)
-            & F.col("l_quantity").between(1, 11)
-        )
-        | (
-            (F.col("p_brand") == "Brand#23")
-            & F.col("p_size").between(1, 25)
-            & F.col("l_quantity").between(10, 20)
-        )
-        | (
-            (F.col("p_brand") == "Brand#34")
-            & F.col("p_size").between(1, 35)
-            & F.col("l_quantity").between(20, 30)
-        )
-    )
-    return joined.filter(branch).agg(
-        F.round(
-            F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-        ).alias("revenue")
-    )
 
 
 @sql_query(
@@ -405,16 +371,16 @@ def tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+@sql_query(
     "tpch_q10",
-    oracle="""
-        SELECT c.c_custkey, c.c_name,
+    """
+        SELECT /*+ BROADCAST(n) */ c.c_custkey, c.c_name,
                ROUND(SUM(l.l_extendedprice * (1 - l.l_discount)), 2) AS revenue,
                n.n_name
-        FROM customer c
-        JOIN orders o ON c.c_custkey = o.o_custkey
-        JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-        JOIN nation n ON c.c_nationkey = n.n_nationkey
+        FROM {customer} c
+        JOIN {orders} o ON c.c_custkey = o.o_custkey
+        JOIN {lineitem} l ON l.l_orderkey = o.o_orderkey
+        JOIN {nation} n ON c.c_nationkey = n.n_nationkey
         WHERE o.o_orderdate >= TIMESTAMP '1997-01-01'
           AND o.o_orderdate < TIMESTAMP '1997-04-01'
           AND l.l_returnflag = 'R'
@@ -429,39 +395,18 @@ def tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
     the customer⋈orders⋈lineitem shuffle joins; nation broadcasts;
     the final top-k is TakeOrderedAndProject (per-partition heap),
     never a global sort."""
-    c = load(spark, sf_dir, "customer")
-    o = load(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1997-01-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1997-04-01").cast("timestamp"))
-    )
-    l = load(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
-    n = load(spark, sf_dir, "nation")
-    return (
-        c.join(o, c.c_custkey == o.o_custkey)
-        .join(l, l.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .groupBy("c_custkey", "c_name", "n_name")
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue")
-        )
-        .select("c_custkey", "c_name", "revenue", "n_name")
-        .orderBy(F.col("revenue").desc(), "c_custkey")
-        .limit(20)
-    )
 
 
-@query(
+@sql_query(
     "tpch_q12",
-    oracle="""
+    """
         SELECT o.o_orderpriority,
                CAST(SUM(CASE WHEN l.l_quantity >= 25 THEN 1 ELSE 0 END)
                    AS BIGINT) AS high_line_count,
                CAST(SUM(CASE WHEN l.l_quantity < 25 THEN 1 ELSE 0 END)
                    AS BIGINT) AS low_line_count
-        FROM orders o
-        JOIN lineitem l ON l.l_orderkey = o.o_orderkey
+        FROM {orders} o
+        JOIN {lineitem} l ON l.l_orderkey = o.o_orderkey
         WHERE l.l_shipdate >= TIMESTAMP '1997-01-01'
           AND l.l_shipdate < TIMESTAMP '1998-01-01'
         GROUP BY o.o_orderpriority
@@ -472,23 +417,6 @@ def tpch_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
     shipmode) — conditional counting via SUM(CASE...), the one-pass
     pivot-style aggregation: both counters come out of a single scan +
     single shuffle instead of two filtered aggregations."""
-    o = load(spark, sf_dir, "orders")
-    l = load(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
-    )
-    return (
-        o.join(l, l.l_orderkey == o.o_orderkey)
-        .groupBy("o_orderpriority")
-        .agg(
-            F.sum(
-                F.when(F.col("l_quantity") >= 25, 1).otherwise(0)
-            ).alias("high_line_count"),
-            F.sum(
-                F.when(F.col("l_quantity") < 25, 1).otherwise(0)
-            ).alias("low_line_count"),
-        )
-    )
 
 
 # --- the five partsupp-blocked patterns, adapted to the reduced schema ---

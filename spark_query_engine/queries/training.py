@@ -2915,7 +2915,7 @@ def udtf_run_length(spark: SparkSession, sf_dir: str) -> DataFrame:
     like every Python-boundary op here it is gated to a bounded slice
     (doc_id < 200) rather than the corpus hot path. Arrow-batched
     (``useArrow``) so rows cross the boundary in columnar batches."""
-    from pyspark.sql.functions import lit, udtf
+    from pyspark.sql.functions import udtf
 
     @udtf(
         returnType=(
@@ -2934,13 +2934,9 @@ def udtf_run_length(spark: SparkSession, sf_dir: str) -> DataFrame:
                     yield (doc_id, run_idx, toks[start], i - start, start + 1)
                     start = i
 
-    spark.udtf.register("run_length", RunLength)
-    docs = load(spark, sf_dir, "documents")
-    return spark.sql(
-        "SELECT u.doc_id, u.run_idx, u.token, u.run_len, u.start_pos "
-        "FROM {docs} d, LATERAL run_length(d.doc_id, d.text) u",
-        docs=docs.where(F.col("doc_id") < 200).select("doc_id", "text"),
-    )
+    docs = load(spark, sf_dir, "documents").where(F.col("doc_id") < 200)
+    runs = RunLength(F.col("doc_id").outer(), F.col("text").outer())
+    return docs.lateralJoin(runs.alias("u")).select("u.*")
 
 
 #: k-means|| geometry: k=8 centers, 3 oversampling rounds, l=16.

@@ -6,7 +6,9 @@ from __future__ import annotations
 import sys
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
+sys.path.insert(0, str(ROOT / "tools"))
 
 import __spark_entry__ as E  # noqa: E402
 
@@ -28,11 +30,15 @@ def _temp_views(spark) -> set[str]:
     return {t.name for t in spark.catalog.listTables() if t.isTemporary}
 
 
+def _temp_functions(spark) -> set[str]:
+    return {f.name for f in spark.catalog.listFunctions() if f.isTemporary}
+
+
 def test_every_query_runs_at_smoke_sf(spark, sf_dir):
     """Every query builds and runs, and none leaves a named temp view
-    in the caller's session (a query must not shadow or replace a
-    view of the caller's)."""
-    views = _temp_views(spark)
+    or temporary function in the caller's session (a query must not
+    shadow or replace a view or function of the caller's)."""
+    views, functions = _temp_views(spark), _temp_functions(spark)
     failures = []
     for name, fn in E.queries().items():
         try:
@@ -41,6 +47,28 @@ def test_every_query_runs_at_smoke_sf(spark, sf_dir):
             failures.append((name, str(e)[:200]))
     assert not failures, failures
     assert _temp_views(spark) == views
+    assert _temp_functions(spark) == functions
+
+
+def test_every_sql_query_matches_its_oracle(spark, sf_dir):
+    """A ``sql_query`` runs its oracle's own text on Spark, so its
+    result must equal DuckDB's for the same text, compared as the
+    correctness sweep compares (signbit-strict)."""
+    from check_correctness import compare, connect
+
+    from spark_query_engine.queries import REGISTRY
+
+    E.queries()
+    con = connect(sf_dir)
+    names = [n for n, q in REGISTRY.items() if hasattr(q.fn, "__wrapped__")]
+    assert names
+    failures = []
+    for name in names:
+        q = REGISTRY[name]
+        ok, msg = compare(q.fn(spark, sf_dir).toPandas(), con.sql(q.oracle).df())
+        if not ok:
+            failures.append((name, msg))
+    assert not failures, failures
 
 
 def test_driver_window_prioritizes_unverified_families():

@@ -121,6 +121,17 @@ def compare(spark_pdf, duck_pdf) -> tuple[bool, str]:
     return True, "ok"
 
 
+def connect(sf_dir: str):
+    """A DuckDB connection with a view per testdata table, named as
+    the oracle texts name them."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
+        )
+    return con
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -130,12 +141,7 @@ def main() -> int:
 
     spark = get_session("correctness_check")
 
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
-
+    con = connect(sf_dir)
     qs = registry.queries()
     oracles = registry.oracle_sql()
     n_pass = n_fail = n_skip = 0

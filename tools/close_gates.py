@@ -141,8 +141,6 @@ def gate_registry_docs() -> list[str]:
 #: a BIGINT sum accumulator hits the r5g ANSI abort at scale before
 #: any post-hoc cast can widen it. Keyed by (file, matched text).
 MOMENT_ALLOWLIST: dict[tuple[str, str], str] = {
-    ("queries/extended.py", 'F.sum(F.col("l_extendedprice") * F.col("l_discount"))'):
-        "TPC-H decimal columns — Spark widens decimal products itself",
     ("queries/training.py", 'F.sum(F.col("f") * F.col("n_t"))'):
         "fertility numerator <= total_tokens * max_tokens_per_word "
         "(~2.5e13 * 50 = 1.3e15 at 100 TB) < 2^63",

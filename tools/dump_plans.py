@@ -29,6 +29,17 @@ _SESSION_IDS = (
 )
 
 
+def normalized_plan(spark, df) -> str:
+    """``df``'s ``explain("formatted")`` text with session ids written
+    as ``_``."""
+    txt = df._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    )
+    for pat, repl in _SESSION_IDS:
+        txt = pat.sub(repl, txt)
+    return txt
+
+
 def main() -> None:
     outdir, suffix, names = sys.argv[1], sys.argv[2], sys.argv[3:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -42,14 +53,13 @@ def main() -> None:
     d = ROOT / "plans" / outdir
     d.mkdir(parents=True, exist_ok=True)
     for name in names:
+        # ``df`` stays bound until the next query is built. Rebinding it
+        # drops the previous result, whose ``release_on_drop`` finalizer
+        # unpersists caches by plan, so where it is dropped changes
+        # which cached relations later plans print; keep it where dumps
+        # of earlier commits dropped it, so dumps stay comparable.
         df = qs[name](spark, sf_dir)
-        txt = df._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-        )
-        for pat, repl in _SESSION_IDS:
-            txt = pat.sub(repl, txt)
+        txt = normalized_plan(spark, df)
         (d / f"{name}_{suffix}.txt").write_text(txt)
         print(f"wrote {name}_{suffix}.txt ({len(txt.splitlines())} lines)")
         spark.catalog.clearCache()
